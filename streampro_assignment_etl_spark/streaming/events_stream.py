@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dec
 from ..pipeline.schemas import TESTDATA_TABLES
+from ._drain import drain_available_now, drain_confs
 
 EVENTS_SCHEMA = TESTDATA_TABLES["trusted_events"].struct  # ts arrives as string
 
@@ -141,6 +142,25 @@ def run_stream_to_parquet(
     finalizes them — re-run against the same checkpoint to flush (the
     restart resumes the checkpointed watermark over an empty batch).
 
+    One micro-batch per update-mode drain: unless the plan holds a
+    user-defined stateful operator (``FlatMapGroupsWithState``,
+    ``transformWithState`` and their pandas forms), an update-mode drain
+    runs without Spark's no-data batch. That batch only evicts expired
+    state and emits nothing in update mode; eviction is deferred to the
+    next drain's data batch, under the same watermark, so state holds
+    at most one drain's expired windows longer. Plans with such an
+    operator keep the no-data batches because their timeouts and timers
+    fire in them; append and complete mode keep them because their rows
+    are emitted on eviction. See ``_drain.needs_no_data_batches``.
+
+    Late rows: a drain's data batch filters late rows against the
+    watermark of the batch before it (Spark ≥ 3.4), which is now the
+    previous drain's data batch. So a row that arrives one drain late,
+    and whose window is still in state, is counted, and the row emitted
+    for that window carries its exact cumulative count. A row older
+    than the watermark from two drains back is still dropped. This path
+    never drops a row that a drain with no-data batches keeps.
+
     Each micro-batch overwrites its own ``batch_id=N`` subtree, making
     the sink idempotent under checkpoint retries (exactly-once, not
     at-least-once); readers see batch_id as a partition column.
@@ -156,20 +176,20 @@ def run_stream_to_parquet(
     rationale as ``run_dedup_stream``: off is right ONLY for per-run
     scratch checkpoints; keep the default for any checkpoint that must
     survive a restart.
+
+    Raises ``TimeoutError`` when the drain does not finish within
+    ``timeout_s``; the query is stopped first.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    spark = result.sparkSession
-    _CRC = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    saved_crc = spark.conf.get(_CRC)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if checkpoint_file_checksum is not None:
-        spark.conf.set(_CRC, str(checkpoint_file_checksum).lower())
-    try:
+    with drain_confs(
+        result,
+        mode,
+        shuffle_partitions=shuffle_partitions,
+        checkpoint_file_checksum=checkpoint_file_checksum,
+    ):
         q = (
             result.writeStream.outputMode(mode)
             .foreachBatch(write_batch)
@@ -177,16 +197,7 @@ def run_stream_to_parquet(
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(timeout_s):
-            # Timed out: stop before the finally restores session confs,
-            # so a still-running drain never sees them flip back.
-            q.stop()
-            q.awaitTermination(timeout_s)
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-        if checkpoint_file_checksum is not None:
-            spark.conf.set(_CRC, saved_crc)
+        drain_available_now(q, timeout_s)
 
 
 def read_update_sink(spark: SparkSession, out_dir: str, key_cols: list[str]) -> DataFrame:
@@ -209,7 +220,15 @@ def read_update_sink(spark: SparkSession, out_dir: str, key_cols: list[str]) -> 
     The availableNow driver queries dodge this by draining in a single
     batch (or emitting disjoint keys per batch, as the dedup sink does)
     — this reader is the general contract for long-running update-mode
-    sinks."""
+    sinks.
+
+    ``run_stream_to_parquet`` writes one batch per update-mode drain
+    (no no-data batch), so each drain adds one ``batch_id`` partition,
+    and a window's expired state is evicted in the next drain's batch.
+    A row arriving one drain late into a window still in state makes
+    that window re-emit with its exact cumulative count in the new
+    batch, so this reader returns the batch recompute over every row the
+    stream kept."""
     from pyspark.sql.window import Window
 
     df = spark.read.option("basePath", out_dir).parquet(out_dir)
@@ -345,7 +364,12 @@ def run_stream_upsert(
     key per batch, so a well-formed upstream never trips it. The
     bootstrap batch applies the SAME policy (shared
     ``resolve_update_duplicates``), so batch 0 and batch N obey one
-    contract."""
+    contract.
+
+    Drains follow ``run_stream_to_parquet``'s rule: no no-data batch
+    unless the plan holds a user-defined stateful operator (this sink
+    skipped the empty batch anyway, but still paid for running it), and
+    ``TimeoutError`` once ``timeout_s`` passes."""
     import uuid
 
     from ..pipeline.writers import (
@@ -393,14 +417,15 @@ def run_stream_upsert(
         finally:
             batch_df.unpersist()
 
-    q = (
-        result.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
+    with drain_confs(result, "update"):
+        q = (
+            result.writeStream.outputMode("update")
+            .foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        drain_available_now(q, timeout_s)
 
 
 def enriched_events_stream(
@@ -528,7 +553,7 @@ def run_pit_enriched_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    drain_available_now(q, timeout_s)
 
 
 # object-store swap namespace for the bucketed SCD-2 sink (see
@@ -825,7 +850,7 @@ def run_scd2_upsert_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    drain_available_now(q, timeout_s)
 
 
 def _recover_scd2_buckets(root) -> None:
@@ -1267,4 +1292,4 @@ def run_scd2_upsert_stream_bucketed(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    drain_available_now(q, timeout_s)

@@ -83,6 +83,7 @@ from ..operators.ann_index import (
     _without_ids,
     tombstoned_ids,
 )
+from ._drain import drain_available_now
 from .index_ingest import _marker_exists, _write_marker
 
 _log = logging.getLogger(__name__)
@@ -446,7 +447,7 @@ def run_fuzzy_store_ingest_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    drain_available_now(q, timeout_s)
 
 
 def _subtree_infos(fs, base: str, dir_name: str):

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..operators import ann_index
+from ._drain import drain_available_now
 
 APPLIED_DIR = "applied"
 
@@ -153,7 +154,7 @@ def run_index_append_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    drain_available_now(q, timeout_s)
 
 
 def run_index_append_stream_from_dir(

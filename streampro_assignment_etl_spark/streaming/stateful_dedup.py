@@ -679,7 +679,10 @@ def run_dedup_stream(
     default, on) for any checkpoint that outlives the run: the
     checksum is what detects torn/corrupted checkpoint files on
     restart. Same single-query-per-session assumption as
-    ``shuffle_partitions``."""
+    ``shuffle_partitions``.
+
+    Raises ``TimeoutError`` when the drain does not reach idle within
+    ``timeout_s``; the query is stopped first."""
     fields = [
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
@@ -720,22 +723,19 @@ def run_dedup_stream(
     else:
         deduped = dedup_stream(stream)
 
-    from ._drain import make_pair_sink_writer
+    from ._drain import drain_available_now, drain_confs, make_pair_sink_writer
 
     # Rows are already unique per batch (one per never-before-seen
     # fingerprint), so no dedup keys; skip-empty applies in both TTL
     # modes (zero-row state-cleanup batches must not litter the sink).
     any_ttl = ttl_seconds is not None or ttl_event_seconds is not None
     write_batch = make_pair_sink_writer(out_dir, None, skip_empty=any_ttl)
-
-    _CRC = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    saved_crc = spark.conf.get(_CRC)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if checkpoint_file_checksum is not None:
-        spark.conf.set(_CRC, str(checkpoint_file_checksum).lower())
-    try:
+    with drain_confs(
+        deduped,
+        "update",
+        shuffle_partitions=shuffle_partitions,
+        checkpoint_file_checksum=checkpoint_file_checksum,
+    ):
         q = (
             deduped.writeStream.outputMode("update")
             .foreachBatch(write_batch)
@@ -748,14 +748,7 @@ def run_dedup_stream(
         # normally do once the watermark stops advancing, but the
         # drain-until-idle loop is safe for both (it breaks the moment
         # the query goes inactive), so both TTL modes share it.
-        from ._drain import drain_available_now
-
         drain_available_now(q, timeout_s, ttl=any_ttl)
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-        if checkpoint_file_checksum is not None:
-            spark.conf.set(_CRC, saved_crc)
 
 
 # ---------------------------------------------------------------------------

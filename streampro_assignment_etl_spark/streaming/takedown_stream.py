@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._drain import drain_available_now
+
 AUDIT_SCHEMA = T.StructType(
     [
         T.StructField("request_ids", T.ArrayType(T.LongType())),
@@ -175,7 +177,7 @@ def run_takedown_request_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    drain_available_now(q, timeout_s)
 
 
 def read_takedown_audit(spark, audit_dir: str) -> DataFrame:

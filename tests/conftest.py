@@ -12,6 +12,27 @@ def spark():
     spark.stop()
 
 
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    if items:
+        stash = items[0].config.stash
+        stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + sum(
+            1 for item in items if item.get_closest_marker("slow")
+        )
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Make the skipped soak lane visible: the default ``-m "not slow"``
+    run says how many ``slow`` tests it left out and how to run them."""
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n:
+        terminalreporter.write_line(
+            f'{n} slow tests deselected; run them with: pytest tests/ -m ""'
+        )
+
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 

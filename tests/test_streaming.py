@@ -1219,6 +1219,173 @@ def test_read_update_sink_keeps_latest_batch_per_key(spark, tmp_path):
     assert any(r[2] == 2 and r[3] == 3.0 for r in got)  # merged 10:00 window
 
 
+def _drain_windowed(spark, landing, out, ckpt, i, stamps):
+    """Land file ``i`` with one view event per stamp, then drain the
+    hourly windowed counts (2 h watermark) into ``out`` on ``ckpt``."""
+    import os as _os
+
+    f = landing / f"ev{i}.jsonl"
+    f.write_text(
+        "\n".join(
+            json.dumps(_event(10 * i + j, f"2024-01-01 {t}:00", 1, "view", 1.0))
+            for j, t in enumerate(stamps)
+        )
+        + "\n"
+    )
+    _os.utime(f, (1_000_000_000 + i * 100,) * 2)
+    stream = windowed_event_counts(read_events_stream(spark, str(landing)))
+    run_stream_to_parquet(stream, out, ckpt, mode="update")
+
+
+def _sink_batches(spark, out):
+    """{batch_id: sorted (window_start, n_events)} of an update sink."""
+    import pathlib
+
+    return {
+        int(p.name.split("=")[1]): sorted(
+            (r["window_start"], r["n_events"])
+            for r in spark.read.parquet(str(p)).collect()
+        )
+        for p in pathlib.Path(out).glob("batch_id=*")
+    }
+
+
+def test_update_drain_runs_one_batch_per_drain(spark, tmp_path):
+    """Two update-mode drains of a plain windowed aggregation on one
+    checkpoint write exactly batch_id=0 and batch_id=1, both non-empty,
+    and commit two batches: no no-data batch ran, so the fast path
+    engaged."""
+    from streampro_assignment_etl_spark.streaming._drain import needs_no_data_batches
+
+    landing = tmp_path / "one_landing"
+    landing.mkdir()
+    out, ckpt = str(tmp_path / "one_out"), str(tmp_path / "one_ckpt")
+    stream = windowed_event_counts(read_events_stream(spark, str(landing)))
+    assert not needs_no_data_batches(stream, "update")
+    assert needs_no_data_batches(stream, "append")
+
+    _drain_windowed(spark, landing, out, ckpt, 0, ["05:10", "10:00"])
+    _drain_windowed(spark, landing, out, ckpt, 1, ["11:30"])
+
+    got = _sink_batches(spark, out)
+    assert sorted(got) == [0, 1]
+    assert all(got.values())
+    assert got[1] == [("2024-01-01 11:00:00", 1)]
+    commits = (tmp_path / "one_ckpt" / "commits").iterdir()
+    assert sorted(p.name for p in commits if not p.name.startswith(".")) == ["0", "1"]
+
+
+def test_update_drain_late_row_contract(spark, tmp_path):
+    """The late-row contract of one batch per update-mode drain (2 h
+    watermark). Drain 2's batch filters late rows against drain 1's
+    batch watermark, so 05:20 — one drain late, its window still in
+    state — is counted and the 05:00 window re-emits its exact
+    cumulative count: read_update_sink equals the batch recompute.
+    Drain 3 filters against the 08:00 watermark from two drains back,
+    so 07:45 is still dropped."""
+    from streampro_assignment_etl_spark.streaming import read_update_sink
+
+    landing = tmp_path / "late_landing"
+    landing.mkdir()
+    out, ckpt = str(tmp_path / "late_out"), str(tmp_path / "late_ckpt")
+    keys = ["window_start", "event_type"]
+
+    def winnowed():
+        return sorted(
+            (r["window_start"], r["n_events"])
+            for r in read_update_sink(spark, out, keys).collect()
+        )
+
+    def recompute():
+        return sorted(
+            (r["window_start"], r["n_events"])
+            for r in windowed_event_counts(_batch_events(spark, str(landing))).collect()
+        )
+
+    _drain_windowed(spark, landing, out, ckpt, 0, ["05:10", "10:00"])
+    _drain_windowed(spark, landing, out, ckpt, 1, ["05:20", "07:30", "09:00"])
+    assert _sink_batches(spark, out)[1] == [
+        ("2024-01-01 05:00:00", 2),
+        ("2024-01-01 07:00:00", 1),
+        ("2024-01-01 09:00:00", 1),
+    ]
+    assert winnowed() == recompute()
+
+    _drain_windowed(spark, landing, out, ckpt, 2, ["07:45", "11:00"])
+    assert _sink_batches(spark, out)[2] == [("2024-01-01 11:00:00", 1)]
+    dropped = set(recompute()) - set(winnowed())
+    assert dropped == {("2024-01-01 07:00:00", 2)}  # 07:45 filtered as late
+
+
+def test_event_ttl_dedup_drain_keeps_cleanup_batches(spark, tmp_path):
+    """An event-TTL dedup holds EventTimeTimeout state, whose timeouts
+    fire in no-data batches, so its drains keep them: one data batch
+    moves the watermark past alpha's horizon, the cleanup batch that
+    follows evicts alpha, and only beta survives in state."""
+    from streampro_assignment_etl_spark.streaming.stateful_dedup import (
+        run_dedup_stream,
+    )
+
+    landing = tmp_path / "cl_landing"
+    landing.mkdir()
+    (landing / "b0.jsonl").write_text(
+        "\n".join(
+            json.dumps(d)
+            for d in [
+                {"doc_id": 1, "text": "alpha", "ts": "2026-01-01T00:00:00"},
+                {"doc_id": 2, "text": "beta", "ts": "2026-01-01T05:00:00"},
+            ]
+        )
+        + "\n"
+    )
+    out, ckpt = str(tmp_path / "cl_out"), tmp_path / "cl_ckpt"
+    run_dedup_stream(spark, str(landing), out, str(ckpt), ttl_event_seconds=3600)
+
+    commits = [p for p in (ckpt / "commits").iterdir() if not p.name.startswith(".")]
+    assert len(commits) >= 2  # the data batch plus its cleanup batch
+    state = spark.read.format("statestore").load(str(ckpt)).collect()
+    assert len(state) == 1
+
+
+def test_drain_confs_restores_prior_values(spark, tmp_path):
+    """drain_confs sets only the dials asked for and restores each on
+    exit: a key set before gets its value back, a key unset before is
+    unset again, and the 4.1-only checksum conf is never touched when
+    the caller leaves it None."""
+    from streampro_assignment_etl_spark.streaming._drain import (
+        CHECKPOINT_CRC,
+        NO_DATA_BATCHES,
+        SHUFFLE_PARTITIONS,
+        drain_confs,
+    )
+
+    stream = windowed_event_counts(read_events_stream(spark, str(tmp_path)))
+    before = spark.conf.get(SHUFFLE_PARTITIONS)
+    crc_before = spark.conf.get(CHECKPOINT_CRC, None)
+    with drain_confs(stream, "update", shuffle_partitions=3):
+        assert spark.conf.get(SHUFFLE_PARTITIONS) == "3"
+        assert spark.conf.get(NO_DATA_BATCHES) == "false"
+        assert spark.conf.get(CHECKPOINT_CRC, None) == crc_before
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == before
+    assert spark.conf.get(NO_DATA_BATCHES, None) is None
+    with drain_confs(stream, "append"):
+        assert spark.conf.get(NO_DATA_BATCHES, None) is None
+
+
+def test_drain_timeout_raises_and_stops_query(spark, landing, tmp_path):
+    """A drain that cannot finish within timeout_s raises TimeoutError
+    instead of returning with a partial sink; the query is stopped and
+    the session confs are restored before the error propagates."""
+    from streampro_assignment_etl_spark.streaming._drain import NO_DATA_BATCHES
+
+    stream = windowed_event_counts(read_events_stream(spark, landing))
+    out, ckpt = str(tmp_path / "to_out"), str(tmp_path / "to_ckpt")
+    with pytest.raises(TimeoutError):
+        run_stream_to_parquet(stream, out, ckpt, mode="update", timeout_s=0.001)
+    assert spark.streams.active == []
+    assert spark.conf.get(NO_DATA_BATCHES, None) is None
+
+
 def test_stream_upsert_sink_latest_per_key_without_winnowing(spark, tmp_path):
     """run_stream_upsert merges each micro-batch into ONE keyed parquet
     table: after a two-batch drain where an hour window spans both
