@@ -54,6 +54,15 @@ def language_id(words: Column) -> Column:
     return expr
 
 
+def content_fingerprint(text: Column | str) -> Column:
+    """Normalized-content md5: whitespace runs collapsed to one space,
+    lower-cased, hashed — the one definition of "duplicate" shared by
+    the batch and streaming exact-dedup operators. The explicit
+    whitespace class keeps it engine-identical: Java ``\\s`` includes
+    ``\\x0B`` but RE2's does not, so DuckDB replays the same class."""
+    return F.md5(F.lower(F.regexp_replace(text, r"[ \t\n\r\f\x0B]+", " ")))
+
+
 def rolling_hash(text: Column) -> Column:
     """Polynomial rolling hash over character codes:
     ``acc = (acc*131 + ascii(ch)) % 1e9+7`` — the classic Rabin-Karp

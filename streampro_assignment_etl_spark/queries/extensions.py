@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import content_fingerprint, rolling_hash
 from ..sources.testdata import load_table
 from .catalog import query
 
@@ -74,9 +75,7 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-path for exact dedup (the md5 hex string is identical across
     engines, so it doubles as an oracle-checkable content hash)."""
     docs = load_table(spark, sf_dir, "documents")
-    # Explicit whitespace class: Java \s includes \x0B but RE2's does not,
-    # so a literal class keeps fingerprints engine-identical on VT chars.
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
+    fp = content_fingerprint("text")
     return (
         docs.select("doc_id", fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -604,8 +603,6 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint (a rolling hash extends incrementally as chunks arrive,
     so at 100 TB it fingerprints append-only shards without re-reading
     them). Both engines fold the identical character-code sequence."""
-    from ..functions.text import rolling_hash
-
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", rolling_hash(F.col("text")).alias("fingerprint"))
@@ -862,7 +859,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.simhash import token_hash60
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
+    fp = content_fingerprint("text")
     deduped = (
         docs.withColumn(
             "rn", F.row_number().over(Window.partitionBy(fp).orderBy("doc_id"))
@@ -2149,10 +2146,8 @@ def dedup_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization merged genuinely different texts), and the group-min
     Rabin-Karp rolling hash exercises the streaming-friendly
     fingerprint both engines fold identically."""
-    from ..functions.text import rolling_hash
-
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
+    fp = content_fingerprint("text")
     return (
         docs.select(
             "doc_id",

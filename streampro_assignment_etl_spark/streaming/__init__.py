@@ -40,17 +40,7 @@ from .stream_join import (
 from .heavy_hitters import read_mg_sink, trending_terms_stream
 from .takedown_stream import read_takedown_audit, run_takedown_request_stream
 from .index_ingest import run_index_append_stream, run_index_append_stream_from_dir
-from .stateful_dedup import (
-    dedup_stream,
-    dedup_stream_bloom,
-    dedup_stream_bloom_event_ttl,
-    dedup_stream_event_ttl,
-    dedup_stream_sharded,
-    dedup_stream_sharded_event_ttl,
-    dedup_stream_ttl,
-    run_bloom_dedup_stream,
-    run_dedup_stream,
-)
+from .stateful_dedup import dedup_stream, run_dedup_stream
 
 __all__ = [
     "attributed_view_counts",
@@ -59,19 +49,12 @@ __all__ = [
     "click_view_interval_join",
     "last_view_before_click_stream",
     "dedup_stream",
-    "dedup_stream_bloom",
-    "dedup_stream_bloom_event_ttl",
-    "dedup_stream_event_ttl",
-    "dedup_stream_sharded",
-    "dedup_stream_sharded_event_ttl",
-    "dedup_stream_ttl",
     "enriched_events_stream",
     "embedding_dedup_stream",
     "fuzzy_dedup_stream",
     "read_events_stream",
     "compact_update_sink",
     "read_update_sink",
-    "run_bloom_dedup_stream",
     "run_dedup_stream",
     "run_embedding_dedup_stream",
     "run_fuzzy_dedup_stream",

@@ -35,7 +35,8 @@ State-bounding policy hooks (round 9, closing the round-8 ``weak``:
   ``timeoutConf=GroupStateTimeout.ProcessingTimeTimeout``), bounding
   total state by the distinct-bucket volume of the horizon instead of
   the stream's lifetime; any arrival refreshes the bucket's horizon
-  (same last-seen semantics as ``stateful_dedup.dedup_stream_ttl``).
+  (same last-seen semantics as ``stateful_dedup.dedup_stream`` with
+  ``ttl_seconds``).
 - ``ttl_event_ms`` + ``ts_field``: PER-MEMBER eviction on an EVENT-time
   horizon (the caller must watermark ``ts_field``, pass
   ``EventTimeTimeout``, and grow its state schema by a ``lasts``

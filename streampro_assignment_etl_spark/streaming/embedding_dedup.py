@@ -37,8 +37,8 @@ emission predicate becomes cosine-of-quantized-vectors, see
 ``_STATE_SCHEMA_F32`` for the exact trade), and ``ttl_seconds``
 EVICTS bucket cohorts idle past the horizon via
 ``ProcessingTimeTimeout`` (shared machinery with
-``stateful_dedup.dedup_stream_ttl``), bounding state by the horizon's
-distinct-bucket volume — the "dedup against the last T of stream"
+``stateful_dedup.dedup_stream(ttl_seconds=)``), bounding state by the
+horizon's distinct-bucket volume — the "dedup against the last T of stream"
 contract, exact inside its horizon. ``ttl_event_seconds`` is the same
 horizon in EVENT time (per-member eviction against the watermark over
 ``ts_col`` — the variant that still means "last T of stream" when a

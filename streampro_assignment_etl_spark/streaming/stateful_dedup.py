@@ -6,23 +6,83 @@ answer "what is duplicated in this corpus"; a streaming training-data
 pipeline needs the online form — "have I EVER seen this document
 before" — across micro-batches and restarts. Spark has no built-in for
 that (``dropDuplicates`` on a stream needs watermark-bounded state and
-forgets), so this is the applyInPandasWithState case: state is keyed
-by content fingerprint, lives in the state store, and survives
-checkpoint restarts.
+forgets), so this is the applyInPandasWithState case: state lives in
+the state store, keyed by content fingerprint (``content_fingerprint``
+in functions/text.py, the same key the batch dedup queries group on),
+and survives checkpoint restarts.
 
-Scale properties: state per DISTINCT fingerprint is one int; the
-stream shuffles by fingerprint (same key-width argument as batch
-fingerprint dedup); keys never expire (NoTimeout) because "seen
-before" has no horizon. For 100 TB key spaces the sharded BLOOM
-variant below (``dedup_stream_bloom``) bounds total state to
-n_shards fixed-size filters at a small false-positive cost — same
-operator shape, different state schema. Every layout now has a
-horizon lever: fine-grained wall-clock (``dedup_stream_ttl``) and
-event-time (``dedup_stream_event_ttl``), sharded event-time
-(``dedup_stream_sharded_event_ttl``, exact per-member horizons), and
-bloom event-time (``dedup_stream_bloom_event_ttl``, generational
-rotation) — event horizons are the ones that survive backfill
-replay; see each builder.
+One constructor, ``dedup_stream``, builds every variant; its options
+pick a (key layout, eviction) row of ``_VARIANTS``, which fixes the
+state function, the state schema and the timeout mode.
+``run_dedup_stream`` drains any of them from a JSONL landing dir.
+
+Key layout — ``n_shards`` / ``bloom``:
+
+- exact (default): grouped by ``fingerprint``, one Python call per
+  distinct fingerprint per batch; state reads and writes touch only
+  the keys present in the batch.
+- sharded (``n_shards=N``): grouped by ``_shard =
+  abs(xxhash64(fingerprint)) % N``, one vectorized call per shard per
+  batch holding the shard's exact seen-set — the same output as exact
+  (min doc_id per batch, first batch wins), but a touched shard's whole
+  seen-set is rewritten every batch.
+- bloom (``n_shards=N, bloom=True``): the sharded grouping with one
+  fixed 512-long bloom filter per shard — no doc payloads in state, at
+  a false-positive rate of ~(1 - e^{-kn/m})^k per shard (size N to the
+  distinct count); in-batch duplicates collapse to the first arrival,
+  not the min doc_id.
+
+Eviction — ``ttl_seconds`` / ``ttl_event_seconds``:
+
+- none: "seen before" has no horizon; state grows with the stream.
+- processing time (``ttl_seconds``): a key is evicted after that long
+  without arrivals; a duplicate refreshes it (last-seen). Exact layout
+  only. A wall-clock horizon evicts nothing meaningful under backfill
+  replay (a month reprocessed in an hour fits any realistic horizon).
+- event time (``ttl_event_seconds``): the horizon runs on the watermark
+  over the rows' ``ts`` column (0 s delay), so a replay reproduces the
+  original admit/suppress decisions. Needs a UTC session. Decisions key
+  off the watermark, not off whether a timeout has fired yet (firing
+  lags a batch), so one-batch and many-batch replays converge.
+
+The seven combinations (``ttl_seconds`` excludes ``n_shards``, ``bloom``
+and ``ttl_event_seconds``; ``bloom`` requires ``n_shards``):
+
+======= ========== ======================= ============== =========================
+layout  eviction   state schema            timeout        pick when…
+======= ========== ======================= ============== =========================
+exact   none       seen int                NoTimeout      huge cold key space with
+                                                          sparse batches: a batch
+                                                          touches only its own keys
+exact   processing seen int                ProcessingTime "dedup against the last T
+                                                          of wall clock", exact in
+                                                          the horizon; eviction
+                                                          latency T + one batch
+exact   event      seen int,               EventTime      exact horizon that
+                   last_ms long                           survives backfill replay,
+                                                          modest keys per batch
+sharded none       fps array<string>       NoTimeout      high-churn firehose over
+                                                          a modest total key space:
+                                                          N calls per batch, not
+                                                          one per key (~30 µs each)
+sharded event      fps array<string>,      EventTime      the firehose with an
+                   lasts array<long>                      exact, replay-safe
+                                                          horizon: members expire
+                                                          by their own event age
+bloom   none       slot_version int,       NoTimeout      distinct keys blow any
+                   bits array<long>                       exact budget: N × 4 KiB
+                                                          forever, at the FP rate
+bloom   event      slot_version int,       EventTime      keys inside the horizon
+                   gen_start_ms long,                     blow even the sharded
+                   bits_cur array<long>,                  budget: state constant in
+                   bits_prev array<long>                  key volume AND horizon;
+                                                          suppression window
+                                                          [ttl, 2·ttl), not exact
+======= ========== ======================= ============== =========================
+
+``dedup_stream_watermarked`` is the BUILT-IN counterpart (no Python
+state function at all); prefer it whenever "no duplicate within the
+watermark delay" is the contract.
 
 API note: Spark 4's successor API (``transformWithStateInPandas`` —
 typed ValueState/ListState/MapState, native state TTL, timers) is the
@@ -45,6 +105,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.text import content_fingerprint
+from ._cohort import require_utc_session
+
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -52,92 +115,169 @@ DOC_SCHEMA = T.StructType(
         T.StructField("fingerprint", T.StringType()),
     ]
 )
+_DOC_COLS = DOC_SCHEMA.fieldNames()
+
+# Event-time column and watermark delay of the event-horizon variants.
+_TS = "ts"
+_WATERMARK_DELAY = "0 seconds"
+
+BLOOM_BITS = 1 << 15  # 32768 bits = 512 longs per shard
+BLOOM_HASHES = 7
+# Slot-derivation version, persisted IN the state: v1 was md5 15-bit
+# windows (rounds ≤5), v2 is xxhash64+pmod. Bits set under one
+# derivation are meaningless under another, so resuming an old
+# checkpoint must fail LOUDLY — adding this field also changed the
+# state schema, which Spark's state-schema validation rejects at
+# restart for v1-era checkpoints; the in-state check guards any
+# FUTURE derivation change that happens not to alter the schema.
+_BLOOM_SLOT_VERSION = 2
 
 _STATE_SCHEMA = T.StructType([T.StructField("seen", T.IntegerType())])
+_EVENT_TTL_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("seen", T.IntegerType()),
+        T.StructField("last_ms", T.LongType()),  # max event time seen, epoch ms
+    ]
+)
+_SHARD_EXACT_STATE_SCHEMA = T.StructType(
+    [T.StructField("fps", T.ArrayType(T.StringType()))]
+)
+_SHARD_EVENT_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("fps", T.ArrayType(T.StringType())),
+        T.StructField("lasts", T.ArrayType(T.LongType())),  # per-member max event ms
+    ]
+)
+_BLOOM_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("slot_version", T.IntegerType()),
+        T.StructField("bits", T.ArrayType(T.LongType())),
+    ]
+)
+_BLOOM_EVENT_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("slot_version", T.IntegerType()),
+        T.StructField("gen_start_ms", T.LongType()),
+        T.StructField("bits_cur", T.ArrayType(T.LongType())),
+        T.StructField("bits_prev", T.ArrayType(T.LongType())),
+    ]
+)
 
 
-def fingerprinted(docs: DataFrame) -> DataFrame:
-    """Attach the normalized-content md5 (same normalization as the
-    batch `dedup_fingerprint` query, so batch and stream agree on what
-    a duplicate is)."""
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    return docs.select("doc_id", "text", fp.alias("fingerprint"))
+# ---------------------------------------------------------------------------
+# Shared pieces of the state functions.
+# ---------------------------------------------------------------------------
+def _concat_nonempty(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    """The group's rows of this batch as one frame; None when there are
+    none (timeout and bookkeeping visits)."""
+    frames = [pdf for pdf in pdfs if len(pdf)]
+    if not frames:
+        return None
+    return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
 
 
-def _emit_first_unseen(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per fingerprint: emit the lowest-doc_id row the FIRST time the
-    fingerprint is ever seen; afterwards (same batch or any later one)
-    emit nothing. State = a single 'seen' flag."""
-    if state.exists:
-        return
-    best: pd.DataFrame | None = None
-    for pdf in pdfs:
-        cand = pdf.nsmallest(1, "doc_id")
-        if best is None or cand["doc_id"].iloc[0] < best["doc_id"].iloc[0]:
-            best = cand
-    if best is not None:
-        state.update((1,))
-        yield best[["doc_id", "text", "fingerprint"]]
+def _min_doc_id_per_fingerprint(batch: pd.DataFrame) -> pd.DataFrame:
+    """Each fingerprint's lowest-doc_id row of the batch (earliest
+    arrival on ties) — the in-batch pick of every exact layout."""
+    return batch.sort_values("doc_id", kind="stable").drop_duplicates(
+        "fingerprint", keep="first"
+    )
 
 
-def dedup_stream(doc_stream: DataFrame) -> DataFrame:
-    """Streaming exact-dedup: one output row per never-before-seen
-    fingerprint, state persisted across micro-batches via the
-    checkpointed state store."""
+def _pdf_max_event_ms(pdf: pd.DataFrame) -> int:
+    """Max event time of a pandas batch slice as epoch ms.
+    ``pd.Timestamp.value`` is nanoseconds regardless of the frame's
+    datetime64 resolution, so this is Arrow-resolution-proof. Exact
+    only under the UTC session ``dedup_stream`` enforces for event
+    horizons — the worker sees tz-naive timestamps rendered in the
+    session zone, and the watermark/timeout APIs speak true epoch ms."""
+    return int(pd.Timestamp(pdf[_TS].max()).value // 1_000_000)
+
+
+def _batch_event_ms(batch: pd.DataFrame) -> pd.Series:
+    """Event times of a pandas batch as epoch ms, vectorized and
+    Arrow-resolution-proof (datetime64[us] deliveries are upcast to ns
+    before the integer view). Same UTC contract as ``_pdf_max_event_ms``."""
     return (
-        fingerprinted(doc_stream)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            _emit_first_unseen,
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        pd.to_datetime(batch[_TS]).astype("datetime64[ns]").astype("int64")
+        // 1_000_000
+    )
+
+
+def bloom_slot_array(fingerprint: F.Column | str) -> F.Column:
+    """k bloom bit positions as a JVM ``array<long>`` column: xxhash64 of
+    the fingerprint under k seeds, pmod'd into the bit range. Computed
+    map-side BEFORE the shard shuffle so the Python state function never
+    hashes — it only tests and ORs bits. Deterministic across restarts
+    and engines (xxhash64 is a fixed function of (seed, bytes))."""
+    return F.array(
+        *[
+            F.pmod(F.xxhash64(F.lit(seed), fingerprint), F.lit(BLOOM_BITS))
+            for seed in range(BLOOM_HASHES)
+        ]
+    )
+
+
+def _check_bloom_version(state: GroupState) -> None:
+    """Refuse bloom state written under another slot derivation."""
+    stored_version = state.get[0]
+    if stored_version != _BLOOM_SLOT_VERSION:
+        raise ValueError(
+            f"bloom state written under slot derivation v{stored_version}, "
+            f"code is v{_BLOOM_SLOT_VERSION}: the persisted bits test "
+            "different positions than this code sets — resuming would "
+            "silently leak duplicates and inflate false positives. "
+            "Start a fresh checkpoint."
         )
-    )
+
+
+def _bloom_bits(words: list[int] | None = None) -> np.ndarray:
+    """A filter as uint64 words: the stored array<signed long>
+    reinterpreted (not converted), or an empty filter."""
+    if words is None:
+        return np.zeros(BLOOM_BITS // 64, dtype=np.uint64)
+    return np.array(words, dtype=np.int64).view(np.uint64).copy()
+
+
+def _bloom_words(bits: np.ndarray) -> list[int]:
+    """A filter back as plain ints for the array<long> state field."""
+    return bits.view(np.int64).tolist()
+
+
+def _bloom_admit(
+    batch: pd.DataFrame, member: np.ndarray, target: np.ndarray
+) -> pd.DataFrame:
+    """Bloom test-and-set, vectorized over the batch (numpy bit ops on
+    the precomputed ``_slots`` column — no per-row Python loop, no
+    hashing): exact in-batch duplicate fingerprints collapse to their
+    first arrival, survivors are tested against ``member`` in one
+    gather, and the kept rows' bits are OR'd into ``target`` in place
+    with one scatter. Returns the kept rows. One deliberate difference
+    from a sequential per-row insert: a unique doc whose slots are
+    jointly covered only by OTHER docs of the SAME batch is kept
+    (sequential would false-positive-drop it) — strictly fewer false
+    positives, same bounded state."""
+    batch = batch[~batch.duplicated("fingerprint")]
+    slots = np.stack(batch["_slots"].to_numpy())  # (n, k)
+    words, offs = slots // 64, (slots % 64).astype(np.uint64)
+    seen = ((member[words] >> offs) & np.uint64(1)).all(axis=1)
+    ks = slots[~seen]
+    np.bitwise_or.at(target, ks // 64, np.uint64(1) << (ks % 64).astype(np.uint64))
+    return batch[~seen]
 
 
 # ---------------------------------------------------------------------------
-# Built-in counterpart: event-time-bounded dedup via watermark.
+# The state functions, one per (layout, eviction) row.
 # ---------------------------------------------------------------------------
-def dedup_stream_watermarked(
-    doc_stream: DataFrame, ts_col: str, delay: str = "1 hour"
-) -> DataFrame:
-    """The BUILT-IN horizon-bounded dedup, for streams that carry an
-    event-time column: ``withWatermark(ts) + dropDuplicatesWithinWatermark``
-    — state for a fingerprint is evicted once the watermark passes its
-    event time + delay, entirely JVM-side (no Python state function at
-    all; prefer this whenever the data has event time). The custom
-    operators in this module exist for what it can't express: dedup on
-    CONTENT irrespective of time with unbounded (``dedup_stream``),
-    wall-clock-bounded (``dedup_stream_ttl``), sharded-exact, or
-    bloom-bounded state, min-doc_id in-batch selection, and emit-once
-    "first ever seen" semantics rather than "no duplicate within the
-    watermark delay"."""
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    return (
-        doc_stream.withColumn("fingerprint", fp)  # keep ts_col for the watermark
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(["fingerprint"])
-    )
-
-
-# ---------------------------------------------------------------------------
-# TTL variant: recency-horizon dedup with state EVICTION.
-# ---------------------------------------------------------------------------
-def _make_emit_unseen_ttl(ttl_ms: int):
-    """Fine-grained dedup state with a processing-time TTL: a
-    fingerprint's state is EVICTED after ``ttl_ms`` without arrivals, so
-    total state is bounded by the distinct-key volume of the horizon,
-    not of the stream's lifetime. A duplicate arriving inside the
-    horizon refreshes it (last-seen semantics — hot boilerplate stays
-    suppressed for as long as it keeps arriving); one arriving after
-    eviction is re-admitted as new, which is the contract: "dedup
-    against the last T of stream", the bounded-state policy that stays
-    EXACT inside its horizon (the bloom variant is the complementary
-    trade: unbounded horizon, approximate membership)."""
+def _make_emit_unseen(ttl_ms: int | None):
+    """Per fingerprint: emit the lowest-doc_id row the FIRST time the
+    fingerprint is seen; afterwards (same batch or any later one) emit
+    nothing. State = a single 'seen' flag. ``ttl_ms`` None never evicts;
+    otherwise the flag is EVICTED after ``ttl_ms`` without arrivals
+    (processing-time timeout), and a duplicate arriving inside the
+    horizon refreshes it — hot boilerplate stays suppressed for as long
+    as it keeps arriving, and a fingerprint arriving after eviction is
+    re-admitted as new."""
 
     def emit(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -147,74 +287,29 @@ def _make_emit_unseen_ttl(ttl_ms: int):
             state.remove()
             return
         if state.exists:
-            state.setTimeoutDuration(ttl_ms)  # refresh the horizon
+            if ttl_ms is not None:
+                state.setTimeoutDuration(ttl_ms)  # refresh the horizon
             return
-        best: pd.DataFrame | None = None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            cand = pdf.nsmallest(1, "doc_id")
-            if best is None or cand["doc_id"].iloc[0] < best["doc_id"].iloc[0]:
-                best = cand
-        if best is not None:
-            state.update((1,))
+        batch = _concat_nonempty(pdfs)
+        if batch is None:
+            return
+        state.update((1,))
+        if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
-            yield best[["doc_id", "text", "fingerprint"]]
+        yield _min_doc_id_per_fingerprint(batch)[_DOC_COLS]
 
     return emit
 
 
-def dedup_stream_ttl(doc_stream: DataFrame, ttl_seconds: int) -> DataFrame:
-    """Streaming exact dedup bounded by a recency horizon: same output
-    contract as ``dedup_stream`` inside the horizon, state evicted via
-    ``ProcessingTimeTimeout`` after ``ttl_seconds`` without arrivals.
-    Timeouts fire at micro-batch boundaries for keys WITHOUT data in
-    that batch, so eviction latency is horizon + one batch."""
-    return (
-        fingerprinted(doc_stream)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            _make_emit_unseen_ttl(ttl_seconds * 1000),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
+_emit_first_unseen = _make_emit_unseen(None)
 
 
-# ---------------------------------------------------------------------------
-# EVENT-time TTL variant: the horizon that survives backfill replay.
-# ---------------------------------------------------------------------------
-_EVENT_TTL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("seen", T.IntegerType()),
-        T.StructField("last_ms", T.LongType()),  # max event time seen, epoch ms
-    ]
-)
-
-
-def _pdf_max_event_ms(pdf: pd.DataFrame, ts_col: str) -> int:
-    """Max event time of a pandas batch slice as epoch ms.
-    ``pd.Timestamp.value`` is nanoseconds regardless of the frame's
-    datetime64 resolution, so this is Arrow-resolution-proof. Exact
-    only under the UTC session ``dedup_stream_event_ttl`` enforces —
-    the worker sees tz-naive timestamps rendered in the session zone,
-    and the watermark/timeout APIs speak true epoch ms."""
-    return int(pd.Timestamp(pdf[ts_col].max()).value // 1_000_000)
-
-
-def _make_emit_unseen_event_ttl(ttl_ms: int, ts_col: str):
-    """Dedup state bounded by an EVENT-time horizon: a fingerprint is a
-    duplicate iff its stored max-event-time + ttl is still ahead of the
-    WATERMARK — wall-clock plays no part, so replaying a month of
-    history at full throughput (the 100 TB backfill recovery mode)
-    reproduces the same admit/suppress decisions as the original run.
-    Decisions key off the watermark directly, not off whether the
-    timeout has FIRED yet (firing lags one batch): an arrival whose
-    stored horizon the watermark has already passed is re-admitted as
-    new even if the eviction sweep hasn't reached the key — that is
-    what makes one-batch and many-batch replays of the same files
+def _make_emit_unseen_event_ttl(ttl_ms: int):
+    """Per fingerprint with an EVENT-time horizon: a duplicate iff the
+    stored max-event-time + ttl is still ahead of the WATERMARK. An
+    arrival whose stored horizon the watermark has already passed is
+    re-admitted as new even if the eviction sweep hasn't reached the
+    key — what makes one-batch and many-batch replays of the same files
     converge to the same state (pinned in tests)."""
 
     def emit(
@@ -225,18 +320,10 @@ def _make_emit_unseen_event_ttl(ttl_ms: int, ts_col: str):
             # data this batch: evict.
             state.remove()
             return
-        best: pd.DataFrame | None = None
-        max_ms: int | None = None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            m = _pdf_max_event_ms(pdf, ts_col)
-            max_ms = m if max_ms is None else max(max_ms, m)
-            cand = pdf.nsmallest(1, "doc_id")
-            if best is None or cand["doc_id"].iloc[0] < best["doc_id"].iloc[0]:
-                best = cand
-        if best is None or max_ms is None:
+        batch = _concat_nonempty(pdfs)
+        if batch is None:
             return
+        max_ms = _pdf_max_event_ms(batch)
         wm = state.getCurrentWatermarkMs()
         if state.exists and int(state.get[1]) + ttl_ms > wm:
             # Inside the horizon: duplicate. Refresh to the max event
@@ -253,55 +340,9 @@ def _make_emit_unseen_event_ttl(ttl_ms: int, ts_col: str):
         # is always settable (> watermark).
         state.update((1, max_ms))
         state.setTimeoutTimestamp(max_ms + ttl_ms)
-        yield best[["doc_id", "text", "fingerprint"]]
+        yield _min_doc_id_per_fingerprint(batch)[_DOC_COLS]
 
     return emit
-
-
-def dedup_stream_event_ttl(
-    doc_stream: DataFrame,
-    ts_col: str,
-    ttl_event_seconds: int,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming exact dedup bounded by an EVENT-time horizon:
-    "duplicate of anything whose event time is within the last
-    ``ttl_event_seconds`` of stream time", where stream time is the
-    watermark over ``ts_col``. This is the horizon that means something
-    under backfill replay — ``dedup_stream_ttl``'s
-    ``ProcessingTimeTimeout`` is a WALL-CLOCK horizon, and reprocessing
-    a month of history in an hour evicts nothing meaningful (the whole
-    month fits inside any realistic wall horizon), while this variant
-    reproduces the original admit/evict sequence because event time
-    replays identically. ``watermark_delay`` is the out-of-orderness
-    allowance (rows later than that are dropped by the engine before
-    the state function). Eviction latency: a key's state drops on the
-    first batch after the watermark passes last_event + ttl in which
-    the key has no data."""
-    from ._cohort import require_utc_session
-
-    require_utc_session(doc_stream.sparkSession)
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    return (
-        doc_stream.withColumn("fingerprint", fp)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            _make_emit_unseen_event_ttl(ttl_event_seconds * 1000, ts_col),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_EVENT_TTL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sharded EXACT state variant: vectorize away the per-key Python call.
-# ---------------------------------------------------------------------------
-_SHARD_EXACT_STATE_SCHEMA = T.StructType(
-    [T.StructField("fps", T.ArrayType(T.StringType()))]
-)
 
 
 def _emit_shard_unseen(
@@ -314,93 +355,28 @@ def _emit_shard_unseen(
     fine-grained operator's semantics (min doc_id within the batch,
     first batch wins) bit-for-bit."""
     seen: list[str] = list(state.get[0]) if state.exists else []
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if not frames:
+    batch = _concat_nonempty(pdfs)
+    if batch is None:
         state.update((seen,))
         return
-    batch = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    batch = batch.sort_values("doc_id", kind="stable").drop_duplicates(
-        "fingerprint", keep="first"
-    )
+    batch = _min_doc_id_per_fingerprint(batch)
     fresh = batch[~batch["fingerprint"].isin(set(seen))]
     # Plain-str state (numpy scalars poison the state pickle JVM-side).
     state.update((seen + [str(f) for f in fresh["fingerprint"]],))
     if len(fresh):
-        yield fresh[["doc_id", "text", "fingerprint"]]
+        yield fresh[_DOC_COLS]
 
 
-def dedup_stream_sharded(doc_stream: DataFrame, n_shards: int = 64) -> DataFrame:
-    """Streaming exact-dedup with SHARDED exact state: fingerprints hash
-    into ``n_shards`` key ranges, each holding its exact seen-set, so a
-    micro-batch pays ``n_shards`` vectorized state calls instead of one
-    Python call per distinct fingerprint (the fine-grained operator's
-    per-key cost: ~30 µs × |batch keys| of interpreter overhead, the
-    dominant term once the arithmetic is vectorized).
-
-    Same output as ``dedup_stream`` — exact, min-doc_id-per-batch,
-    first-batch-wins (a pytest pins the equivalence). The trade is state
-    I/O shape, not correctness: fine-grained state reads/writes ONLY the
-    keys present in a batch (total state can be billions of keys; a
-    batch touches its own), while a shard's whole seen-set is
-    deserialized and rewritten every batch that touches it. Pick by
-    batch-distinct-to-total-key ratio: high-churn firehoses with modest
-    total key space → sharded; huge cold key spaces with sparse batches
-    → fine-grained (or the bounded-state bloom below, which keeps the
-    shard shape but O(1) state per shard)."""
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
-    return (
-        fingerprinted(doc_stream)
-        .withColumn("_shard", shard)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _emit_shard_unseen,
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_SHARD_EXACT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sharded EXACT state with an EVENT-time horizon: the firehose shape
-# with the horizon that survives backfill replay.
-# ---------------------------------------------------------------------------
-_SHARD_EVENT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("fps", T.ArrayType(T.StringType())),
-        T.StructField("lasts", T.ArrayType(T.LongType())),  # per-member max event ms
-    ]
-)
-
-
-def _batch_event_ms(batch: pd.DataFrame, ts_col: str) -> pd.Series:
-    """Event times of a pandas batch as epoch ms, vectorized and
-    Arrow-resolution-proof (datetime64[us] deliveries are upcast to ns
-    before the integer view). Exact only under the UTC session the
-    event-TTL builders enforce — same contract as ``_pdf_max_event_ms``."""
-    return (
-        pd.to_datetime(batch[ts_col]).astype("datetime64[ns]").astype("int64")
-        // 1_000_000
-    )
-
-
-def _make_emit_shard_unseen_event_ttl(ttl_ms: int, ts_col: str):
+def _make_emit_shard_unseen_event_ttl(ttl_ms: int):
     """Sharded seen-set with PER-MEMBER event-time horizons: each
     fingerprint carries its max event time; every visit prunes members
     whose time + ttl is behind the WATERMARK before the membership
-    test, so admit/suppress decisions replay identically whether a
-    backfill runs as one batch or many (the wall-clock sharded operator
-    evicts nothing meaningful under replay — the whole history fits any
-    realistic wall horizon). Decisions key off the watermark directly,
-    not off whether the shard's timeout has fired (firing lags a
-    batch): an arrival whose stored twin is expired-on-paper re-admits
-    as new — the same convergence rule as the fine-grained
-    ``dedup_stream_event_ttl``, whose in-horizon semantics this matches
-    bit-for-bit (min doc_id per batch, first batch wins, duplicates
-    refresh to the max event time ever seen; pinned in tests). The
-    shard's registered timeout is max(member horizons) — the moment the
-    WHOLE cohort is dead — so an unvisited shard's state still drops."""
+    test, so an arrival whose stored twin is expired-on-paper re-admits
+    as new — the fine-grained event rule, matched bit-for-bit (min
+    doc_id per batch, first batch wins, duplicates refresh to the max
+    event time ever seen; pinned in tests). The shard's registered
+    timeout is max(member horizons) — the moment the WHOLE cohort is
+    dead — so an unvisited shard's state still drops."""
 
     def emit(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -421,20 +397,17 @@ def _make_emit_shard_unseen_event_ttl(ttl_ms: int, ts_col: str):
             fps = [fps[i] for i in live]
             lasts = [lasts[i] for i in live]
 
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if not frames:
+        batch = _concat_nonempty(pdfs)
+        if batch is None:
             if fps:
                 state.update((fps, lasts))
                 state.setTimeoutTimestamp(max(lasts) + ttl_ms)
             else:
                 state.remove()
             return
-        batch = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        batch = batch.assign(_ms=_batch_event_ms(batch, ts_col))
+        batch = batch.assign(_ms=_batch_event_ms(batch))
         fp_max = batch.groupby("fingerprint", sort=False)["_ms"].max()
-        firsts = batch.sort_values("doc_id", kind="stable").drop_duplicates(
-            "fingerprint", keep="first"
-        )
+        firsts = _min_doc_id_per_fingerprint(batch)
         idx = {f: i for i, f in enumerate(fps)}
         dup_mask = firsts["fingerprint"].isin(idx)
         for f in firsts.loc[dup_mask, "fingerprint"]:
@@ -451,64 +424,31 @@ def _make_emit_shard_unseen_event_ttl(ttl_ms: int, ts_col: str):
         # watermark), so the timeout is always settable.
         state.setTimeoutTimestamp(max(lasts) + ttl_ms)
         if len(fresh):
-            yield fresh[["doc_id", "text", "fingerprint"]]
+            yield fresh[_DOC_COLS]
 
     return emit
 
 
-def dedup_stream_sharded_event_ttl(
-    doc_stream: DataFrame,
-    ts_col: str,
-    ttl_event_seconds: int,
-    n_shards: int = 64,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming exact dedup with SHARDED state AND an EVENT-time
-    horizon — the combination the 100 TB firehose actually needs: the
-    sharded layout amortizes the per-key Python call (one vectorized
-    state call per shard per batch, ``dedup_stream_sharded``), and the
-    event horizon bounds state by the distinct-key volume of the
-    horizon in STREAM time, so a month-long backfill replayed in an
-    hour reproduces the original admit/evict sequence instead of
-    peaking at full-history state (the round-10 watch item: both
-    firehose-shaped operators had no horizon lever at all). Same
-    output contract as ``dedup_stream_event_ttl`` (pinned equivalent
-    in tests); state is (fps, lasts) parallel arrays per shard —
-    ~(md5-string + long) per live member."""
-    from ._cohort import require_utc_session
-
-    require_utc_session(doc_stream.sparkSession)
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
-    return (
-        doc_stream.withColumn("fingerprint", fp)
-        .withWatermark(ts_col, watermark_delay)
-        .withColumn("_shard", shard)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _make_emit_shard_unseen_event_ttl(ttl_event_seconds * 1000, ts_col),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_SHARD_EVENT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+def _emit_bloom_unseen(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Per key-range shard: emit a row iff its fingerprint's bloom bits
+    are not all set, then set them (``_bloom_admit``). State is a FIXED
+    512-long bit array regardless of how many fingerprints the shard
+    has seen."""
+    if state.exists:
+        _check_bloom_version(state)
+        bits = _bloom_bits(state.get[1])
+    else:
+        bits = _bloom_bits()
+    batch = _concat_nonempty(pdfs)
+    kept = None if batch is None else _bloom_admit(batch, bits, bits)
+    state.update((_BLOOM_SLOT_VERSION, _bloom_words(bits)))
+    if kept is not None and len(kept):
+        yield kept[_DOC_COLS]
 
 
-# ---------------------------------------------------------------------------
-# Bloom state with an EVENT-time horizon: generational rotation.
-# ---------------------------------------------------------------------------
-_BLOOM_EVENT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("slot_version", T.IntegerType()),
-        T.StructField("gen_start_ms", T.LongType()),
-        T.StructField("bits_cur", T.ArrayType(T.LongType())),
-        T.StructField("bits_prev", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _make_emit_bloom_unseen_event_ttl(ttl_ms: int, ts_col: str):
+def _make_emit_bloom_unseen_event_ttl(ttl_ms: int):
     """Rotating-generation bloom: bloom bits are not attributable to
     members, so per-member eviction is impossible — the bounded-state
     answer is the classic TWO-generation rotation (one filter per
@@ -525,37 +465,23 @@ def _make_emit_bloom_unseen_event_ttl(ttl_ms: int, ts_col: str):
     def emit(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        n_words = BLOOM_BITS // 64
         if state.hasTimedOut:
             # Two full bands passed with no data: both filters stale.
             state.remove()
             return
         wm = state.getCurrentWatermarkMs()
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        batch = None
-        if frames:
-            batch = (
-                pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            )
+        batch = _concat_nonempty(pdfs)
         if state.exists:
-            stored_version = state.get[0]
-            if stored_version != _BLOOM_SLOT_VERSION:
-                raise ValueError(
-                    f"bloom state written under slot derivation "
-                    f"v{stored_version}, code is v{_BLOOM_SLOT_VERSION}: "
-                    "start a fresh checkpoint."
-                )
+            _check_bloom_version(state)
             gen_start = int(state.get[1])
-            cur = np.array(state.get[2], dtype=np.int64).view(np.uint64).copy()
-            prev = np.array(state.get[3], dtype=np.int64).view(np.uint64).copy()
+            cur, prev = _bloom_bits(state.get[2]), _bloom_bits(state.get[3])
             if wm >= gen_start + 2 * ttl_ms:
                 # Both generations predate the horizon: hard reset,
                 # re-anchor the band grid at the watermark.
-                cur = np.zeros(n_words, dtype=np.uint64)
-                prev = np.zeros(n_words, dtype=np.uint64)
+                cur, prev = _bloom_bits(), _bloom_bits()
                 gen_start = (wm // ttl_ms) * ttl_ms
             elif wm >= gen_start + ttl_ms:
-                prev, cur = cur, np.zeros(n_words, dtype=np.uint64)
+                prev, cur = cur, _bloom_bits()
                 gen_start += ttl_ms
         else:
             if batch is None:
@@ -565,75 +491,116 @@ def _make_emit_bloom_unseen_event_ttl(ttl_ms: int, ts_col: str):
             # watermark and the batch's own max event time — anchoring
             # on a lagging wm would register a timeout the next
             # watermark advance immediately fires, wiping the filter.
-            anchor = max(wm, int(_batch_event_ms(batch, ts_col).max()))
+            anchor = max(wm, int(_batch_event_ms(batch).max()))
             gen_start = (anchor // ttl_ms) * ttl_ms
-            cur = np.zeros(n_words, dtype=np.uint64)
-            prev = np.zeros(n_words, dtype=np.uint64)
+            cur, prev = _bloom_bits(), _bloom_bits()
 
-        if batch is not None:
-            batch = batch[~batch.duplicated("fingerprint")]
-            slots = np.stack(batch["_slots"].to_numpy())  # (n, k)
-            words, offs = slots // 64, (slots % 64).astype(np.uint64)
-            union = cur | prev
-            seen = ((union[words] >> offs) & np.uint64(1)).all(axis=1)
-            kept = batch[~seen]
-            if len(kept):
-                ks = slots[~seen]
-                np.bitwise_or.at(
-                    cur, ks // 64, np.uint64(1) << (ks % 64).astype(np.uint64)
-                )
-        else:
-            kept = None  # pure rotation/bookkeeping visit
+        # No batch: a pure rotation/bookkeeping visit.
+        kept = None if batch is None else _bloom_admit(batch, cur | prev, cur)
         state.update(
-            (
-                _BLOOM_SLOT_VERSION,
-                int(gen_start),
-                cur.view(np.int64).tolist(),
-                prev.view(np.int64).tolist(),
-            )
+            (_BLOOM_SLOT_VERSION, int(gen_start), _bloom_words(cur), _bloom_words(prev))
         )
         state.setTimeoutTimestamp(gen_start + 2 * ttl_ms)
         if kept is not None and len(kept):
-            yield kept[["doc_id", "text", "fingerprint"]]
+            yield kept[_DOC_COLS]
 
     return emit
 
 
-def dedup_stream_bloom_event_ttl(
-    doc_stream: DataFrame,
-    ts_col: str,
-    ttl_event_seconds: int,
-    n_shards: int = 64,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming dedup with BOUNDED state and an EVENT-time horizon:
-    ``dedup_stream_bloom``'s fixed-size shard filters, rotated in
-    ``ttl`` bands of watermark time (see the state function). State is
-    2 × 512 longs per shard FOREVER — the only dedup variant whose
-    state is constant in both key volume and horizon length — at the
-    cost of (a) the bloom FP rate and (b) a [ttl, 2·ttl) suppression
-    window instead of an exact horizon. Pick it when the distinct-key
-    volume inside the horizon would blow even the sharded-exact
-    layout's budget; pick ``dedup_stream_sharded_event_ttl`` when the
-    horizon must be exact."""
-    from ._cohort import require_utc_session
+# (layout, eviction) -> (state-function factory of ttl_ms, state schema,
+# timeout mode). Checkpoints freeze the schema, the grouping key and the
+# timeout mode, so an entry's values never change once written.
+_VARIANTS = {
+    ("exact", "none"): (
+        _make_emit_unseen,
+        _STATE_SCHEMA,
+        GroupStateTimeout.NoTimeout,
+    ),
+    ("exact", "processing"): (
+        _make_emit_unseen,
+        _STATE_SCHEMA,
+        GroupStateTimeout.ProcessingTimeTimeout,
+    ),
+    ("exact", "event"): (
+        _make_emit_unseen_event_ttl,
+        _EVENT_TTL_STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
+    ),
+    ("sharded", "none"): (
+        lambda _: _emit_shard_unseen,
+        _SHARD_EXACT_STATE_SCHEMA,
+        GroupStateTimeout.NoTimeout,
+    ),
+    ("sharded", "event"): (
+        _make_emit_shard_unseen_event_ttl,
+        _SHARD_EVENT_STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
+    ),
+    ("bloom", "none"): (
+        lambda _: _emit_bloom_unseen,
+        _BLOOM_STATE_SCHEMA,
+        GroupStateTimeout.NoTimeout,
+    ),
+    ("bloom", "event"): (
+        _make_emit_bloom_unseen_event_ttl,
+        _BLOOM_EVENT_STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
+    ),
+}
 
-    require_utc_session(doc_stream.sparkSession)
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
-    return (
-        doc_stream.withColumn("fingerprint", fp)
-        .withWatermark(ts_col, watermark_delay)
-        .withColumn("_shard", shard)
-        .withColumn("_slots", bloom_slot_array(F.col("fingerprint")))
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _make_emit_bloom_unseen_event_ttl(ttl_event_seconds * 1000, ts_col),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_BLOOM_EVENT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+
+def dedup_stream(
+    doc_stream: DataFrame,
+    *,
+    n_shards: int | None = None,
+    bloom: bool = False,
+    ttl_seconds: int | None = None,
+    ttl_event_seconds: int | None = None,
+) -> DataFrame:
+    """Streaming dedup: one output row (``DOC_SCHEMA``) per fingerprint
+    not seen before, state persisted across micro-batches via the
+    checkpointed state store. ``doc_stream`` carries ``doc_id`` and
+    ``text``, plus a ``ts`` timestamp when ``ttl_event_seconds`` is set.
+    The options select the variant — see the module docstring's table;
+    an invalid combination raises ``ValueError`` before any plan is
+    built."""
+    if ttl_seconds is not None and (
+        n_shards is not None or bloom or ttl_event_seconds is not None
+    ):
+        raise ValueError(
+            "ttl_seconds (wall-clock horizon) is mutually exclusive with "
+            "n_shards, bloom and ttl_event_seconds"
         )
+    if bloom and n_shards is None:
+        raise ValueError("bloom=True needs n_shards (the filter count)")
+    layout = "bloom" if bloom else "exact" if n_shards is None else "sharded"
+    if ttl_seconds is not None:
+        eviction, ttl_ms = "processing", ttl_seconds * 1000
+    elif ttl_event_seconds is not None:
+        eviction, ttl_ms = "event", ttl_event_seconds * 1000
+    else:
+        eviction, ttl_ms = "none", None
+    make_emit, state_schema, timeout = _VARIANTS[layout, eviction]
+
+    cols = ["doc_id", "text"]
+    if eviction == "event":
+        require_utc_session(doc_stream.sparkSession)
+        cols.append(_TS)
+    plan = doc_stream.select(*cols, content_fingerprint("text").alias("fingerprint"))
+    if eviction == "event":
+        plan = plan.withWatermark(_TS, _WATERMARK_DELAY)
+    key = "fingerprint"
+    if n_shards is not None:
+        key = "_shard"
+        plan = plan.withColumn("_shard", F.abs(F.xxhash64("fingerprint")) % n_shards)
+    if bloom:
+        plan = plan.withColumn("_slots", bloom_slot_array(F.col("fingerprint")))
+    return plan.groupBy(key).applyInPandasWithState(
+        make_emit(ttl_ms),
+        outputStructType=DOC_SCHEMA,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=timeout,
     )
 
 
@@ -646,15 +613,19 @@ def run_dedup_stream(
     max_files_per_trigger: int | None = None,
     shuffle_partitions: int | None = None,
     n_shards: int | None = None,
+    bloom: bool = False,
     ttl_seconds: int | None = None,
     ttl_event_seconds: int | None = None,
     checkpoint_file_checksum: bool | None = None,
 ) -> None:
-    """Drain a landing dir of docs JSONL through the stateful dedup into
-    parquet (availableNow; re-runs resume the fingerprint state). Each
-    micro-batch overwrites its own ``batch_id=N`` subtree so checkpoint
-    retries are idempotent (exactly-once, matching the state-store
-    semantics; a bare append would double-emit on retry).
+    """Drain a landing dir of docs JSONL through ``dedup_stream`` into
+    parquet (availableNow; re-runs resume the dedup state).
+    ``n_shards``, ``bloom``, ``ttl_seconds`` and ``ttl_event_seconds``
+    select the variant as in ``dedup_stream`` (with
+    ``ttl_event_seconds`` the rows carry ``ts``). Each micro-batch
+    overwrites its own ``batch_id=N`` subtree so checkpoint retries are
+    idempotent (exactly-once, matching the state-store semantics; a
+    bare append would double-emit on retry).
 
     ``max_files_per_trigger`` bounds each micro-batch's file intake —
     Trigger.AvailableNow honors source read limits, so setting 1 over an
@@ -681,47 +652,25 @@ def run_dedup_stream(
     restart. Same single-query-per-session assumption as
     ``shuffle_partitions``.
 
-    Raises ``TimeoutError`` when the drain does not reach idle within
-    ``timeout_s``; the query is stopped first."""
+    Raises ``ValueError`` for an invalid variant before the query
+    starts, and ``TimeoutError`` when the drain does not reach idle
+    within ``timeout_s``; the query is stopped first."""
     fields = [
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
     ]
     if ttl_event_seconds is not None:
-        fields.append(T.StructField("ts", T.TimestampType()))
-    src_schema = T.StructType(fields)
-    reader = spark.readStream.schema(src_schema)
+        fields.append(T.StructField(_TS, T.TimestampType()))
+    reader = spark.readStream.schema(T.StructType(fields))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(landing_dir)
-    # n_shards selects the sharded-exact operator, ttl_seconds /
-    # ttl_event_seconds the TTL-evicting ones (wall-clock vs event-time
-    # horizons — see dedup_stream_event_ttl for when each is right);
-    # n_shards COMPOSES with ttl_event_seconds (the firehose shape with
-    # the replay-safe horizon, dedup_stream_sharded_event_ttl);
-    # ttl_seconds composes with nothing. All-None keeps per-fingerprint
-    # NoTimeout state. All combinations pinned by tests.
-    if ttl_seconds is not None and (
-        n_shards is not None or ttl_event_seconds is not None
-    ):
-        raise ValueError(
-            "ttl_seconds (wall-clock horizon) is mutually exclusive with "
-            "n_shards and ttl_event_seconds"
-        )
-    if n_shards is not None and ttl_event_seconds is not None:
-        deduped = dedup_stream_sharded_event_ttl(
-            stream, "ts", ttl_event_seconds=ttl_event_seconds, n_shards=n_shards
-        )
-    elif n_shards is not None:
-        deduped = dedup_stream_sharded(stream, n_shards=n_shards)
-    elif ttl_seconds is not None:
-        deduped = dedup_stream_ttl(stream, ttl_seconds=ttl_seconds)
-    elif ttl_event_seconds is not None:
-        deduped = dedup_stream_event_ttl(
-            stream, "ts", ttl_event_seconds=ttl_event_seconds
-        )
-    else:
-        deduped = dedup_stream(stream)
+    deduped = dedup_stream(
+        reader.json(landing_dir),
+        n_shards=n_shards,
+        bloom=bloom,
+        ttl_seconds=ttl_seconds,
+        ttl_event_seconds=ttl_event_seconds,
+    )
 
     from ._drain import drain_available_now, drain_confs, make_pair_sink_writer
 
@@ -752,158 +701,23 @@ def run_dedup_stream(
 
 
 # ---------------------------------------------------------------------------
-# Bloom-filter state variant: constant-size state per key-range shard.
+# Built-in counterpart: event-time-bounded dedup via watermark.
 # ---------------------------------------------------------------------------
-BLOOM_BITS = 1 << 15  # 32768 bits = 512 longs per shard
-BLOOM_HASHES = 7
-# Slot-derivation version, persisted IN the state: v1 was md5 15-bit
-# windows (rounds ≤5), v2 is xxhash64+pmod. Bits set under one
-# derivation are meaningless under another, so resuming an old
-# checkpoint must fail LOUDLY — adding this field also changed the
-# state schema, which Spark's state-schema validation rejects at
-# restart for v1-era checkpoints; the in-state check below guards any
-# FUTURE derivation change that happens not to alter the schema.
-_BLOOM_SLOT_VERSION = 2
-
-_BLOOM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("slot_version", T.IntegerType()),
-        T.StructField("bits", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def bloom_slot_array(fingerprint: F.Column | str) -> F.Column:
-    """k bloom bit positions as a JVM ``array<long>`` column: xxhash64 of
-    the fingerprint under k seeds, pmod'd into the bit range. Computed
-    map-side BEFORE the shard shuffle so the Python state function never
-    hashes — it only tests and ORs bits. Deterministic across restarts
-    and engines (xxhash64 is a fixed function of (seed, bytes))."""
-    return F.array(
-        *[
-            F.pmod(F.xxhash64(F.lit(seed), fingerprint), F.lit(BLOOM_BITS))
-            for seed in range(BLOOM_HASHES)
-        ]
-    )
-
-
-def _emit_bloom_unseen(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per key-range shard: emit a row iff its fingerprint's bloom bits
-    are not all set, then set them. State is a FIXED 512-long bit array
-    regardless of how many fingerprints the shard has seen.
-
-    Fully vectorized over the batch (numpy bit ops on the precomputed
-    ``_slots`` column — no per-row Python loop, no hashing here): exact
-    in-batch duplicate fingerprints collapse to their first arrival,
-    survivors are membership-tested against the shard filter in one
-    gather, and the kept rows' bits are OR'd in with one scatter. One
-    deliberate difference from a sequential per-row insert: a unique doc
-    whose slots are jointly covered only by OTHER docs of the SAME batch
-    is kept (sequential would false-positive-drop it) — strictly fewer
-    false positives, same bounded state."""
-    n_words = BLOOM_BITS // 64
-    if state.exists:
-        stored_version = state.get[0]
-        if stored_version != _BLOOM_SLOT_VERSION:
-            raise ValueError(
-                f"bloom state written under slot derivation v{stored_version}, "
-                f"code is v{_BLOOM_SLOT_VERSION}: the persisted bits test "
-                "different positions than this code sets — resuming would "
-                "silently leak duplicates and inflate false positives. "
-                "Start a fresh checkpoint."
-            )
-        # State schema is array<signed long>; reinterpret, don't convert.
-        bits = np.array(state.get[1], dtype=np.int64).view(np.uint64).copy()
-    else:
-        bits = np.zeros(n_words, dtype=np.uint64)
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if not frames:
-        state.update((_BLOOM_SLOT_VERSION, bits.view(np.int64).tolist()))
-        return
-    batch = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    batch = batch[~batch.duplicated("fingerprint")]
-    slots = np.stack(batch["_slots"].to_numpy())  # (n, k)
-    words, offs = slots // 64, (slots % 64).astype(np.uint64)
-    seen = ((bits[words] >> offs) & np.uint64(1)).all(axis=1)
-    kept = batch[~seen]
-    if len(kept):
-        ks = slots[~seen]
-        np.bitwise_or.at(
-            bits, ks // 64, np.uint64(1) << (ks % 64).astype(np.uint64)
-        )
-        state.update((_BLOOM_SLOT_VERSION, bits.view(np.int64).tolist()))
-        yield kept[["doc_id", "text", "fingerprint"]]
-    else:
-        state.update((_BLOOM_SLOT_VERSION, bits.view(np.int64).tolist()))
-
-
-def dedup_stream_bloom(doc_stream: DataFrame, n_shards: int = 64) -> DataFrame:
-    """Streaming exact-dedup with BOUNDED state: fingerprints hash into
-    ``n_shards`` key ranges, each holding one fixed-size bloom filter
-    (512 longs) instead of one state entry per distinct fingerprint —
-    total state is n_shards x 4 KiB forever, the trade being a small
-    false-positive rate (a never-seen doc dropped as duplicate; FP rate
-    ~ (1 - e^{-kn/m})^k per shard, so size n_shards for the expected
-    distinct count). This is the sharded-bloom design the exact-state
-    operator's docstring points to at 100 TB; unlike that operator it
-    keeps NO doc payloads in state at all.
-
-    In-batch duplicates collapse to the FIRST row the shard processes
-    (pandas batch order), not necessarily min doc_id — online arrival
-    semantics; the exact-state operator keeps min-per-batch."""
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
+def dedup_stream_watermarked(
+    doc_stream: DataFrame, ts_col: str, delay: str = "1 hour"
+) -> DataFrame:
+    """The BUILT-IN horizon-bounded dedup, for streams that carry an
+    event-time column: ``withWatermark(ts) + dropDuplicatesWithinWatermark``
+    — state for a fingerprint is evicted once the watermark passes its
+    event time + delay, entirely JVM-side (no Python state function at
+    all; prefer this whenever the data has event time). ``dedup_stream``
+    exists for what it can't express: dedup on CONTENT irrespective of
+    time with unbounded, wall-clock-bounded, sharded-exact, or
+    bloom-bounded state, min-doc_id in-batch selection, and emit-once
+    "first ever seen" semantics rather than "no duplicate within the
+    watermark delay"."""
     return (
-        fingerprinted(doc_stream)
-        .withColumn("_shard", shard)
-        .withColumn("_slots", bloom_slot_array(F.col("fingerprint")))
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _emit_bloom_unseen,
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_BLOOM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        doc_stream.withColumn("fingerprint", content_fingerprint("text"))
+        .withWatermark(ts_col, delay)  # ts_col kept for the watermark
+        .dropDuplicatesWithinWatermark(["fingerprint"])
     )
-
-
-def run_bloom_dedup_stream(
-    spark: Any,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    timeout_s: int = 300,
-    ttl_event_seconds: int | None = None,
-) -> None:
-    """Drain docs JSONL through the bloom-state dedup (availableNow,
-    idempotent batch_id-keyed sink like ``run_dedup_stream``).
-    ``ttl_event_seconds`` selects the generational event-horizon
-    variant (``dedup_stream_bloom_event_ttl``; rows then carry ``ts``)."""
-    fields = [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-    if ttl_event_seconds is not None:
-        fields.append(T.StructField("ts", T.TimestampType()))
-    stream = spark.readStream.schema(T.StructType(fields)).json(landing_dir)
-    if ttl_event_seconds is not None:
-        deduped = dedup_stream_bloom_event_ttl(
-            stream, "ts", ttl_event_seconds=ttl_event_seconds
-        )
-    else:
-        deduped = dedup_stream_bloom(stream)
-
-    from ._drain import drain_available_now, make_pair_sink_writer
-
-    ttl_mode = ttl_event_seconds is not None
-    write_batch = make_pair_sink_writer(out_dir, None, skip_empty=ttl_mode)
-    q = (
-        deduped.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q, timeout_s, ttl=ttl_mode)

@@ -896,7 +896,7 @@ def test_bloom_dedup_across_batches(spark, tmp_path):
     filters; at this scale (far below FP territory) output matches the
     exact-state operator's keep set."""
     from streampro_assignment_etl_spark.streaming.stateful_dedup import (
-        run_bloom_dedup_stream,
+        run_dedup_stream,
     )
 
     landing = tmp_path / "bloom_landing"
@@ -915,7 +915,7 @@ def test_bloom_dedup_across_batches(spark, tmp_path):
         )
         + "\n"
     )
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt)
+    run_dedup_stream(spark, str(landing), out, ckpt, n_shards=64, bloom=True)
     got1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert len(got1) == 3 and 1 in got1 and 3 in got1
     assert len(got1 & {0, 2}) == 1  # dup pair collapsed to one arrival
@@ -930,7 +930,7 @@ def test_bloom_dedup_across_batches(spark, tmp_path):
         )
         + "\n"
     )
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt)
+    run_dedup_stream(spark, str(landing), out, ckpt, n_shards=64, bloom=True)
     got2 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert 11 in got2 and 10 not in got2  # state crossed the restart
 
@@ -1169,6 +1169,62 @@ def test_bloom_state_version_mismatch_fails_loudly():
     )
     with pytest.raises(ValueError, match="slot derivation v1"):
         list(sd._emit_bloom_unseen((0,), iter([batch]), _StubState()))
+
+
+def test_dedup_stream_state_contract(spark, tmp_path):
+    """Checkpoints freeze each dedup variant's grouping key, state
+    schema and timeout mode: a change to any of them makes an existing
+    checkpoint unresumable. Pin all seven on the analyzed plan (no
+    stream started), and pin that invalid option combinations fail
+    before anything runs."""
+    from streampro_assignment_etl_spark.streaming.stateful_dedup import dedup_stream
+
+    active_before = {q.id for q in spark.streams.active}
+    stream = spark.readStream.schema(
+        "doc_id long, text string, ts timestamp"
+    ).json(str(tmp_path))
+    expected = {
+        (): ("fingerprint", "struct<seen:int>", "NoTimeout"),
+        (("ttl_seconds", 60),): (
+            "fingerprint", "struct<seen:int>", "ProcessingTimeTimeout"
+        ),
+        (("ttl_event_seconds", 60),): (
+            "fingerprint", "struct<seen:int,last_ms:bigint>", "EventTimeTimeout"
+        ),
+        (("n_shards", 8),): ("_shard", "struct<fps:array<string>>", "NoTimeout"),
+        (("n_shards", 8), ("ttl_event_seconds", 60)): (
+            "_shard",
+            "struct<fps:array<string>,lasts:array<bigint>>",
+            "EventTimeTimeout",
+        ),
+        (("n_shards", 8), ("bloom", True)): (
+            "_shard", "struct<slot_version:int,bits:array<bigint>>", "NoTimeout"
+        ),
+        (("n_shards", 8), ("bloom", True), ("ttl_event_seconds", 60)): (
+            "_shard",
+            "struct<slot_version:int,gen_start_ms:bigint,"
+            "bits_cur:array<bigint>,bits_prev:array<bigint>>",
+            "EventTimeTimeout",
+        ),
+    }
+    for options, (key, state_type, timeout) in expected.items():
+        node = dedup_stream(stream, **dict(options))._jdf.queryExecution().analyzed()
+        assert node.nodeName() == "FlatMapGroupsInPandasWithState", options
+        keys = node.groupingAttributes()
+        assert [keys.apply(i).name() for i in range(keys.size())] == [key], options
+        assert node.stateType().simpleString() == state_type, options
+        assert node.timeout().toString() == timeout, options
+
+    for options in (
+        {"ttl_seconds": 60, "n_shards": 8},
+        {"ttl_seconds": 60, "bloom": True, "n_shards": 8},
+        {"ttl_seconds": 60, "ttl_event_seconds": 60},
+        {"bloom": True},
+        {"bloom": True, "ttl_event_seconds": 60},
+    ):
+        with pytest.raises(ValueError):
+            dedup_stream(stream, **options)
+    assert {q.id for q in spark.streams.active} == active_before
 
 
 def test_read_update_sink_keeps_latest_batch_per_key(spark, tmp_path):
@@ -2391,16 +2447,14 @@ def test_event_ttl_builders_require_utc_session(spark):
     from streampro_assignment_etl_spark.streaming.fuzzy_dedup import (
         fuzzy_dedup_stream,
     )
-    from streampro_assignment_etl_spark.streaming.stateful_dedup import (
-        dedup_stream_event_ttl,
-    )
+    from streampro_assignment_etl_spark.streaming.stateful_dedup import dedup_stream
 
     df = spark.createDataFrame([(1,)], "x int")  # guard fires pre-plan
     old = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try:
         with pytest.raises(ValueError, match="timeZone=UTC"):
-            dedup_stream_event_ttl(df, "ts", ttl_event_seconds=60)
+            dedup_stream(df, ttl_event_seconds=60)
         with pytest.raises(ValueError, match="timeZone=UTC"):
             fuzzy_dedup_stream(df, ttl_event_seconds=60)
         with pytest.raises(ValueError, match="timeZone=UTC"):
@@ -2613,7 +2667,7 @@ def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
     import os as _os
 
     from streampro_assignment_etl_spark.streaming.stateful_dedup import (
-        run_bloom_dedup_stream,
+        run_dedup_stream,
     )
 
     landing = tmp_path / "bev_landing"
@@ -2629,7 +2683,9 @@ def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
         return sorted(r["doc_id"] for r in spark.read.parquet(o).collect())
 
     write(0, [{"doc_id": 1, "text": "alpha beta gamma", "ts": "2026-01-01T00:00:00"}])
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt, ttl_event_seconds=3600)
+    run_dedup_stream(
+        spark, str(landing), out, ckpt, n_shards=64, bloom=True, ttl_event_seconds=3600
+    )
     assert emitted(out) == [1]
 
     # Duplicate inside the horizon + a watermark-advancer 2.5 h out.
@@ -2637,13 +2693,17 @@ def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
         {"doc_id": 2, "text": "ALPHA  beta gamma", "ts": "2026-01-01T00:10:00"},
         {"doc_id": 3, "text": "delta epsilon", "ts": "2026-01-01T02:30:00"},
     ])
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt, ttl_event_seconds=3600)
+    run_dedup_stream(
+        spark, str(landing), out, ckpt, n_shards=64, bloom=True, ttl_event_seconds=3600
+    )
     assert emitted(out) == [1, 3]  # 2 suppressed by the current filter
 
     # Same content again, with the watermark now ≥ 2·ttl past its
     # insertion band: both generations rotated away → re-admitted.
     write(2, [{"doc_id": 9, "text": "alpha beta  GAMMA", "ts": "2026-01-01T02:35:00"}])
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt, ttl_event_seconds=3600)
+    run_dedup_stream(
+        spark, str(landing), out, ckpt, n_shards=64, bloom=True, ttl_event_seconds=3600
+    )
     assert emitted(out) == [1, 3, 9]
 
     # Surviving shard state is anchored at the current band: visited
