@@ -30,22 +30,15 @@ DEFAULT_CENTROIDS = 16
 DEFAULT_PROBES = 4
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (matches DuckDB list_dot_product
-    accumulation order, so scores are bit-identical cross-engine)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 def _dot_sql(a_sql: str, b_sql: str) -> str:
-    """SQL text of ``dot`` — byte-for-byte the expression the Column
-    form parses to (same fold, same 0.0D seed). One ``F.expr`` parse
-    costs ~1 py4j round trip; building the same tree through the
-    Column higher-order-function API costs ~30 (lambda-variable
-    creation), ~26 ms per ``dot`` on this box (r20 cProfile) — so the
-    per-query-build hot paths (assign/probe/score) use the text twin
-    wherever both inputs are SQL-expressible."""
+    """Sequential-fold dot product as SQL text — the ONE definition of
+    the vector-math fold every similarity path scores with. The
+    left-to-right accumulation from a 0.0D seed is DuckDB's
+    ``list_dot_product`` order, so scores are bit-identical
+    cross-engine (the contract the oracle gate checks). Text, not the
+    Column higher-order-function API: one ``F.expr`` parse costs ~1
+    py4j round trip, the same tree built through Column lambdas ~30
+    (lambda-variable creation, ~26 ms per fold in the r20 cProfile)."""
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> x * y), "
         "0.0D, (acc, x) -> acc + x)"
@@ -53,32 +46,30 @@ def _dot_sql(a_sql: str, b_sql: str) -> str:
 
 
 def _as_double_sql(c: str) -> str:
-    """Text twin of ``_as_double`` (backtick-quoted column name)."""
+    """Column ``c`` cast element-wise to array<double> (backtick-quoted
+    column name)."""
     return f"transform(`{c}`, x -> cast(x as double))"
 
 
 def _norm_sql(v_sql: str) -> str:
-    """Text twin of ``norm``."""
+    """sqrt(``_dot_sql(v, v)``). Hoist it per ROW (not per pair) and
+    candidate scoring drops from three folds to one: ``_cosine_sql``
+    with carried norms is bit-identical to the inline cosine, because
+    the substituted norms are the identical subexpressions."""
     return f"sqrt({_dot_sql(v_sql, v_sql)})"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
-def norm(vec: Column) -> Column:
-    """sqrt(dot(v, v)) with the same sequential fold as ``dot`` — hoist
-    this per ROW (not per pair) and candidate scoring drops from three
-    dot products to one: cosine(a,b) ≡ dot(a,b)/(norm(a)*norm(b))
-    bit-for-bit, because the substituted norms are the identical
-    subexpressions ``cosine`` would evaluate inline."""
-    return F.sqrt(dot(vec, vec))
+def _cosine_sql(a_sql: str, b_sql: str, an_sql: str, bn_sql: str) -> str:
+    """Cosine of ``a`` and ``b`` given their norms (``_norm_sql`` text or
+    the name of a column that carries it)."""
+    return f"{_dot_sql(a_sql, b_sql)} / ({an_sql} * {bn_sql})"
 
 
 def _py_norm(vec: list[float]) -> float:
-    """Driver-side replica of ``norm`` for literal centroids: Python
-    floats are IEEE doubles and the fold order matches ``dot``, so the
-    result is bit-identical to the JVM evaluating the same expression."""
+    """Driver-side replica of ``_norm_sql`` for literal centroids: Python
+    floats are IEEE doubles and the fold order matches ``_dot_sql``, so
+    the result is bit-identical to the JVM evaluating the same
+    expression."""
     import math
 
     acc = 0.0
@@ -86,10 +77,6 @@ def _py_norm(vec: list[float]) -> float:
         x = float(x)
         acc = acc + x * x
     return math.sqrt(acc)
-
-
-def _as_double(c: str) -> Column:
-    return F.transform(F.col(c), lambda x: x.cast("double"))
 
 
 def _finite_positive(c: Column) -> Column:
@@ -111,7 +98,8 @@ def seed_centroids(emb: DataFrame, id_col: str, vec_col: str, n: int) -> DataFra
         emb.orderBy(id_col)
         .limit(n)
         .select(
-            F.col(id_col).alias("centroid_id"), _as_double(vec_col).alias("centroid")
+            F.col(id_col).alias("centroid_id"),
+            F.expr(_as_double_sql(vec_col)).alias("centroid"),
         )
     )
 
@@ -158,7 +146,9 @@ def kmeans_centroids(
 
     from .simhash import token_hash60
 
-    frame = emb.select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
+    frame = emb.select(
+        F.col(id_col).alias("_id"), F.expr(_as_double_sql(vec_col)).alias("_v")
+    )
     hash_key = token_hash60(F.col("_id").cast("string"))
     if sample_pct < 100:
         frame = frame.filter(hash_key % 100 < sample_pct)
@@ -197,21 +187,6 @@ def collect_centroids(centroids: DataFrame) -> CentroidList:
     return [(r["centroid_id"], list(r["centroid"])) for r in centroids.collect()]
 
 
-def _ranked_cells(vec_sql: str, cents: CentroidList, vnorm_sql: str) -> Column:
-    """Array of struct(_ns, cid) sorted so element 1 is the nearest
-    centroid (cosine DESC, centroid_id ASC — `_ns` is the negated
-    cosine, so the natural ascending struct sort gives exactly the
-    ROW_NUMBER ordering the oracle replays; IEEE negation is exact).
-
-    The centroid matrix rides in as nested array literals scored by
-    ONE zip_with lambda — a per-centroid Python loop would inline C
-    copies of the cosine fold (C·3 higher-order nodes + C·dim literal
-    children) and plan compile time, not row work, dominates the query
-    at bench scale. Same floats, same fold order, ~C× smaller tree.
-    Takes SQL expression text (not Columns) — see ``_scored_cells``."""
-    return F.array_sort(_scored_cells(vec_sql, cents, vnorm_sql))
-
-
 def _double_array_sql(xs: list[float]) -> str:
     """SQL literal for array<double>. ``repr`` emits the shortest
     round-trip decimal and Java parses it back to the identical IEEE
@@ -233,8 +208,16 @@ def _double_array_sql(xs: list[float]) -> str:
     return "array(" + ",".join(repr(x) + "D" for x in vals) + ")"
 
 
-def _nested_double_literal(rows: list[list[float]]) -> Column:
-    """``array<array<double>>`` as ONE catalyst ``Literal`` node.
+def _nested_double_literal(
+    rows: list[list[float]], lambda_sql: str | None = None
+) -> Column:
+    """``array<array<double>>`` as ONE catalyst ``Literal`` node — or,
+    with ``lambda_sql`` (SQL text such as ``"(c, i) -> ..."``),
+    ``transform(<that literal>, <lambda_sql>)``: the way a lambda body
+    written with ``_dot_sql`` scores every row of a literal matrix. SQL
+    text cannot hold the binary literal, so the parsed lambda and the
+    literal are joined in one ``ArrayTransform`` node — the same tree
+    ``F.transform`` builds, with no temporary column to prune.
 
     Why not ``F.expr("array(array(...)))"`` (the r19 form) or
     ``F.lit(nested_list)``: the parsed form builds a ~rows·dim-node
@@ -280,26 +263,37 @@ def _nested_double_literal(rows: list[list[float]]) -> Column:
             outer[i] = uad.fromPrimitiveArray(darr)
         gad = jvm.org.apache.spark.sql.catalyst.util.GenericArrayData(outer)
         dt = jvm.org.apache.spark.sql.types.DataType.fromDDL("array<array<double>>")
-        jlit = jvm.org.apache.spark.sql.catalyst.expressions.Literal(gad, dt)
-        jc = jvm.org.apache.spark.sql.classic.ExpressionUtils.column(jlit)
+        node = jvm.org.apache.spark.sql.catalyst.expressions.Literal(gad, dt)
+        if lambda_sql is not None:
+            parser = spark._jsparkSession.sessionState().sqlParser()
+            node = jvm.org.apache.spark.sql.catalyst.expressions.ArrayTransform(
+                node, parser.parseExpression(lambda_sql)
+            )
+        jc = jvm.org.apache.spark.sql.classic.ExpressionUtils.column(node)
         from pyspark.sql.classic.column import Column as _ClassicColumn
 
         return _ClassicColumn(jc)
     except Exception:
         # Catalyst internals moved (or Connect session): same floats
         # through the shortest-repr parse round trip, slower analysis.
-        return F.expr("array(" + ",".join(_double_array_sql(r) for r in vals) + ")")
+        parsed = "array(" + ",".join(_double_array_sql(r) for r in vals) + ")"
+        if lambda_sql is not None:
+            parsed = f"transform({parsed}, {lambda_sql})"
+        return F.expr(parsed)
 
 
 def _scored_cells(vec_sql: str, cents: CentroidList, vnorm_sql: str) -> Column:
-    """Unsorted array of struct(_ns, cid) — struct ordering makes
-    min(array) ≡ first element of the sorted array, so top-1 consumers
+    """Unsorted array of struct(_ns, cid), one per centroid. ``_ns`` is
+    the negated cosine, so the natural ascending struct order ranks
+    cosine DESC, centroid_id ASC — exactly the ROW_NUMBER ordering the
+    oracle replays (IEEE negation is exact). Top-P consumers
+    (``probe_cells``) ``array_sort`` and slice; top-1 consumers
     (``assign_cells``) take ``array_min`` and skip the per-row sort.
 
     ``vnorm_sql`` is the row's own norm hoisted by the caller (computed
     once per row, not once per centroid) and each centroid's norm is
     precomputed on the driver (``_py_norm``, bit-identical fold), so
-    scoring C cells costs C dot products instead of 3C: _ns =
+    scoring C cells costs C ``_dot_sql`` folds instead of 3C: _ns =
     -(dot(v,c)/(vnorm*cnorm)) ≡ -cosine(v,c) bit-for-bit.
 
     Inputs are SQL expression TEXT (column names, backtick-quoted by
@@ -307,28 +301,25 @@ def _scored_cells(vec_sql: str, cents: CentroidList, vnorm_sql: str) -> Column:
     ``Literal`` node (``_nested_double_literal`` — the r19 parsed
     ``array(array(...))`` tree of ~C·dim nodes was re-analyzed at
     every downstream DataFrame op, the residual 0.7–0.8 s of warm plan
-    build r19 measured); the per-centroid norms and ids stay small
-    parsed arrays (C nodes each). The per-centroid arithmetic is the
-    same fold in the same order as r19's zip_with form: transform's
-    (element, index) lambda pairs each centroid vector with its norm
-    and id via ``element_at`` — bit-identical floats, pinned by the
-    oracle gate and the literal round-trip test."""
-    norms = [_py_norm(cvec) for _, cvec in cents]
+    build r19 measured), scored by ONE SQL-text lambda — a
+    per-centroid Python loop would inline C copies of the fold and plan
+    compile time, not row work, would dominate the query. The
+    per-centroid norms and ids stay small parsed arrays (C nodes each).
+    transform's (element, index) lambda pairs each centroid vector with
+    its norm and id via ``element_at`` — bit-identical floats, pinned
+    by the oracle gate and the literal round-trip test."""
     import math
 
+    norms = [_py_norm(cvec) for _, cvec in cents]
     if not all(map(math.isfinite, norms)):
         raise ValueError(f"non-finite centroid norm: {norms}")
-    carr = _nested_double_literal([cvec for _, cvec in cents])
-    cns = F.expr(_double_array_sql(norms))
-    cids = F.expr("array(" + ",".join(str(int(cid)) for cid, _ in cents) + ")")
-    v, vn = F.expr(vec_sql), F.expr(vnorm_sql)
-    one = F.lit(1)
-    return F.transform(
-        carr,
-        lambda cvec, i: F.struct(
-            (-(dot(v, cvec) / (vn * F.element_at(cns, i + one)))).alias("_ns"),
-            F.element_at(cids, i + one).alias("cid"),
-        ),
+    cids = ",".join(str(int(cid)) for cid, _ in cents)
+    return _nested_double_literal(
+        [cvec for _, cvec in cents],
+        "(_c, _i) -> struct("
+        f"-({_dot_sql(vec_sql, '_c')} / ({vnorm_sql} * "
+        f"element_at({_double_array_sql(norms)}, _i + 1))) AS _ns, "
+        f"element_at(array({cids}), _i + 1) AS cid)",
     )
 
 
@@ -405,7 +396,7 @@ def probe_cells(
         F.expr(v_sql).alias("qv"),
         F.expr(_norm_sql(v_sql)).alias("_qn"),
     ).filter(_finite_positive(F.col("_qn")))
-    ranked = F.slice(_ranked_cells("qv", cents, "_qn"), 1, probes)
+    ranked = F.slice(F.array_sort(_scored_cells("qv", cents, "_qn")), 1, probes)
     out = base.select(
         "query_id",
         "qv",
@@ -448,13 +439,12 @@ def ann_topk(
         ),
         "cell",
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    # One dot per pair: both norms ride in from the cell frames
-    # (bit-identical to cosine(qv, cv) — see ``norm``; text twin of the
-    # Column form, one parse instead of ~30 py4j lambda round trips).
+    # One ``_dot_sql`` fold per pair: both norms ride in from the cell
+    # frames (bit-identical to the inline cosine — see ``_norm_sql``).
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        F.expr(f"{_dot_sql('qv', 'cv')} / (_qn * _cn)").alias("cos_sim"),
+        F.expr(_cosine_sql("qv", "cv", "_qn", "_cn")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -505,7 +495,7 @@ def _unpack_pack_column(col):
 def _make_block_pair_scorer(threshold: float):
     """mapInArrow scorer for (ba, bb, pa, pb) block-pair rows: exact
     cosine for every cross pair of the two packs, computed as the same
-    strict left-fold sum as ``dot`` (``np.cumsum`` is a sequential
+    strict left-fold sum as ``_dot_sql`` (``np.cumsum`` is a sequential
     scan, so each pair's accumulation order — and therefore every IEEE
     rounding step — is bit-identical to the JVM fold and to DuckDB's
     list_dot_product). Packs are id-ordered subsets of one cell with
@@ -600,7 +590,7 @@ def near_dup_pairs_cells(
     (``_make_block_pair_scorer``): each vector crosses the Python
     boundary once per block pair instead of once per PAIR, cutting the
     Arrow traffic by ~``block_size``× versus scoring joined pair rows,
-    and the per-pair sum keeps the exact sequential fold ``dot`` uses
+    and the per-pair sum keeps the exact sequential fold ``_dot_sql`` uses
     (r19 rewrite: the previous per-pair interpreted fold was 2 × 64
     lambda evals per candidate — the whole query was ~14.8 s at sf0.1
     against ~3 s for this plan, identical output pinned by
@@ -631,7 +621,7 @@ def near_dup_pairs_cells(
         )
         .filter(_finite_positive(F.col("_n")))  # cosine undefined otherwise
     )
-    ranked = F.slice(_ranked_cells("_v", cents, "_n"), 1, probes)
+    ranked = F.slice(F.array_sort(_scored_cells("_v", cents, "_n")), 1, probes)
     blocked = base.select(
         "_id",
         "_v",
@@ -793,16 +783,17 @@ def hyperplanes(dim: int, n_planes: int = DEFAULT_PLANES) -> list[list[float]]:
     ]
 
 
-def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """SRP-LSH bucket id: bit j = sign(v · w_j), packed little-endian.
-    Each dot is the same sequential fold as ``dot`` (bit-identical to
-    DuckDB's list_dot_product), so bucketing agrees cross-engine."""
-    bucket = F.lit(0)
-    for j, w in enumerate(planes):
-        warr = F.expr(_double_array_sql(w))
-        d = dot(vec, warr)
-        bucket = bucket + F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
+def srp_bucket(vec_sql: str, planes: list[list[float]]) -> Column:
+    """SRP-LSH bucket id of the array<double> SQL expression ``vec_sql``:
+    bit j = sign(v · w_j), packed little-endian, as ONE parsed sum.
+    Each plane dot is ``_dot_sql`` (bit-identical to DuckDB's
+    list_dot_product), so bucketing agrees cross-engine."""
+    terms = "".join(
+        f" + CASE WHEN {_dot_sql(vec_sql, _double_array_sql(w))} >= 0"
+        f" THEN {1 << j} ELSE 0 END"
+        for j, w in enumerate(planes)
+    )
+    return F.expr("0" + terms)
 
 
 def lsh_topk(
@@ -826,24 +817,25 @@ def lsh_topk(
     at the cost of a recall curve set by plane count, not probe count.
     """
     planes = hyperplanes(dim, n_planes)
+    v_sql = _as_double_sql(vec_col)
     corp = (
         emb.select(
             F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("cv"),
-            norm(_as_double(vec_col)).alias("_cn"),
+            F.expr(v_sql).alias("cv"),
+            F.expr(_norm_sql(v_sql)).alias("_cn"),
         )
         .filter(_finite_positive(F.col("_cn")))  # cosine undefined otherwise
-        .withColumn("bucket", srp_bucket(F.col("cv"), planes))
+        .withColumn("bucket", srp_bucket("cv", planes))
     )
     probes = [0] + [1 << j for j in range(n_planes)]
     q = (
         queries.select(
             F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("qv"),
-            norm(_as_double(vec_col)).alias("_qn"),
+            F.expr(v_sql).alias("qv"),
+            F.expr(_norm_sql(v_sql)).alias("_qn"),
         )
         .filter(_finite_positive(F.col("_qn")))
-        .withColumn("_b", srp_bucket(F.col("qv"), planes))
+        .withColumn("_b", srp_bucket("qv", planes))
         .select(
             "query_id",
             "qv",
@@ -857,9 +849,7 @@ def lsh_topk(
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        (dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))).alias(
-            "cos_sim"
-        ),
+        F.expr(_cosine_sql("qv", "cv", "_qn", "_cn")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -886,19 +876,12 @@ def pq_codebooks(
     id-seeding trick as ``seed_centroids``, so the DuckDB oracle can
     replay the identical codebooks (``pq_codebooks_kmeans`` is the
     trained form for real corpora). Bounded collect by contract
-    (n_codes rows). Non-finite rows are dropped BEFORE the id cut,
-    mirroring ``_collect_finite_queries``: one poison embed row among
+    (n_codes rows). Non-finite rows are dropped BEFORE the id cut
+    (``_finite_rows``, the query side's guard): one poison embed row among
     the seeds would otherwise flow into ``_lut_int`` where
     ``floor(nan)`` kills every PQ query batch (the oracles apply the
     same isfinite guard to their seed CTE)."""
-    v = _as_double(vec_col)
-    rows = (
-        emb.select(F.col(id_col), v)
-        .filter(_finite_vec(v))
-        .orderBy(id_col)
-        .limit(n_codes)
-        .collect()
-    )
+    rows = _finite_rows(emb, id_col, vec_col).orderBy(id_col).limit(n_codes).collect()
     if len(rows) < n_codes:
         # Loud, like the kmeans trainer — a silently undersized codebook
         # degrades every downstream LUT/encode with no diagnostic.
@@ -951,10 +934,9 @@ def pq_codebooks_kmeans(
 
     from .simhash import token_hash60
 
-    v = _as_double(vec_col)
-    frame = emb.select(F.col(id_col).alias("_id"), v.alias("_v")).filter(
-        _finite_vec(F.col("_v"))
-    )
+    frame = emb.select(
+        F.col(id_col).alias("_id"), F.expr(_as_double_sql(vec_col)).alias("_v")
+    ).filter(_finite_vec("_v"))
     hash_key = token_hash60(F.col("_id").cast("string"))
     if sample_pct < 100:
         frame = frame.filter(hash_key % 100 < sample_pct)
@@ -1009,22 +991,23 @@ def _long_array_sql(xs: list[int]) -> str:
     return "array(" + ",".join(f"{int(x)}L" for x in xs) + ")"
 
 
-def _finite_vec(c: Column) -> Column:
-    """True iff every component is finite: NaN/inf poison both the
+def _finite_vec(v_sql: str) -> Column:
+    """True iff every component of the array<double> SQL expression
+    ``v_sql`` is finite: NaN/inf poison both the
     argmin encode (NaN distances) and the driver-side LUT build
     (int(NaN) raises). Zero vectors stay — PQ distance is L2, where a
     zero vector is perfectly valid (unlike the cosine paths' 
     ``_finite_positive``)."""
-    n = norm(c)
+    n = F.expr(_norm_sql(v_sql))
     return ~F.isnan(n) & (n < F.lit(float("inf")))
 
 
-def _collect_finite_queries(queries: DataFrame, id_col: str, vec_col: str):
-    """Driver-collected (id, double-vector) rows with NaN/inf rows
-    DROPPED map-side — a failed embed job's poison row must not kill
-    the whole query batch in ``_lut_int``."""
-    v = _as_double(vec_col)
-    return queries.select(F.col(id_col), v).filter(_finite_vec(v)).collect()
+def _finite_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, double-vector) rows with NaN/inf rows DROPPED map-side — a
+    failed embed job's poison row must not kill the whole query batch
+    in ``_lut_int``."""
+    v_sql = _as_double_sql(vec_col)
+    return df.select(F.col(id_col), F.expr(v_sql)).filter(_finite_vec(v_sql))
 
 
 def pq_encode(
@@ -1038,11 +1021,12 @@ def pq_encode(
     lets a 10^9-vector index live in memory.
 
     The per-subspace distance array is ONE ``transform`` lambda over a
-    nested array literal (the ``_ranked_cells`` technique): inlining
+    nested array literal (the ``_scored_cells`` technique: one
+    ``_nested_double_literal`` scored by a SQL-text lambda): inlining
     n_codes copies of the expansion-form tree made plan compile time —
     not row work — the dominant cost of a PQ query batch. The distance
     is the EXPANSION form ⟨s,s⟩ − 2⟨s,w⟩ + ⟨w,w⟩ with sequential
-    left-to-right ``dot`` folds — the exact operation sequence DuckDB's
+    left-to-right ``_dot_sql`` folds — the exact operation sequence DuckDB's
     ``list_dot_product`` arithmetic runs, so both engines produce
     bit-identical doubles and the argmin tie-break never diverges
     ((s−w)² summed is algebraically equal but NOT float-equal; pinned
@@ -1051,22 +1035,16 @@ def pq_encode(
     # Preserve the input's other columns (minus the raw vector): the
     # composed IVF-PQ feeds assign_cells output through here so cell +
     # codes come out of ONE map-side projection with no glue join.
-    out = emb.withColumn("_v", _as_double(vec_col)).drop(vec_col)
-
-    def expansion_dist(s):
-        # Closure factory, not default-arg capture: a 2-param lambda
-        # would be read by transform as (element, index).
-        def f(w):
-            return dot(s, s) - F.lit(2.0) * dot(s, w) + dot(w, w)
-
-        return f
-
+    out = emb.withColumn("_v", F.expr(_as_double_sql(vec_col))).drop(vec_col)
     for j, cb in enumerate(codebooks):
-        s = F.slice(F.col("_v"), j * sub + 1, sub)
+        s = f"slice(_v, {j * sub + 1}, {sub})"
         # One Literal node per codebook (same analysis-cost rationale
         # and bit-exact binary transfer as _scored_cells).
-        cws = _nested_double_literal([w for _, w in cb])
-        d = F.transform(cws, expansion_dist(s))
+        d = _nested_double_literal(
+            [w for _, w in cb],
+            f"_w -> {_dot_sql(s, s)} - 2.0D * {_dot_sql(s, '_w')}"
+            f" + {_dot_sql('_w', '_w')}",
+        )
         out = out.withColumn(
             f"_code{j}", (F.array_position(d, F.array_min(d)) - 1).cast("int")
         )
@@ -1127,7 +1105,7 @@ def pq_topk(
     cbs = codebooks or pq_codebooks(emb, id_col, vec_col, m, n_codes)
     sub = len(cbs[0][0][1])
     enc = pq_encode(emb, cbs, id_col, vec_col)
-    qrows = _collect_finite_queries(queries, id_col, vec_col)
+    qrows = _finite_rows(queries, id_col, vec_col).collect()
     if not qrows:
         # F.array() of zero structs types as VOID and breaks the
         # explode; an empty (or all-poison) query set is a valid call
@@ -1185,17 +1163,15 @@ def _exact_rerank(
 ) -> DataFrame:
     """Exact integer-micro L2 re-rank of a (query_id, neighbor_id)
     shortlist — the ONE copy of the rerank bit-parity contract (same
-    expansion form + integerization as the LUTs; ``dot`` is the
+    expansion form + integerization as the LUTs; ``_dot_sql`` is the
     sequential-fold primitive the DuckDB oracle replays)."""
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_qv")
+    v_sql = _as_double_sql(vec_col)
+    qv = queries.select(F.col(id_col).alias("query_id"), F.expr(v_sql).alias("_qv"))
+    cv = emb.select(F.col(id_col).alias("neighbor_id"), F.expr(v_sql).alias("_cv"))
+    l2sq_micro = F.expr(
+        f"cast(floor(({_dot_sql('_qv', '_qv')} - 2.0D * {_dot_sql('_qv', '_cv')}"
+        f" + {_dot_sql('_cv', '_cv')}) * 1000000 + 0.5D) as bigint)"
     )
-    cv = emb.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_cv"))
-    qv_, cv_ = F.col("_qv"), F.col("_cv")
-    l2sq_micro = F.floor(
-        (dot(qv_, qv_) - F.lit(2.0) * dot(qv_, cv_) + dot(cv_, cv_)) * 1_000_000
-        + F.lit(0.5)
-    ).cast("long")
     exact = (
         short.join(qv, "query_id")
         .join(cv, "neighbor_id")
@@ -1306,8 +1282,8 @@ def _adc_shortlist(
     shortlist: int,
 ) -> DataFrame | None:
     """Relational ADC over a candidate frame carrying PQ codes — THE
-    one copy of the melt → LUT-join → integer-sum → top-``shortlist``
-    stage, shared by the in-memory composed ``ivfpq_topk`` and the
+    one copy of the per-query LUT build feeding the melt → LUT-join →
+    integer-sum → top-``shortlist`` stage (``_adc_top``), shared by the in-memory composed ``ivfpq_topk`` and the
     persisted-index ``ann_index.ivfpq_topk_over_index`` so the two
     serving shapes are bit-equal by construction. ``cand`` columns:
     (query_id, neighbor_id, _code0.._code{m-1}). Returns the
@@ -1315,22 +1291,7 @@ def _adc_shortlist(
     empty/all-poison (callers emit their typed empty frame)."""
     m = len(cbs)
     sub = len(cbs[0][0][1])
-    melted = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"), F.col(f"_code{j}").alias("code")
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("_s"),
-    ).select("query_id", "neighbor_id", "_s.j", "_s.code")
-
-    qrows = _collect_finite_queries(queries, id_col, vec_col)
+    qrows = _finite_rows(queries, id_col, vec_col).collect()
     if not qrows:
         return None
     lut_rows = []
@@ -1338,11 +1299,41 @@ def _adc_shortlist(
         for j in range(m):
             row = _lut_int(list(qv[j * sub : (j + 1) * sub]), cbs[j])
             lut_rows.extend((int(qid), j, c, d) for c, d in enumerate(row))
-    lut_df = cand.sparkSession.createDataFrame(
-        lut_rows, "query_id long, j int, code int, d long"
+    return _adc_top(
+        cand, ["query_id", "neighbor_id"], lut_rows, "query_id long", m, shortlist
     )
+
+
+def _adc_top(
+    cand: DataFrame,
+    keys: list[str],
+    lut_rows: list[tuple],
+    lut_key_ddl: str,
+    m: int,
+    shortlist: int,
+) -> DataFrame:
+    """Shared tail of both relational ADC stages: melt each candidate's
+    m codes into (``keys``, j, code) rows, broadcast-join the integer
+    LUT rows (``lut_key_ddl`` columns, then j, code, d) on every key
+    but neighbor_id, sum per (query, neighbor), and keep the
+    ``shortlist`` smallest per query (ties → neighbor_id)."""
+    melted = cand.select(
+        *keys,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(j).alias("j"), F.col(f"_code{j}").alias("code"))
+                    for j in range(m)
+                ]
+            )
+        ).alias("_s"),
+    ).select(*keys, "_s.j", "_s.code")
+    lut_df = cand.sparkSession.createDataFrame(
+        lut_rows, f"{lut_key_ddl}, j int, code int, d long"
+    )
+    on = [k for k in keys if k != "neighbor_id"] + ["j", "code"]
     adc = (
-        melted.join(F.broadcast(lut_df), ["query_id", "j", "code"])
+        melted.join(F.broadcast(lut_df), on)
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adc_dist"))
     )
@@ -1382,7 +1373,7 @@ def with_residual(
     return assigned.withColumn(
         out_col,
         F.zip_with(
-            _as_double(vec_col),
+            F.expr(_as_double_sql(vec_col)),
             F.element_at(cent_map, F.col(cell_col)),
             lambda x, c: x - c,
         ),
@@ -1461,20 +1452,6 @@ def _adc_shortlist_residual(
     m = len(cbs)
     sub = len(cbs[0][0][1])
     cent_by_id = {int(cid): v for cid, v in cents}
-    melted = cand.select(
-        "query_id",
-        "cell",
-        "neighbor_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("j"), F.col(f"_code{j}").alias("code"))
-                    for j in range(m)
-                ]
-            )
-        ).alias("_s"),
-    ).select("query_id", "cell", "neighbor_id", "_s.j", "_s.code")
-
     lut_rows = []
     for r in probed_rows:
         qid, qv, cell = int(r["query_id"]), r["qv"], int(r["cell"])
@@ -1483,19 +1460,13 @@ def _adc_shortlist_residual(
         for j in range(m):
             row = _lut_int(qr[j * sub : (j + 1) * sub], cbs[j])
             lut_rows.extend((qid, cell, j, code, d) for code, d in enumerate(row))
-    lut_df = cand.sparkSession.createDataFrame(
-        lut_rows, "query_id long, cell int, j int, code int, d long"
-    )
-    adc = (
-        melted.join(F.broadcast(lut_df), ["query_id", "cell", "j", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adc_dist"))
-    )
-    ws = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("_rn", F.row_number().over(ws))
-        .filter(F.col("_rn") <= shortlist)
-        .select("query_id", "neighbor_id")
+    return _adc_top(
+        cand,
+        ["query_id", "cell", "neighbor_id"],
+        lut_rows,
+        "query_id long, cell int",
+        m,
+        shortlist,
     )
 
 

@@ -96,20 +96,29 @@ def semantic_expand_ids(
     deliberately when a takedown genuinely is that large. One
     evaluation total: the r14 form probed with limit+count and then
     collected again, running the corpus×seeds scan — the expensive
-    part of the path — twice (ADVICE r14 #5)."""
-    from .similarity import cosine
+    part of the path — twice (ADVICE r14 #5).
+
+    Vectors whose norm is zero, NaN or infinite are dropped on BOTH
+    sides, like every other similarity path: cosine is undefined for
+    them, a NaN cosine passes ``>= threshold`` under Spark's NaN
+    ordering (the poison row would be erased), and under ANSI mode one
+    zero vector anywhere in the corpus fails the whole expansion with
+    DIVIDE_BY_ZERO. A dropped seed still appears in the result."""
+    from .similarity import _as_double_sql, _cosine_sql, _finite_positive, _norm_sql
 
     seeds = sorted({int(i) for i in seed_ids})
     if not seeds:
         raise ValueError("semantic_expand_ids: empty seed id list")
-    seed_rows = emb.filter(F.col(id_col).isin(seeds)).select(
-        F.col(id_col).alias("_seed_id"), F.col(vec_col).alias("_seed_vec")
+    v_sql = _as_double_sql(vec_col)
+    corpus = emb.select(
+        F.col(id_col), F.expr(v_sql).alias("_v"), F.expr(_norm_sql(v_sql)).alias("_n")
+    ).filter(_finite_positive(F.col("_n")))
+    seed_rows = corpus.filter(F.col(id_col).isin(seeds)).select(
+        F.col("_v").alias("_sv"), F.col("_n").alias("_sn")
     )
     matched = (
-        emb.crossJoin(F.broadcast(seed_rows))
-        .filter(
-            cosine(F.col(vec_col), F.col("_seed_vec")) >= F.lit(float(threshold))
-        )
+        corpus.crossJoin(F.broadcast(seed_rows))
+        .filter(F.expr(_cosine_sql("_v", "_sv", "_n", "_sn")) >= float(threshold))
         .select(id_col)
         .distinct()
     )

@@ -15,6 +15,7 @@ from .inspect import (
     parquet_scan_count,
     plan_string,
     pushed_filters,
+    py4j_calls,
     read_schema_columns,
     shuffle_count,
 )
@@ -24,6 +25,7 @@ __all__ = [
     "parquet_scan_count",
     "plan_string",
     "pushed_filters",
+    "py4j_calls",
     "read_schema_columns",
     "shuffle_count",
 ]

@@ -3,14 +3,17 @@
 Parses ``explain``-style output of a DataFrame's executed plan. String
 parsing is the stable public surface Spark offers for this (the plan
 tree itself is JVM-private); the regexes target the formatted-explain
-labels that have been stable across Spark 3.x/4.x.
+labels that have been stable across Spark 3.x/4.x. ``py4j_calls``
+counts the driver-to-JVM round trips a plan build costs.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_string(df: DataFrame, formatted: bool = True) -> str:
@@ -60,3 +63,27 @@ def read_schema_columns(df: DataFrame) -> list[list[str]]:
         cols = [c.split(":")[0].strip() for c in m.group(1).split(",") if c.strip()]
         scans.append(cols)
     return scans
+
+
+@contextmanager
+def py4j_calls(spark: SparkSession) -> Iterator[dict[str, int]]:
+    """Count the py4j commands the driver sends to the JVM inside the
+    block: the plan-build cost of a query builder, where every Column
+    or lambda-variable construction is a socket round trip. ``m``
+    commands (object releases the Python GC sends at arbitrary times)
+    are left out so identical builds count the same. Yields
+    ``{"calls": n}``, final once the block exits."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counts = {"calls": 0}
+
+    def counting_send(command, *args, **kwargs):
+        if not command.startswith("m"):
+            counts["calls"] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        yield counts
+    finally:
+        client.send_command = send

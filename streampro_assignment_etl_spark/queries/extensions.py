@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import content_fingerprint, rolling_hash
+from ..operators.similarity import _as_double_sql, _cosine_sql, _norm_sql
 from ..sources.testdata import load_table
 from .catalog import query
 
@@ -264,25 +265,19 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    as_double = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
+    v = _as_double_sql("embedding")
     # Norms hoisted per ROW (one dot per pair instead of three) —
     # bit-identical to the inline cosine the oracle computes; the
     # substitution property is fuzz-pinned in tests/test_properties.py.
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
-        as_double("embedding").alias("qv"),
-        F.sqrt(dot(as_double("embedding"), as_double("embedding"))).alias("_qn"),
+        F.expr(v).alias("qv"),
+        F.expr(_norm_sql(v)).alias("_qn"),
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
-        as_double("embedding").alias("cv"),
-        F.sqrt(dot(as_double("embedding"), as_double("embedding"))).alias("_cn"),
+        F.expr(v).alias("cv"),
+        F.expr(_norm_sql(v)).alias("_cn"),
     )
 
     scored = (
@@ -292,9 +287,7 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))).alias(
-                "cos_sim"
-            ),
+            F.expr(_cosine_sql("qv", "cv", "_qn", "_cn")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -352,30 +345,16 @@ def takedown_expansion_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     one groupBy on vec_id, one KB-frame join — the same shape as the
     expansion itself, read-only."""
     emb = load_table(spark, sf_dir, "embeddings")
-    as_double = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
+    v = _as_double_sql("embedding")
     s = emb.filter(F.col("vec_id") < 3).select(
-        as_double("embedding").alias("sv"),
-        F.sqrt(dot(as_double("embedding"), as_double("embedding"))).alias("_sn"),
+        F.expr(v).alias("sv"), F.expr(_norm_sql(v)).alias("_sn")
     )
     c = emb.select(
-        "vec_id",
-        as_double("embedding").alias("cv"),
-        F.sqrt(dot(as_double("embedding"), as_double("embedding"))).alias("_cn"),
+        "vec_id", F.expr(v).alias("cv"), F.expr(_norm_sql(v)).alias("_cn")
     )
     cos_max = (
         c.crossJoin(F.broadcast(s))
-        .select(
-            "vec_id",
-            (dot(F.col("sv"), F.col("cv")) / (F.col("_sn") * F.col("_cn"))).alias(
-                "cos"
-            ),
-        )
+        .select("vec_id", F.expr(_cosine_sql("sv", "cv", "_sn", "_cn")).alias("cos"))
         .groupBy("vec_id")
         .agg(F.max("cos").alias("cos_max"))
     )
@@ -445,24 +424,18 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    as_double = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-
+    v = _as_double_sql("embedding")
     q = emb.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("qlabel"),
-        as_double("embedding").alias("qv"),
-        F.sqrt(dot(as_double("embedding"), as_double("embedding"))).alias("_qn"),
+        F.expr(v).alias("qv"),
+        F.expr(_norm_sql(v)).alias("_qn"),
     )
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("nlabel"),
-        as_double("embedding").alias("cv"),
-        F.sqrt(dot(as_double("embedding"), as_double("embedding"))).alias("_cn"),
+        F.expr(v).alias("cv"),
+        F.expr(_norm_sql(v)).alias("_cn"),
     )
     scored = (
         F.broadcast(q)
@@ -473,9 +446,7 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qlabel",
             "neighbor_id",
             "nlabel",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))).alias(
-                "cos_sim"
-            ),
+            F.expr(_cosine_sql("qv", "cv", "_qn", "_cn")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))

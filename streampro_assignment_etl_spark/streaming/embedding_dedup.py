@@ -69,10 +69,10 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..operators.similarity import (
     DEFAULT_PLANES,
-    _as_double,
+    _as_double_sql,
     _finite_positive,
+    _norm_sql,
     hyperplanes,
-    norm,
     srp_bucket,
 )
 
@@ -208,7 +208,7 @@ def embedding_dedup_stream(
 
         require_utc_session(vec_stream.sparkSession)
     planes = hyperplanes(dim, n_planes)
-    v = _as_double("embedding")
+    v_sql = _as_double_sql("embedding")
     # The dim guard lives INSIDE the load-bearing norm expression (an
     # unused assert_true column would be pruned by Catalyst and never
     # evaluated): a mis-sized row hits raise_error instead of letting
@@ -217,7 +217,8 @@ def embedding_dedup_stream(
     # it flows to norm(NULL)=NULL and the finite filter drops it, same
     # as before; only a genuinely mis-sized ARRAY fails the query.
     guarded_norm = F.when(
-        F.col("embedding").isNull() | (F.size("embedding") == dim), norm(v)
+        F.col("embedding").isNull() | (F.size("embedding") == dim),
+        F.expr(_norm_sql(v_sql)),
     ).otherwise(
         F.raise_error(
             F.concat(
@@ -232,12 +233,14 @@ def embedding_dedup_stream(
         src = src.withWatermark(ts_col, watermark_delay)
         ts_cols = [ts_col]
     base = (
-        src.select("vec_id", v.alias("_v"), guarded_norm.alias("_n"), *ts_cols)
+        src.select(
+            "vec_id", F.expr(v_sql).alias("_v"), guarded_norm.alias("_n"), *ts_cols
+        )
         .filter(_finite_positive(F.col("_n")))
         .select(
             "vec_id",
             F.transform(F.col("_v"), lambda x: x / F.col("_n")).alias("unit"),
-            srp_bucket(F.col("_v"), planes).alias("_b"),
+            srp_bucket("_v", planes).alias("_b"),
             *ts_cols,
         )
     )

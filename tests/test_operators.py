@@ -21,6 +21,14 @@ def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
+def _cosine(a: str, b: str):
+    """Inline cosine of two array<double> columns through the SQL-text
+    vector kernel (norms computed in place, not carried)."""
+    return F.expr(
+        similarity._cosine_sql(a, b, similarity._norm_sql(a), similarity._norm_sql(b))
+    )
+
+
 # -- MinHash ---------------------------------------------------------------
 def test_word_shingles(spark):
     df = spark.createDataFrame([("a b c d",), ("x y",)], ["text"])
@@ -359,7 +367,7 @@ def test_ann_recall_vs_brute_force(emb, spark):
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", similarity.cosine(F.col("qv"), F.col("cv")).alias("s"))
+        .select("qid", "nid", _cosine("qv", "cv").alias("s"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("s"), F.asc("nid"))
     truth = {
@@ -624,7 +632,7 @@ def test_near_dup_cells_recall_and_planted_exactness(emb, spark):
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     a = emb.select(F.col("vec_id").alias("vec_a"), v.alias("va"))
     b = emb.select(F.col("vec_id").alias("vec_b"), v.alias("vb"))
-    cos = similarity.cosine(F.col("va"), F.col("vb"))
+    cos = _cosine("va", "vb")
     truth = {
         (r["vec_a"], r["vec_b"])
         for r in a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -716,6 +724,33 @@ def test_nested_double_literal_bit_exact_and_single_node(spark):
     assert "array(" not in analyzed, analyzed
 
 
+def test_nested_double_literal_lambda_matches_parsed_transform(spark):
+    """``_nested_double_literal(rows, lambda_sql)`` scores each literal
+    row with a SQL-text lambda: bit-identical to the parsed
+    ``transform(array(array(...)), lambda)`` fallback, and the matrix
+    still enters the plan as one literal node."""
+    import struct as _struct
+
+    from streampro_assignment_etl_spark.operators.similarity import (
+        _dot_sql,
+        _double_array_sql,
+        _nested_double_literal,
+    )
+
+    rows = [[0.1, 1 / 3, -2.5], [5e-324, 0.30000000000000004, 7.0]]
+    lam = f"(r, i) -> {_dot_sql('v', 'r')} + i"
+    vdf = spark.createDataFrame([([0.7, -1 / 7, 3.0],)], "v array<double>")
+    fast_df = vdf.select(_nested_double_literal(rows, lam).alias("s"))
+    parsed = ",".join(_double_array_sql(r) for r in rows)
+    slow_df = vdf.select(F.expr(f"transform(array({parsed}), {lam})").alias("s"))
+    fast, slow = fast_df.first()["s"], slow_df.first()["s"]
+    assert [_struct.pack("<d", x) for x in fast] == [
+        _struct.pack("<d", x) for x in slow
+    ]
+    analyzed = fast_df._jdf.queryExecution().analyzed().toString()
+    assert "array(" not in analyzed, analyzed
+
+
 def test_near_dup_cells_block_size_invariant(emb):
     """The r19 block-GEMM scorer's results are ``block_size``-invariant
     — from the degenerate one-vector-per-block packing through
@@ -767,7 +802,7 @@ def test_near_dup_cells_hot_cell_deskewed(spark):
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     a = emb.select(F.col("vec_id").alias("vec_a"), v.alias("va"))
     b = emb.select(F.col("vec_id").alias("vec_b"), v.alias("vb"))
-    cos = similarity.cosine(F.col("va"), F.col("vb"))
+    cos = _cosine("va", "vb")
     truth = {
         (r["vec_a"], r["vec_b"], r["cos_sim"])
         for r in a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -1709,6 +1744,31 @@ def test_ivfpq_delete_crash_recovery_restores_stranded_partition(
     assert os.path.isdir(foreign_old) and os.path.isdir(foreign_stage)
     shutil.rmtree(foreign_old)
     shutil.rmtree(foreign_stage)
+
+
+def test_semantic_expand_ids_drops_unusable_vectors(spark):
+    """A corpus vector with a NaN component or an all-zero vector has no
+    cosine. Under Spark's NaN ordering a NaN cosine passes
+    ``>= threshold`` (the poison row would be erased from every
+    surface), and under ANSI mode one zero vector anywhere in the
+    corpus fails the whole expansion with DIVIDE_BY_ZERO. Both are
+    dropped on both sides; a seed with an unusable vector still comes
+    back, like a seed that is absent from the corpus."""
+    from streampro_assignment_etl_spark.operators.takedown import semantic_expand_ids
+
+    rows = [
+        (1, [1.0, 0.0]),
+        (2, [0.99, 0.1]),  # near-copy of 1
+        (3, [0.0, 1.0]),
+        (4, [float("nan"), 1.0]),
+    ]
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame(rows, schema)
+    assert semantic_expand_ids(emb, [1], threshold=0.9) == [1, 2]
+
+    with_zero = spark.createDataFrame(rows + [(5, [0.0, 0.0])], schema)
+    assert semantic_expand_ids(with_zero, [1], threshold=0.9) == [1, 2]
+    assert semantic_expand_ids(with_zero, [1, 4, 5], threshold=0.9) == [1, 2, 4, 5]
 
 
 @pytest.mark.fast

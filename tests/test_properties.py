@@ -265,27 +265,28 @@ def test_norm_carried_cosine_is_bit_identical(spark, vectors):
     import struct
 
     from streampro_assignment_etl_spark.operators.similarity import (
+        _cosine_sql,
+        _norm_sql,
         _py_norm,
-        cosine,
-        dot,
-        norm,
     )
 
     rows = [(i, v) for i, v in enumerate(vectors)]
-    df = spark.createDataFrame(rows, ["id", "v"]).selectExpr(
-        "id", "cast(v as array<double>) v"
+    df = (
+        spark.createDataFrame(rows, ["id", "v"])
+        .selectExpr("id", "cast(v as array<double>) v")
+        .selectExpr("*", f"{_norm_sql('v')} n")
     )
-    a = df.selectExpr("id id_a", "v va")
-    b = df.selectExpr("id id_b", "v vb")
+    a = df.selectExpr("id id_a", "v va", "n na")
+    b = df.selectExpr("id id_b", "v vb", "n nb")
     pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     got = pairs.select(
         "id_a",
         "id_b",
-        cosine(F.col("va"), F.col("vb")).alias("inline"),
-        (dot(F.col("va"), F.col("vb")) / (norm(F.col("va")) * norm(F.col("vb")))).alias(
-            "carried"
+        F.expr(_cosine_sql("va", "vb", _norm_sql("va"), _norm_sql("vb"))).alias(
+            "inline"
         ),
-        norm(F.col("va")).alias("na"),
+        F.expr(_cosine_sql("va", "vb", "na", "nb")).alias("carried"),
+        "na",
     ).collect()
     bits = lambda x: struct.pack(">d", x)  # noqa: E731
     for r in got:

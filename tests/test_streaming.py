@@ -2176,7 +2176,7 @@ def test_fuzzy_dedup_ttl_evicts_idle_cohorts(spark, tmp_path):
     # batch has no data for doc 1's band buckets, so their expired
     # timeouts fire there (a near-dup arriving directly would land IN
     # those buckets and refresh instead of evicting — last-seen TTL
-    # semantics, same as dedup_stream_ttl).
+    # semantics, same as dedup_stream(..., ttl_seconds=…)).
     (landing / "b.jsonl").write_text(json.dumps({"doc_id": 2, "text": other}) + "\n")
     run_fuzzy_dedup_stream(spark, str(landing), out, ckpt, ttl_seconds=2)
     # Near-dups of doc 1 arrive: they pair with each other (in-batch)
@@ -2197,8 +2197,8 @@ def test_fuzzy_dedup_ttl_evicts_idle_cohorts(spark, tmp_path):
 def test_event_ttl_dedup_evicts_by_event_time_and_replays_deterministically(
     spark, tmp_path
 ):
-    """EVENT-time TTL dedup (dedup_stream_event_ttl): the horizon is
-    watermark time, so eviction is driven by the DATA — no sleeps
+    """EVENT-time TTL dedup (dedup_stream(..., ttl_event_seconds=…)):
+    the horizon is watermark time, so eviction is driven by the DATA — no sleeps
     anywhere in this test — and a backfill replay of the same files
     converges to the same surviving state whether it runs as one
     micro-batch or many. 1 h horizon: a duplicate 10 min later is
@@ -2575,8 +2575,8 @@ def test_index_append_stream_bit_equal_and_replay_idempotent(spark, tmp_path):
 
 @pytest.mark.slow
 def test_sharded_event_ttl_matches_fine_grained_and_replays(spark, tmp_path):
-    """dedup_stream_sharded_event_ttl (the firehose layout with the
-    replay-safe horizon — round-10 watch item): same emitted sequence
+    """dedup_stream(..., n_shards=…, ttl_event_seconds=…) (the firehose
+    layout with the replay-safe horizon — round-10 watch item): same emitted sequence
     as the fine-grained event-TTL operator on the same files
     (duplicate inside the horizon suppressed, re-admitted once the
     watermark passes its horizon, min-doc_id-per-batch), and the LIVE
@@ -2636,8 +2636,9 @@ def test_sharded_event_ttl_matches_fine_grained_and_replays(spark, tmp_path):
         spark, str(landing), out_m, ckpt_m,
         max_files_per_trigger=1, n_shards=4, ttl_event_seconds=3600,
     )
-    # Same admit/suppress sequence as dedup_stream_event_ttl's pin: 2
-    # suppressed inside the horizon, 9 re-admitted past it.
+    # Same admit/suppress sequence as the
+    # dedup_stream(..., ttl_event_seconds=…) pin: 2 suppressed inside
+    # the horizon, 9 re-admitted past it.
     assert emitted(out_m) == [1, 3, 7, 9]
 
     # One-batch replay on a fresh checkpoint: identical live view.
@@ -2657,8 +2658,8 @@ def test_sharded_event_ttl_matches_fine_grained_and_replays(spark, tmp_path):
 
 @pytest.mark.slow
 def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
-    """dedup_stream_bloom_event_ttl: O(1)-state horizon via rotating
-    generations — a duplicate within the ttl of stream time is
+    """run_dedup_stream(..., bloom=True, ttl_event_seconds=…): O(1)-state
+    horizon via rotating generations — a duplicate within the ttl of stream time is
     suppressed, the same content is re-admitted once the watermark has
     advanced 2·ttl past it (both filters rotated away), and every
     surviving shard's state is re-anchored at the current band (stale

@@ -6,8 +6,11 @@ Times every REGISTRY entry at $SPARK_GRAFT_SF_DIR (default sf0.1) with
 the noop sink (guide §1.4 — computes every column of every row, no
 count-pruning), median of $SPARK_GRAFT_BENCH_REPS (default 3), labeled
 jobs (guide §1.5). Prints one JSON line per query plus a sorted summary
-so the expensive tail is visible. This is the profiling harness, NOT
-the driver bench — bench.py's methodology is unchanged.
+so the expensive tail is visible. Each line splits the median into
+``build_s`` (the builder call: plan construction plus any eager
+collects) and ``exec_s`` (the noop write), and counts the builder's
+driver-to-JVM round trips as ``py4j_calls``. This is the profiling
+harness, not bench.py, whose methodology is unchanged.
 
 Usage: python tools/profile_registry.py [--only name1,name2] [--skip-streaming]
 """
@@ -23,6 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from streampro_assignment_etl_spark.plans import py4j_calls  # noqa: E402
 from streampro_assignment_etl_spark.queries import REGISTRY, release_persisted  # noqa: E402
 from streampro_assignment_etl_spark.session import get_spark  # noqa: E402
 
@@ -54,17 +58,29 @@ def main() -> None:
     errors: dict[str, str] = {}
     for name in names:
         spec = REGISTRY[name]
-        samples = []
+        samples, builds, calls = [], [], []
         try:
             for _ in range(args.reps):
                 spark.sparkContext.setJobDescription(f"profile: {name}")
                 t0 = time.perf_counter()
-                spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                with py4j_calls(spark) as n:
+                    df = spec.builder(spark, sf_dir)
+                builds.append(time.perf_counter() - t0)
+                calls.append(n["calls"])
+                df.write.format("noop").mode("overwrite").save()
                 samples.append(time.perf_counter() - t0)
                 release_persisted()
             spark.sparkContext.setJobDescription(None)
             results[name] = round(statistics.median(samples), 3)
-            print(json.dumps({"query": name, "sec": results[name], "samples": [round(s, 3) for s in samples]}), flush=True)
+            execs = [s - b for s, b in zip(samples, builds)]
+            print(json.dumps({
+                "query": name,
+                "sec": results[name],
+                "samples": [round(s, 3) for s in samples],
+                "build_s": round(statistics.median(builds), 3),
+                "exec_s": round(statistics.median(execs), 3),
+                "py4j_calls": int(statistics.median(calls)),
+            }), flush=True)
         except Exception as e:  # noqa: BLE001 — record and keep sweeping
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             print(json.dumps({"query": name, "err": errors[name]}), flush=True)
