@@ -58,10 +58,11 @@ Concurrency contract: one writer at a time (appends, compactions,
 rebuilds). That contract is FENCED, not honor-system: every commit
 carries an epoch, and a writer whose loaded epoch is no longer current
 at commit time aborts loudly instead of silently dropping the other
-writer's work (``_commit_manifest``). Detection, not locking — a true
-simultaneous double-commit at the same epoch is still last-listed-wins,
-but any sequential interleave (the realistic cron-overlap failure)
-raises.
+writer's work (``pipeline.object_swap.commit_epoch``, the fence the
+fuzzy dedup store commits through too). Detection, not locking — a
+true simultaneous double-commit at the same epoch is still
+last-listed-wins, but any sequential interleave (the realistic
+cron-overlap failure) raises.
 
 ≙ reference: none (north-star extension; the reference has no vector
 surface). Composition/citations: similarity.py's IVF/PQ operators.
@@ -70,22 +71,25 @@ surface). Composition/citations: similarity.py's IVF/PQ operators.
 from __future__ import annotations
 
 import json
-import logging
 import math
-import re
 import time
-import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_log = logging.getLogger(__name__)
-
-# every lifecycle token this module mints is uuid4().hex[:12]; recovery
-# sweeps key on the shape so foreign dot-dirs are never parsed or swept
-_TOKEN_RE = re.compile(r"[0-9a-f]{12}")
-
+from ..pipeline.object_swap import (
+    TOMBSTONE_PREFIX,
+    commit_epoch,
+    list_epochs,
+    new_token,
+    read_latest,
+    recover_swap_dirs,
+    swap_dir,
+    sweep_superseded,
+    write_tombstone,
+)
+from ..pipeline.writers import _pafs_base
 from .similarity import (
     CentroidList,
     PQCodebooks,
@@ -106,7 +110,6 @@ ENCODED_DIR = "encoded"  # legacy fixed layout; new builds use encoded-<token>
 MODEL_DIR = "model"  # legacy Spark-text manifest dir (pre-epoch layout)
 MODEL_PREFIX = "model-"  # epoch-fenced manifests: model-<epoch:012d>-<token>
 BASE_INGEST = "base"  # the build's (and compaction's) ingest partition value
-TOMBSTONE_PREFIX = "tombstone-"  # takedown id lists: tombstone-<token>.json
 _MODEL_VERSION = 1
 # Below this many ids the serve-path exclusion is a literal NOT IN
 # (codegen-friendly); above it, a broadcast anti-join (the bloom
@@ -139,121 +142,68 @@ class IvfPqModel:
     # under the wrong LUT convention — serving reads it, never guesses.
     residual: bool = False
 
+    def to_doc(self) -> dict:
+        """The manifest document (``model-<epoch>-<token>.json``).
+        Python ``json`` round-trips finite doubles bit-exactly, so a
+        reloaded model probes/encodes on the identical floats."""
+        cents, cbs = self.centroids, self.codebooks
+        occ = self.occupancy
+        return {
+            "version": _MODEL_VERSION,
+            "epoch": self.epoch,
+            "residual": self.residual,
+            "n_centroids": len(cents),
+            "m": len(cbs),
+            "n_codes": len(cbs[0]),
+            "dim": self.dim,
+            "encoded_dir": self.encoded_dir,
+            "occupancy": [[int(c), int(n)] for c, n in occ] if occ is not None else None,
+            "centroids": [[int(cid), list(map(float, v))] for cid, v in cents],
+            "codebooks": [
+                [[int(code), list(map(float, w))] for code, w in book] for book in cbs
+            ],
+        }
 
-def _fs_base(path: str):
-    """(pyarrow filesystem, base path) for a local path or FS URI.
-    Delegates to the ONE shared seam (``pipeline.writers._pafs_base``
-    — also used by the fuzzy store via this re-export and by
-    ``delete_where``): Hadoop's ``s3a`` scheme maps to pyarrow's
-    ``s3`` so the parquet half of the index can be written through
-    Spark under s3a while this metadata seam talks to the same bucket
-    natively, and local paths resolve to absolute so listings slice
-    cleanly. One implementation means a hardening lands everywhere
-    instead of in whichever copy was touched last."""
-    from ..pipeline.writers import _pafs_base
-
-    return _pafs_base(path)
-
-
-def _list_manifests(fs, base) -> list[tuple[int, str]]:
-    """Committed manifest artifacts under ``base`` as (epoch, filename),
-    ascending. A manifest is a single ``model-<epoch>-<token>.json``
-    FILE whose commit is a rename from a ``.tmp-`` staging name — a
-    crash mid-write leaves only staging debris that readers never
-    match and ``expire_ivfpq_snapshots`` eventually sweeps."""
-    import pyarrow.fs as pafs
-
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(base, recursive=False))
-    except (FileNotFoundError, OSError):
-        return []
-    out = []
-    for i in infos:
-        if (
-            i.type != pafs.FileType.File
-            or not i.base_name.startswith(MODEL_PREFIX)
-            or not i.base_name.endswith(".json")
-        ):
-            continue
-        try:
-            epoch = int(i.base_name[len(MODEL_PREFIX) :].split("-", 1)[0])
-        except ValueError:
-            continue
-        out.append((epoch, i.base_name))
-    return sorted(out)
-
-
-def _current_epoch(path: str) -> int:
-    """Latest committed epoch at ``path`` (0 = no epoch-fenced manifest
-    yet — fresh index, or a legacy Spark-text ``model/`` dir)."""
-    fs, base = _fs_base(path)
-    manifests = _list_manifests(fs, base)
-    return manifests[-1][0] if manifests else 0
-
-
-def _commit_manifest(
-    spark: SparkSession,
-    path: str,
-    cents: CentroidList,
-    cbs: PQCodebooks,
-    dim: int,
-    encoded_dir: str,
-    occupancy: tuple[tuple[int, int], ...] | None,
-    expect_epoch: int,
-    residual: bool = False,
-) -> int:
-    """Fence, then commit: write the manifest as a FRESH write-once
-    ``model-<epoch+1>-<token>.json`` artifact — staged under a
-    ``.tmp-`` name and COMMITTED BY RENAME (atomic on local/HDFS; a
-    single server-side copy PUT on S3), so readers listing the path
-    see either the old manifest set or old+new, never a torn or
-    missing one. The fence re-reads the current epoch immediately
-    before writing and aborts loudly if it moved since the caller
-    loaded the model — the append-vs-compact interleave that would
-    otherwise silently drop the earlier writer's rows. Returns the
-    committed epoch.
-
-    Deliberately NOT a Spark job: a ~45 KB JSON document through the
-    job machinery costs ~1 s of constant overhead per commit (measured;
-    it made incremental appends read 0.6× of a BUILD instead of the
-    true batch-linear 0.2×), while this pyarrow write is milliseconds
-    on the same local/S3/HDFS seam the retention sweep already uses."""
-    current = _current_epoch(path)
-    if current != expect_epoch:
-        raise RuntimeError(
-            f"index at {path} moved from epoch {expect_epoch} to {current} "
-            f"since this writer loaded it — a concurrent append/compact/"
-            f"rebuild committed first. Aborting instead of overwriting its "
-            f"work; reload and retry. (Single-writer contract; this fence "
-            f"detects sequential interleaves, it is not a lock.)"
+    @classmethod
+    def from_doc(cls, doc: dict) -> "IvfPqModel":
+        """Inverse of ``to_doc``; loud on version mismatch — codes
+        written under one model are meaningless probed under another
+        (same failure mode as the bloom slot-version guard)."""
+        if doc.get("version") != _MODEL_VERSION:
+            raise ValueError(
+                f"index model version {doc.get('version')} != code version "
+                f"{_MODEL_VERSION}: rebuild the index"
+            )
+        occ = doc.get("occupancy")
+        return cls(
+            centroids=[(int(cid), [float(x) for x in v]) for cid, v in doc["centroids"]],
+            codebooks=[
+                [(int(code), [float(x) for x in w]) for code, w in book]
+                for book in doc["codebooks"]
+            ],
+            n_centroids=int(doc["n_centroids"]),
+            m=int(doc["m"]),
+            n_codes=int(doc["n_codes"]),
+            dim=int(doc["dim"]),
+            # Pre-snapshot manifests (no key) point at the legacy fixed dir.
+            encoded_dir=str(doc.get("encoded_dir", ENCODED_DIR)),
+            epoch=int(doc.get("epoch", 0)),
+            occupancy=tuple((int(c), int(n)) for c, n in occ)
+            if occ is not None
+            else None,
+            residual=bool(doc.get("residual", False)),
         )
-    new_epoch = expect_epoch + 1
-    doc = {
-        "version": _MODEL_VERSION,
-        "epoch": new_epoch,
-        "residual": residual,
-        "n_centroids": len(cents),
-        "m": len(cbs),
-        "n_codes": len(cbs[0]),
-        "dim": dim,
-        "encoded_dir": encoded_dir,
-        "occupancy": [[int(c), int(n)] for c, n in occupancy]
-        if occupancy is not None
-        else None,
-        "centroids": [[int(cid), list(map(float, v))] for cid, v in cents],
-        "codebooks": [
-            [[int(code), list(map(float, w))] for code, w in book] for book in cbs
-        ],
-    }
-    token = uuid.uuid4().hex[:12]
-    name = f"{MODEL_PREFIX}{new_epoch:012d}-{token}.json"
-    fs, base = _fs_base(path)
-    fs.create_dir(base, recursive=True)
-    staging = f"{base}/.tmp-{token}"
-    with fs.open_output_stream(staging) as out:
-        out.write(json.dumps(doc).encode())
-    fs.move(staging, f"{base}/{name}")
-    return new_epoch
+
+
+def _commit(path: str, model: IvfPqModel, **changes) -> IvfPqModel:
+    """Fence on ``model.epoch`` and commit the next-epoch manifest of
+    ``model`` with ``changes`` applied; returns the committed model.
+    The shared fence raises if another writer committed since ``model``
+    was loaded — the append-vs-compact interleave that would otherwise
+    silently drop the earlier writer's rows."""
+    new = replace(model, epoch=model.epoch + 1, **changes)
+    commit_epoch(path, MODEL_PREFIX, new.to_doc(), model.epoch)
+    return new
 
 
 def _snapshot_occupancy(spark: SparkSession, snapshot: str) -> tuple[tuple[int, int], ...]:
@@ -318,7 +268,8 @@ def build_ivfpq_index(
     caller's corpus-of-record must not resurrect deleted vectors (and
     would otherwise pin their tombstones unretirable forever). The
     re-consent path is deleting the tombstone file first."""
-    expect_epoch = _current_epoch(path)
+    manifests = list_epochs(*_pafs_base(path), MODEL_PREFIX)
+    expect_epoch = manifests[-1][0] if manifests else 0
     tomb = tombstoned_ids(path)
     if tomb:
         emb = _without_ids(emb, id_col, tomb)
@@ -337,7 +288,7 @@ def build_ivfpq_index(
     m = len(cbs)
     n_codes = len(cbs[0])
     dim = len(cents[0][1])
-    encoded_dir = f"{ENCODED_DIR}-{uuid.uuid4().hex[:12]}"
+    encoded_dir = f"{ENCODED_DIR}-{new_token()}"
 
     enc = _encode_batch(emb, cents, cbs, id_col, vec_col, residual).select(
         F.col(id_col).alias("neighbor_id"),
@@ -349,29 +300,20 @@ def build_ivfpq_index(
         f"{path}/{encoded_dir}"
     )
     occ = _snapshot_occupancy(emb.sparkSession, f"{path}/{encoded_dir}")
-
-    epoch = _commit_manifest(
-        emb.sparkSession,
+    return _commit(
         path,
-        cents,
-        cbs,
-        dim,
-        encoded_dir,
-        occ,
-        expect_epoch,
-        residual=residual,
-    )
-    return IvfPqModel(
-        centroids=cents,
-        codebooks=cbs,
-        n_centroids=len(cents),
-        m=m,
-        n_codes=n_codes,
-        dim=dim,
-        encoded_dir=encoded_dir,
-        epoch=epoch,
-        occupancy=occ,
-        residual=residual,
+        IvfPqModel(
+            centroids=cents,
+            codebooks=cbs,
+            n_centroids=len(cents),
+            m=m,
+            n_codes=n_codes,
+            dim=dim,
+            encoded_dir=encoded_dir,
+            epoch=expect_epoch,
+            occupancy=occ,
+            residual=residual,
+        ),
     )
 
 
@@ -419,7 +361,7 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> IvfPqModel:
     enc = spark.read.parquet(f"{path}/{model.encoded_dir}")
     if "ingest" in enc.columns:
         enc = enc.drop("ingest")
-    new_dir = f"{ENCODED_DIR}-{uuid.uuid4().hex[:12]}"
+    new_dir = f"{ENCODED_DIR}-{new_token()}"
     (
         enc.withColumn("ingest", F.lit(BASE_INGEST))
         .repartition("cell")
@@ -427,29 +369,7 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> IvfPqModel:
         .partitionBy("ingest", "cell")
         .parquet(f"{path}/{new_dir}")
     )
-    epoch = _commit_manifest(
-        spark,
-        path,
-        model.centroids,
-        model.codebooks,
-        model.dim,
-        new_dir,
-        model.occupancy,
-        expect_epoch=model.epoch,
-        residual=model.residual,
-    )
-    return IvfPqModel(
-        centroids=model.centroids,
-        codebooks=model.codebooks,
-        n_centroids=model.n_centroids,
-        m=model.m,
-        n_codes=model.n_codes,
-        dim=model.dim,
-        encoded_dir=new_dir,
-        epoch=epoch,
-        occupancy=model.occupancy,
-        residual=model.residual,
-    )
+    return _commit(path, model, encoded_dir=new_dir)
 
 
 def expire_ivfpq_snapshots(
@@ -477,33 +397,22 @@ def expire_ivfpq_snapshots(
     import pyarrow.fs as pafs
 
     model = load_ivfpq_model(spark, path)
-    fs, base = _fs_base(path)
-    current_manifest = {name for _, name in _list_manifests(fs, base)[-1:]}
-    now = time.time()
-    infos = fs.get_file_info(pafs.FileSelector(base, recursive=False))
-    doomed_dirs, doomed_files = [], []
-    for i in infos:
+    fs, base = _pafs_base(path)
+    current_manifest = {name for _, name in list_epochs(fs, base, MODEL_PREFIX)[-1:]}
+
+    def superseded(i) -> bool:
         n = i.base_name
         if i.type == pafs.FileType.Directory:
-            superseded = (
+            return (
                 (n.startswith(f"{ENCODED_DIR}-") or n == ENCODED_DIR)
                 and n != model.encoded_dir
             ) or (n == MODEL_DIR and bool(current_manifest))
-            bucket = doomed_dirs
-        else:
-            superseded = (
-                n.startswith(MODEL_PREFIX) and n not in current_manifest
-            ) or n.startswith(".tmp-")  # crashed manifest stagings
-            bucket = doomed_files
-        if not superseded:
-            continue
-        if i.mtime is not None and now - i.mtime.timestamp() < min_age_seconds:
-            continue  # inside the grace horizon — maybe still read/written
-        bucket.append(n)
-    for d in doomed_dirs:
-        fs.delete_dir(f"{base}/{d}")
-    for f in doomed_files:
-        fs.delete_file(f"{base}/{f}")
+        return (
+            n.startswith(MODEL_PREFIX) and n not in current_manifest
+        ) or n.startswith(".tmp-")  # crashed manifest stagings
+
+    expired = sweep_superseded(fs, base, superseded, min_age_seconds)
+    now = time.time()
     # Tombstone retirement: a takedown id list can go once (a) it is
     # older than the grace horizon — no reader on a pre-delete snapshot
     # can still be in flight, because those snapshots were themselves
@@ -543,13 +452,13 @@ def expire_ivfpq_snapshots(
             if not present.intersection(ids):
                 fs.delete_file(f"{base}/{name}")
                 retired.append(name)
-    return sorted(doomed_dirs + doomed_files + retired)
+    return sorted(expired + retired)
 
 
 def _list_tombstones(fs, base) -> list[str]:
     """Committed ``tombstone-<token>.json`` filenames under ``base``,
-    sorted — same write-once rename-committed artifact rule as the
-    manifests (staged ``.tmp-`` debris is invisible)."""
+    sorted (``object_swap.write_tombstone`` commits them by rename, so
+    staged ``.tmp-`` debris is invisible)."""
     import pyarrow.fs as pafs
 
     try:
@@ -574,7 +483,7 @@ def tombstoned_ids(path: str) -> list[int]:
     """Union of every tombstone file's ids at ``path``, sorted. Small
     by contract (takedown requests, not bulk deletes — the retention
     sweep retires files once their ids are physically gone)."""
-    fs, base = _fs_base(path)
+    fs, base = _pafs_base(path)
     out: set[int] = set()
     for name in _list_tombstones(fs, base):
         out.update(_read_tombstone(fs, base, name))
@@ -617,65 +526,19 @@ def recover_index_delete(path: str) -> dict:
     ``{"restored", "dropped", "staging_swept"}`` (partition dirs /
     staging names, sorted). Same single-writer maintenance contract as
     every other lifecycle op — do not run concurrently with a live
-    delete."""
-    import pyarrow.fs as pafs
-
-    fs, base = _fs_base(path)
-    manifests = _list_manifests(fs, base)
-    if manifests:
-        _, name = manifests[-1]
-        with fs.open_input_stream(f"{base}/{name}") as f:
-            enc_dir = str(
-                json.loads(f.read().decode()).get("encoded_dir", ENCODED_DIR)
-            )
-    else:
-        enc_dir = ENCODED_DIR
-    snap_base = f"{base}/{enc_dir}"
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(snap_base, recursive=False))
-    except (FileNotFoundError, OSError):
-        return {"restored": [], "dropped": [], "staging_swept": []}
-    restored, dropped, swept = [], [], []
-    for i in infos:
-        if i.type != pafs.FileType.Directory:
-            continue
-        n = i.base_name
-        if n.startswith(".del-old-"):
-            # .del-old-<12-hex-token>-<dir with '/' encoded as '~'>.
-            # Validate the token BEFORE parsing (ADVICE r15 #4): a
-            # foreign dot-dir that merely shares the prefix (hand-made
-            # debris, another tool's artifact) used to crash the whole
-            # recovery on IndexError — skip it loudly instead; it is
-            # not ours to restore or delete.
-            tok, _, part_enc = n[len(".del-old-") :].partition("-")
-            if not (_TOKEN_RE.fullmatch(tok) and part_enc):
-                _log.warning(
-                    "recover_index_delete: skipping %r — not a "
-                    "delete-swap artifact (token is not 12-hex)", n
-                )
-                continue
-            part = part_enc.replace("~", "/")
-            live = f"{snap_base}/{part}"
-            if fs.get_file_info(live).type == pafs.FileType.NotFound:
-                parent = live.rsplit("/", 1)[0]
-                if parent != snap_base:
-                    fs.create_dir(parent, recursive=True)
-                fs.move(f"{snap_base}/{n}", live)
-                restored.append(part)
-            else:
-                fs.delete_dir(f"{snap_base}/{n}")
-                dropped.append(part)
-        elif n.startswith(".del-"):
-            # staging roots are exactly .del-<12-hex>; anything else
-            # under the prefix is foreign — never silently destroy it
-            if not _TOKEN_RE.fullmatch(n[len(".del-") :]):
-                _log.warning(
-                    "recover_index_delete: skipping %r — not a "
-                    "delete staging root (token is not 12-hex)", n
-                )
-                continue
-            fs.delete_dir(f"{snap_base}/{n}")
-            swept.append(n)
+    delete. The sweep itself is ``object_swap.recover_swap_dirs``
+    (partition ``a/b`` encoded as ``a~b`` in the trash name)."""
+    fs, base = _pafs_base(path)
+    doc = read_latest(fs, base, MODEL_PREFIX)
+    enc_dir = str(doc.get("encoded_dir", ENCODED_DIR)) if doc else ENCODED_DIR
+    restored, dropped, swept = recover_swap_dirs(
+        fs,
+        f"{base}/{enc_dir}",
+        ".del-old-",
+        ".del-",
+        lambda enc: enc.replace("~", "/"),
+        stage_named=False,
+    )
     return {
         "restored": sorted(restored),
         "dropped": sorted(dropped),
@@ -735,25 +598,17 @@ def delete_from_ivfpq_index(
     "partitions_rewritten", "epoch", "tombstone"}``.
 
     ≙ reference: none (north-star lifecycle; VERDICT r13 #1)."""
-    import pyarrow.fs as pafs
-
     ids = sorted({int(i) for i in ids})
     if not ids:
         raise ValueError("delete_from_ivfpq_index: empty id list")
     recover_index_delete(path)  # restore any crashed prior swap first
     model = load_ivfpq_model(spark, path)
-    fs, base = _fs_base(path)
-    tomb_name = None
-    if keep_tombstone:
-        token = uuid.uuid4().hex[:12]
-        tomb_name = f"{TOMBSTONE_PREFIX}{token}.json"
-        staging = f"{base}/.tmp-{token}"
-        with fs.open_output_stream(staging) as out:
-            out.write(json.dumps({"ids": ids}).encode())
-        fs.move(staging, f"{base}/{tomb_name}")
+    tomb_name = (
+        write_tombstone(*_pafs_base(path), ids, new_token()) if keep_tombstone else None
+    )
 
     snap = f"{path}/{model.encoded_dir}"
-    snap_fs, snap_base = _fs_base(snap)
+    snap_fs, snap_base = _pafs_base(snap)
     enc = spark.read.parquet(snap)
     legacy = "ingest" not in enc.columns
     keys = ["cell"] if legacy else ["ingest", "cell"]
@@ -789,7 +644,7 @@ def delete_from_ivfpq_index(
     # Rewrite the survivors of ONLY the affected partitions into a
     # dot-staging dir inside the snapshot (invisible to partition
     # discovery), preserving the partition columns via basePath.
-    token2 = uuid.uuid4().hex[:12]
+    token2 = new_token()
     stage_root = f"{snap}/.del-{token2}"
     keep = _without_ids(
         spark.read.option("basePath", snap).parquet(
@@ -800,28 +655,17 @@ def delete_from_ivfpq_index(
     )
     keep.write.mode("overwrite").partitionBy(*keys).parquet(stage_root)
     for d in part_dirs:
-        real = f"{snap_base}/{d}"
-        stag = f"{snap_base}/.del-{token2}/{d}"
-        trash = f"{snap_base}/.del-old-{token2}-{d.replace('/', '~')}"
-        snap_fs.move(real, trash)
-        if snap_fs.get_file_info(stag).type != pafs.FileType.NotFound:
-            snap_fs.move(stag, real)
-        snap_fs.delete_dir(trash)
+        swap_dir(
+            snap_fs,
+            f"{snap_base}/{d}",
+            f"{snap_base}/.del-{token2}/{d}",
+            f"{snap_base}/.del-old-{token2}-{d.replace('/', '~')}",
+        )
     try:
         snap_fs.delete_dir(f"{snap_base}/.del-{token2}")
     except (FileNotFoundError, OSError):
         pass  # staging root already consumed entirely by the swaps
-    epoch = _commit_manifest(
-        spark,
-        path,
-        model.centroids,
-        model.codebooks,
-        model.dim,
-        model.encoded_dir,
-        model.occupancy,
-        expect_epoch=model.epoch,
-        residual=model.residual,
-    )
+    epoch = _commit(path, model).epoch
     return {
         "requested": len(ids),
         "deleted_rows": deleted_rows,
@@ -884,7 +728,7 @@ def append_to_ivfpq_index(
     if tomb:
         new_emb = _without_ids(new_emb, id_col, tomb)
     if ingest_id is None:
-        ingest_id = f"u{uuid.uuid4().hex[:12]}"
+        ingest_id = f"u{new_token()}"
     if ingest_id == BASE_INGEST:
         raise ValueError(
             f"ingest_id {BASE_INGEST!r} is reserved for the build's subtree"
@@ -893,7 +737,7 @@ def append_to_ivfpq_index(
     # landing an ingest=<id> subtree next to them would give the
     # partition discovery two different depths and break every
     # subsequent read — refuse loudly instead.
-    fs, base = _fs_base(f"{path}/{model.encoded_dir}")
+    fs, base = _pafs_base(f"{path}/{model.encoded_dir}")
     top = fs.get_file_info(pafs.FileSelector(base, recursive=False))
     if any(
         i.type == pafs.FileType.Directory and i.base_name.startswith("cell=")
@@ -913,29 +757,7 @@ def append_to_ivfpq_index(
     enc.write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/{model.encoded_dir}/ingest={ingest_id}"
     )
-    epoch = _commit_manifest(
-        spark,
-        path,
-        model.centroids,
-        model.codebooks,
-        model.dim,
-        model.encoded_dir,
-        model.occupancy,
-        expect_epoch=model.epoch,
-        residual=model.residual,
-    )
-    return IvfPqModel(
-        centroids=model.centroids,
-        codebooks=model.codebooks,
-        n_centroids=model.n_centroids,
-        m=model.m,
-        n_codes=model.n_codes,
-        dim=model.dim,
-        encoded_dir=model.encoded_dir,
-        epoch=epoch,
-        occupancy=model.occupancy,
-        residual=model.residual,
-    )
+    return _commit(path, model)
 
 
 def load_ivfpq_model(spark: SparkSession, path: str) -> IvfPqModel:
@@ -945,13 +767,8 @@ def load_ivfpq_model(spark: SparkSession, path: str) -> IvfPqModel:
     for pre-epoch indexes). Loud on version mismatch — codes written
     under one model are meaningless probed under another (same failure
     mode as the bloom slot-version guard)."""
-    fs, base = _fs_base(path)
-    manifests = _list_manifests(fs, base)
-    if manifests:
-        _, name = manifests[-1]
-        with fs.open_input_stream(f"{base}/{name}") as f:
-            doc = json.loads(f.read().decode())
-    else:
+    doc = read_latest(*_pafs_base(path), MODEL_PREFIX)
+    if doc is None:
         # Legacy layout: Spark-text dir at <path>/model (epoch 0).
         rows = spark.read.text(f"{path}/{MODEL_DIR}").collect()
         if len(rows) != 1:
@@ -959,30 +776,7 @@ def load_ivfpq_model(spark: SparkSession, path: str) -> IvfPqModel:
                 f"index model at {path} has {len(rows)} manifest rows, expected 1"
             )
         doc = json.loads(rows[0]["value"])
-    if doc.get("version") != _MODEL_VERSION:
-        raise ValueError(
-            f"index model version {doc.get('version')} != code version "
-            f"{_MODEL_VERSION}: rebuild the index"
-        )
-    occ = doc.get("occupancy")
-    return IvfPqModel(
-        centroids=[(int(cid), [float(x) for x in v]) for cid, v in doc["centroids"]],
-        codebooks=[
-            [(int(code), [float(x) for x in w]) for code, w in book]
-            for book in doc["codebooks"]
-        ],
-        n_centroids=int(doc["n_centroids"]),
-        m=int(doc["m"]),
-        n_codes=int(doc["n_codes"]),
-        dim=int(doc["dim"]),
-        # Pre-snapshot manifests (no key) point at the legacy fixed dir.
-        encoded_dir=str(doc.get("encoded_dir", ENCODED_DIR)),
-        epoch=int(doc.get("epoch", 0)),
-        occupancy=tuple((int(c), int(n)) for c, n in occ)
-        if occ is not None
-        else None,
-        residual=bool(doc.get("residual", False)),
-    )
+    return IvfPqModel.from_doc(doc)
 
 
 def index_occupancy_stats(spark: SparkSession, path: str) -> dict:

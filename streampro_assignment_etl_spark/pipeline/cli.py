@@ -1072,11 +1072,14 @@ def main(argv: list[str] | None = None, lake_factory=None) -> int:
             # one — a probe under mismatched geometry silently matched
             # nothing). Epoch 1, pointing at the legacy fixed dirs the
             # subtree writes above landed in.
-            fsi._commit_store_manifest(
+            from .object_swap import commit_epoch
+
+            epoch = fsi._store_epoch(fsi.load_store_manifest(args.path))
+            commit_epoch(
                 args.path,
-                fsi._store_dirs(None),
-                geom,
-                expect_epoch=fsi._store_epoch(fsi.load_store_manifest(args.path)),
+                fsi.MANIFEST_PREFIX,
+                fsi._manifest_doc(fsi._store_dirs(None), geom, epoch + 1),
+                epoch,
             )
             print(_json.dumps({"action": "build-store", "signed": docs.count()}))
             return 0

@@ -33,6 +33,22 @@ claim each other's debris:
 * SCD-2 bucketed sink: ``.scd2-manifest-`` / ``.scd2-`` / ``.scd2stage-``
 * remote compaction:    ``.cmp-manifest-``  / ``.cmp-``  / ``.cmpstage-``
 
+The same module owns the lifecycle seam the persisted ANN index
+(``operators/ann_index.py``) and the fuzzy-dedup signature store
+(``streaming/fuzzy_store_ingest.py``) share, so a hardening lands in
+both at once:
+
+* ``new_token`` / ``is_token`` — the one 12-hex token every staging,
+  trash and manifest name embeds;
+* ``put_json`` — stage-then-rename for every JSON artifact;
+* ``list_epochs`` / ``read_latest`` / ``commit_epoch`` — the
+  rename-committed, epoch-fenced ``<prefix><epoch:012d>-<token>.json``
+  manifest log;
+* ``write_tombstone``, ``swap_dir`` and ``recover_swap_dirs`` — the
+  takedown's id list, its live → trash → staged dir swap, and the
+  crash-recovery sweep over that swap's debris;
+* ``sweep_superseded`` — the min-age-graced retention sweep.
+
 ≙ reference: none (the reference's MinIO client has no transactional
 write path; this is the 100 TB lifecycle layer).
 """
@@ -42,6 +58,7 @@ from __future__ import annotations
 import json
 import logging
 import re
+import uuid
 
 from .writers import _fs_exists, _pafs_base, _recursive_infos
 
@@ -50,6 +67,8 @@ _log = logging.getLogger(__name__)
 # every swap token is uuid4().hex[:12]; recovery keys on the shape so
 # foreign dot-files sharing a prefix are skipped, never parsed or swept
 _TOKEN_RE = re.compile(r"[0-9a-f]{12}")
+
+TOMBSTONE_PREFIX = "tombstone-"  # takedown id lists: tombstone-<token>.json
 
 # Hidden parking area for old files a recorded release still references
 # (pipeline/release.py re-exports this): a protected swap MOVES them
@@ -74,18 +93,224 @@ def _retire(fs, base: str, rel: str) -> None:
     fs.move(src, dst)
 
 
+def new_token() -> str:
+    """A fresh lifecycle token: ``uuid4().hex[:12]``."""
+    return uuid.uuid4().hex[:12]
+
+
+def is_token(s: str) -> bool:
+    return _TOKEN_RE.fullmatch(s) is not None
+
+
 def _token_of(name: str, prefix: str) -> str | None:
     """The 12-hex token embedded right after ``prefix`` in ``name``
     (``<prefix><token>`` or ``<prefix><token>-…`` or
     ``<prefix><token>.json``), or None when the shape doesn't match."""
     rest = name[len(prefix) :]
     tok = rest[:12]
-    if not _TOKEN_RE.fullmatch(tok):
+    if not is_token(tok):
         return None
     tail = rest[12:]
     if tail and not tail.startswith(("-", ".")):
         return None
     return tok
+
+
+def put_json(fs, staging: str, final: str, doc, **dumps_kw) -> None:
+    """Write ``doc`` as JSON under the hidden ``staging`` name, then
+    rename it to ``final`` — readers and recovery sweeps only ever see
+    a complete document or none (local rename is atomic; S3's
+    copy+delete leaves the old name or both). Each caller keeps its own
+    staging name: the recovery sweeps key on those names."""
+    with fs.open_output_stream(staging) as out:
+        out.write(json.dumps(doc, **dumps_kw).encode())
+    fs.move(staging, final)
+
+
+def list_epochs(fs, base: str, prefix: str) -> list[tuple[int, str]]:
+    """Committed ``<prefix><epoch>-<token>.json`` files directly under
+    ``base`` as (epoch, filename), ascending. ``.tmp-`` stagings and
+    names whose epoch is not an integer are never listed, so a crash
+    mid-commit leaves only debris no reader matches."""
+    import pyarrow.fs as pafs
+
+    try:
+        infos = fs.get_file_info(pafs.FileSelector(base, recursive=False))
+    except (FileNotFoundError, OSError):
+        return []
+    out = []
+    for i in infos:
+        n = i.base_name
+        if (
+            i.type != pafs.FileType.File
+            or not n.startswith(prefix)
+            or not n.endswith(".json")
+        ):
+            continue
+        try:
+            out.append((int(n[len(prefix) :].split("-", 1)[0]), n))
+        except ValueError:
+            continue
+    return sorted(out)
+
+
+def read_latest(fs, base: str, prefix: str) -> dict | None:
+    """The highest-epoch committed manifest document, or None when the
+    log is empty."""
+    manifests = list_epochs(fs, base, prefix)
+    if not manifests:
+        return None
+    with fs.open_input_stream(f"{base}/{manifests[-1][1]}") as f:
+        return json.loads(f.read().decode())
+
+
+def commit_epoch(path: str, prefix: str, doc: dict, expect_epoch: int) -> int:
+    """Fence, then commit ``doc`` (whose ``"epoch"`` must be
+    ``expect_epoch + 1``) as a fresh write-once
+    ``<prefix><epoch:012d>-<token>.json``, staged under ``.tmp-<token>``
+    and committed by rename. The fence re-lists the log immediately
+    before writing and raises if its highest committed epoch is no
+    longer ``expect_epoch`` — a concurrent writer committed since this
+    one loaded its snapshot, and publishing now would silently drop
+    that writer's work. Detection, not locking: a true simultaneous
+    double-commit at one epoch is last-listed-wins, but every
+    sequential interleave (the realistic cron overlap) raises.
+
+    Deliberately not a Spark job: a KB-sized document through the job
+    machinery costs ~1 s per commit, this pyarrow write milliseconds.
+    Returns the committed epoch."""
+    new_epoch = expect_epoch + 1
+    if doc.get("epoch") != new_epoch:
+        raise ValueError(
+            f"manifest doc carries epoch {doc.get('epoch')}, expected {new_epoch}"
+        )
+    fs, base = _pafs_base(path)
+    manifests = list_epochs(fs, base, prefix)
+    current = manifests[-1][0] if manifests else 0
+    if current != expect_epoch:
+        raise RuntimeError(
+            f"{path} moved from epoch {expect_epoch} to {current} since this "
+            f"writer loaded it — a concurrent writer committed first. "
+            f"Aborting instead of overwriting its work; reload and retry. "
+            f"(Single-writer contract; this fence detects sequential "
+            f"interleaves, it is not a lock.)"
+        )
+    token = new_token()
+    fs.create_dir(base, recursive=True)
+    put_json(
+        fs, f"{base}/.tmp-{token}", f"{base}/{prefix}{new_epoch:012d}-{token}.json", doc
+    )
+    return new_epoch
+
+
+def write_tombstone(fs, base: str, ids: list[int], token: str) -> str:
+    """Commit a ``tombstone-<token>.json`` id list at ``base`` (staged
+    under ``.tmp-<token>``, then renamed); returns its filename."""
+    name = f"{TOMBSTONE_PREFIX}{token}.json"
+    fs.create_dir(base, recursive=True)
+    put_json(fs, f"{base}/.tmp-{token}", f"{base}/{name}", {"ids": ids})
+    return name
+
+
+def swap_dir(fs, live: str, staged: str, trash: str) -> None:
+    """Replace dir ``live`` with dir ``staged``: live → trash, staged →
+    live (skipped when nothing was staged — every row was doomed), drop
+    the trash. Each move is atomic, so a hard crash leaves trash WITH a
+    live dir (swap done) or trash WITHOUT one (the live rows are
+    stranded in the trash) — the two states ``recover_swap_dirs``
+    drops and restores."""
+    fs.move(live, trash)
+    if _fs_exists(fs, staged):
+        fs.move(staged, live)
+    fs.delete_dir(trash)
+
+
+def _token_rest(name: str, prefix: str) -> str | None:
+    """``<rest>`` of ``<prefix><12-hex token>-<rest>``; None when the
+    token doesn't parse or the rest is empty."""
+    tok, _, rest = name[len(prefix) :].partition("-")
+    return rest if is_token(tok) and rest else None
+
+
+def recover_swap_dirs(
+    fs,
+    root: str,
+    trash_prefix: str,
+    stage_prefix: str,
+    live_of,
+    stage_named: bool,
+) -> tuple[list[str], list[str], list[str]]:
+    """Crash recovery for ``swap_dir`` debris directly under ``root``.
+    ``<trash_prefix><token>-<enc>`` trash dirs are restored to
+    ``root/live_of(enc)`` when that live dir is missing (parents
+    created) and dropped when it exists; ``<stage_prefix><token>``
+    staging dirs (``<stage_prefix><token>-<name>`` when
+    ``stage_named``) are swept. A dir whose token is not 12-hex is not
+    ours: it is skipped with a warning, never parsed or destroyed.
+    Returns (restored live rels, dropped live rels, swept dir names),
+    in listing order. Single-writer maintenance contract."""
+    import pyarrow.fs as pafs
+
+    restored, dropped, swept = [], [], []
+    try:
+        infos = fs.get_file_info(pafs.FileSelector(root, recursive=False))
+    except (FileNotFoundError, OSError):
+        return restored, dropped, swept
+    for i in infos:
+        n = i.base_name
+        if i.type != pafs.FileType.Directory:
+            continue
+        if n.startswith(trash_prefix):
+            enc = _token_rest(n, trash_prefix)
+            if enc is None:
+                _log.warning("skipping %r — not a swap trash dir (no 12-hex token)", n)
+                continue
+            rel = live_of(enc)
+            live = f"{root}/{rel}"
+            if _fs_exists(fs, live):
+                fs.delete_dir(f"{root}/{n}")
+                dropped.append(rel)
+            else:
+                fs.create_dir(live.rsplit("/", 1)[0], recursive=True)
+                fs.move(f"{root}/{n}", live)
+                restored.append(rel)
+        elif n.startswith(stage_prefix):
+            ok = (
+                _token_rest(n, stage_prefix) is not None
+                if stage_named
+                else is_token(n[len(stage_prefix) :])
+            )
+            if not ok:
+                _log.warning("skipping %r — not a swap staging dir (no 12-hex token)", n)
+                continue
+            fs.delete_dir(f"{root}/{n}")
+            swept.append(n)
+    return restored, dropped, swept
+
+
+def sweep_superseded(fs, base: str, superseded, min_age_seconds: float) -> list[str]:
+    """Retention sweep of ``base``'s direct entries: delete every one
+    ``superseded(info)`` approves whose mtime is older than
+    ``min_age_seconds`` (younger ones may still be read or written —
+    the grace horizon of table-format snapshot expiry). Returns the
+    deleted names, sorted."""
+    import time
+
+    import pyarrow.fs as pafs
+
+    now = time.time()
+    doomed = [
+        i
+        for i in fs.get_file_info(pafs.FileSelector(base, recursive=False))
+        if superseded(i)
+        and not (i.mtime is not None and now - i.mtime.timestamp() < min_age_seconds)
+    ]
+    for i in doomed:
+        if i.type == pafs.FileType.Directory:
+            fs.delete_dir(i.path)
+        else:
+            fs.delete_file(i.path)
+    return sorted(i.base_name for i in doomed)
 
 
 def commit_object_swap(
@@ -98,10 +323,7 @@ def commit_object_swap(
     "final": [rel...]}`` with staged[i] ↔ final[i]; extra keys (e.g.
     ``bucket``) ride along for the consumer's bookkeeping."""
     man = f"{base}/{manifest_prefix}{token}.json"
-    tmp = f"{base}/.tmp-{manifest_prefix.strip('.')}{token}"
-    with fs.open_output_stream(tmp) as out:
-        out.write(json.dumps(entries).encode())
-    fs.move(tmp, man)
+    put_json(fs, f"{base}/.tmp-{manifest_prefix.strip('.')}{token}", man, entries)
     _replay(fs, base, entries)
     fs.delete_file(man)
 

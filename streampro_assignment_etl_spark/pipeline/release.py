@@ -68,7 +68,7 @@ _log = logging.getLogger(__name__)
 # file. Rel layout is preserved beneath it, so Hive partition values
 # survive the round-trip. Defined in object_swap (the mechanism layer
 # that does the parking); re-exported here as the user-facing name.
-from .object_swap import RETIRED_DIR  # noqa: E402,F401
+from .object_swap import RETIRED_DIR, put_json  # noqa: E402,F401
 
 # Driver-local mirrors for the injected-filesystem bridge reads
 # (read_release / read_table_snapshot), keyed by a fingerprint of the
@@ -432,10 +432,7 @@ def snapshot_release(
             f"releases are immutable; snapshot a new id"
         )
     fs.create_dir(rdir, recursive=True)
-    tmp = f"{rdir}/.tmp-release-{release_id}"
-    with fs.open_output_stream(tmp) as out:
-        out.write(json.dumps(manifest, sort_keys=True).encode())
-    fs.move(tmp, final)
+    put_json(fs, f"{rdir}/.tmp-release-{release_id}", final, manifest, sort_keys=True)
     return manifest
 
 

@@ -444,6 +444,7 @@ def _compact_parquet_object(
     from .object_swap import (
         commit_object_swap,
         download_rels,
+        new_token,
         stage_remote_tree,
         upload_tree_staged,
     )
@@ -459,9 +460,7 @@ def _compact_parquet_object(
     total_bytes = sum(sizes.get(r, 0) for r in visible)
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
     bridge = filesystem is not None
-    import uuid as _uuid
-
-    token = _uuid.uuid4().hex[:12]
+    token = new_token()
     scratch = _P(tempfile.mkdtemp(prefix="compact-object-"))
     try:
         if bridge:
@@ -564,12 +563,12 @@ def compact_fragmented_partitions(
     import math
     import shutil as _sh
     import tempfile
-    import uuid as _uuid
     from pathlib import Path as _P
 
     from .object_swap import (
         commit_object_swap,
         download_rels,
+        new_token,
         stage_remote_tree,
         upload_tree_staged,
     )
@@ -621,7 +620,7 @@ def compact_fragmented_partitions(
         readable_root = f"s3a://{rest}" if scheme in ("s3", "s3n") else path
     elif not bridge:
         readable_root = base
-    token = _uuid.uuid4().hex[:12]
+    token = new_token()
     scratch = _P(tempfile.mkdtemp(prefix="compact-parts-"))
     try:
         entries = []
@@ -1018,7 +1017,6 @@ def _merge_upsert_partitioned(
     ``len(pcols)`` path components, the full leaf partition dir."""
     import shutil as _sh
     import tempfile
-    import uuid as _uuid
     from functools import reduce
     from operator import and_, or_
     from pathlib import Path as _P
@@ -1028,6 +1026,7 @@ def _merge_upsert_partitioned(
     from .object_swap import (
         commit_object_swap,
         download_rels,
+        new_token,
         stage_remote_tree,
         upload_tree_staged,
     )
@@ -1065,7 +1064,7 @@ def _merge_upsert_partitioned(
         readable_root = f"s3a://{rest}" if s in ("s3", "s3n") else target_path
     elif not bridge:
         readable_root = base
-    token = _uuid.uuid4().hex[:12]
+    token = new_token()
     scratch = _P(tempfile.mkdtemp(prefix="merge-parts-"))
     try:
         # the touched partitions' current files: matched by directory
@@ -1218,10 +1217,11 @@ def _warn_if_unprotected_breaks_releases(
 
 def _pafs_base(path: str, filesystem=None):
     """(pyarrow filesystem, base path) for a local path, an FS URI, or
-    an injected filesystem — the same seam as ``pipeline.lake`` /
-    ``ann_index._fs_base``. ``s3a``/``s3n`` map to pyarrow's ``s3`` so
-    one table can be written through Spark's Hadoop connector and
-    maintained through this seam against the same bucket."""
+    an injected filesystem — the same seam as ``pipeline.lake``, and
+    the one the ANN index and the fuzzy dedup store call directly.
+    ``s3a``/``s3n`` map to pyarrow's ``s3`` so one table can be written
+    through Spark's Hadoop connector and maintained through this seam
+    against the same bucket."""
     import pyarrow.fs as pafs
 
     if filesystem is not None:
@@ -1487,7 +1487,6 @@ def delete_where(
 
     Returns ``{"rows_deleted", "files_rewritten", "files_total"}``.
     """
-    import json
     import tempfile
     from urllib.parse import unquote, urlsplit
 
@@ -1699,11 +1698,10 @@ def delete_where(
 
         # manifest: staged + renamed, so readers/recovery never see a
         # torn JSON (the pre-r15 write_text had no such guarantee)
+        from .object_swap import put_json
+
         man = f"{base}/.delete-manifest-{token}.json"
-        man_tmp = f"{base}/.tmp-delete-{token}"
-        with fs.open_output_stream(man_tmp) as out:
-            out.write(json.dumps(entries).encode())
-        fs.move(man_tmp, man)
+        put_json(fs, f"{base}/.tmp-delete-{token}", man, entries)
         for e in entries:
             if e["staged"] is not None:
                 dot = f"{base}/{e['staged']}"

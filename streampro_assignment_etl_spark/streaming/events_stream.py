@@ -674,9 +674,7 @@ def scd2_forget_key(spark, target_path: str, keys, filesystem=None) -> dict:
     an S3-rooted lake erases the dimension with the same call that
     erases its tables. Returns ``{"requested", "rows_deleted",
     "files_rewritten", "tombstone"}``."""
-    import json
-    import uuid
-
+    from ..pipeline.object_swap import new_token, put_json
     from ..pipeline.writers import (
         _fs_exists,
         _pafs_base,
@@ -703,7 +701,7 @@ def scd2_forget_key(spark, target_path: str, keys, filesystem=None) -> dict:
         recover_scd2_object_swap(target_path, filesystem)
         if not _fs_exists(fs, base):
             raise FileNotFoundError(f"no SCD-2 dimension at {target_path}")
-    token = uuid.uuid4().hex[:12]
+    token = new_token()
     parent, _, name = base.rpartition("/")
     if not parent:
         raise ValueError(
@@ -712,10 +710,7 @@ def scd2_forget_key(spark, target_path: str, keys, filesystem=None) -> dict:
             f"dimension one level down"
         )
     tomb = f".{name}.forget-{token}.json"
-    staging = f"{parent}/.tmp-forget-{token}"
-    with fs.open_output_stream(staging) as oh:
-        oh.write(json.dumps({"keys": ks}).encode())
-    fs.move(staging, f"{parent}/{tomb}")
+    put_json(fs, f"{parent}/.tmp-forget-{token}", f"{parent}/{tomb}", {"keys": ks})
     # str(root), not target_path, in local mode: a file:// URI reaches
     # delete_where's URI branch otherwise (correct but needlessly
     # different bookkeeping from the pre-seam behavior tests pin)
@@ -918,6 +913,7 @@ def _scd2_remote_write_batch(
     from ..pipeline.object_swap import (
         commit_object_swap,
         download_rels,
+        new_token,
         stage_remote_tree,
         upload_tree_staged,
     )
@@ -941,7 +937,7 @@ def _scd2_remote_write_batch(
         infos = _recursive_infos(fs, base)
         visible = _visible_parquet_files(fs, base, infos)
         sizes = {i.path[len(base) + 1 :]: i.size for i in infos if i.size}
-        token = uuid.uuid4().hex[:12]
+        token = new_token()
         bridge = filesystem is not None
         if not bridge:
             scheme, rest = target_path.split("://", 1)

@@ -44,8 +44,9 @@ subtrees forever, so after ~100 batches a probe's file listing decays
 the way the index's did (832 files → 16 before compaction existed).
 ``compact_fuzzy_store`` folds all three kinds into fresh single-subtree
 snapshot dirs and POINTER-SWAPS a rename-committed, epoch-fenced
-``store-manifest-<epoch>-<token>.json`` naming them — the exact
-manifest pattern of ``operators/ann_index.py``. The ingest writer bumps
+``store-manifest-<epoch>-<token>.json`` naming them — committed through
+``pipeline.object_swap.commit_epoch``, the manifest log the ANN index
+commits through too. The ingest writer bumps
 the epoch per committed batch, so a compactor racing the stream aborts
 loudly at its commit instead of publishing a snapshot missing the
 batch's rows (the index's lost-write race, pre-empted here). Replay
@@ -56,41 +57,38 @@ is never folded into the snapshot it probes. The manifest also persists
 the store's LSH GEOMETRY — a writer constructed with mismatched
 (num_hashes, bands, shingle_n) now fails loudly instead of silently
 matching nothing. ``expire_fuzzy_store`` is the retention sweep
-(min-age grace, same contract as ``expire_ivfpq_snapshots``);
+(``object_swap.sweep_superseded``'s min-age grace);
 ``decisions_keep_seconds`` ages the audit log out at compaction time.
 
 ≙ reference: none (north-star extension). Composition: minhash.py +
 the subtree-overwrite + marker discipline of index_ingest.py + the
-manifest/fence/retention lifecycle of ann_index.py.
+manifest/fence/tombstone/retention seam of pipeline/object_swap.py.
 """
 
 from __future__ import annotations
 
 import json
-import logging
-import re
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import minhash
-from ..operators.ann_index import (
-    TOMBSTONE_PREFIX,
-    _fs_base,
-    _without_ids,
-    tombstoned_ids,
+from ..operators.ann_index import _without_ids, tombstoned_ids
+from ..pipeline.object_swap import (
+    commit_epoch,
+    list_epochs,
+    new_token,
+    read_latest,
+    recover_swap_dirs,
+    swap_dir,
+    sweep_superseded,
+    write_tombstone,
 )
+from ..pipeline.writers import _pafs_base
 from ._drain import drain_available_now
 from .index_ingest import _marker_exists, _write_marker
-
-_log = logging.getLogger(__name__)
-
-# every token this module mints is uuid4().hex[:12]; the recovery sweep
-# keys on the shape so foreign dot-dirs are never parsed or destroyed
-_TOKEN_RE = re.compile(r"[0-9a-f]{12}")
 
 STORE_DIR = "store"
 DOCS_DIR = "docs"
@@ -101,44 +99,11 @@ _KINDS = ("store", "docs", "decisions")
 _LEGACY_DIRS = {"store": STORE_DIR, "docs": DOCS_DIR, "decisions": DECISIONS_DIR}
 
 
-def _list_store_manifests(fs, base) -> list[tuple[int, str]]:
-    """Committed ``store-manifest-<epoch>-<token>.json`` files under
-    ``base`` as (epoch, filename), ascending — same write-once,
-    rename-committed artifact rule as ``ann_index._list_manifests``
-    (crash debris stays under a ``.tmp-`` name readers never match)."""
-    import pyarrow.fs as pafs
-
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(base, recursive=False))
-    except (FileNotFoundError, OSError):
-        return []
-    out = []
-    for i in infos:
-        if (
-            i.type != pafs.FileType.File
-            or not i.base_name.startswith(MANIFEST_PREFIX)
-            or not i.base_name.endswith(".json")
-        ):
-            continue
-        try:
-            epoch = int(i.base_name[len(MANIFEST_PREFIX) :].split("-", 1)[0])
-        except ValueError:
-            continue
-        out.append((epoch, i.base_name))
-    return sorted(out)
-
-
 def load_store_manifest(store_path: str) -> dict | None:
     """Latest committed manifest document, or None for a fresh/legacy
     store (no manifest yet → readers fall back to the fixed
     ``store``/``docs``/``decisions`` dirs at epoch 0)."""
-    fs, base = _fs_base(store_path)
-    manifests = _list_store_manifests(fs, base)
-    if not manifests:
-        return None
-    _, name = manifests[-1]
-    with fs.open_input_stream(f"{base}/{name}") as f:
-        return json.loads(f.read().decode())
+    return read_latest(*_pafs_base(store_path), MANIFEST_PREFIX)
 
 
 def _store_dirs(manifest: dict | None) -> dict[str, str]:
@@ -151,46 +116,17 @@ def _store_epoch(manifest: dict | None) -> int:
     return 0 if manifest is None else int(manifest["epoch"])
 
 
-def _commit_store_manifest(
-    store_path: str,
-    dirs: dict[str, str],
-    geometry: dict | None,
-    expect_epoch: int,
-) -> int:
-    """Fence, then commit (mirror of ``ann_index._commit_manifest``):
-    re-read the current epoch immediately before writing and abort
-    loudly if it moved since the caller loaded it — the
-    ingest-vs-compact interleave that would otherwise publish a
-    snapshot missing the other writer's rows. The manifest is staged
-    under ``.tmp-`` and committed by rename; pyarrow, not a Spark job
-    (the index's measured finding: a KB-sized JSON through the job
-    machinery costs ~1 s constant per commit)."""
-    manifest = load_store_manifest(store_path)
-    current = _store_epoch(manifest)
-    if current != expect_epoch:
-        raise RuntimeError(
-            f"fuzzy store at {store_path} moved from epoch {expect_epoch} to "
-            f"{current} since this writer loaded it — a concurrent "
-            f"ingest/compaction committed first. Aborting instead of "
-            f"overwriting its work; reload and retry. (Single-writer "
-            f"contract; this fence detects sequential interleaves, it is "
-            f"not a lock.)"
-        )
-    new_epoch = expect_epoch + 1
-    doc = {
+def _manifest_doc(dirs: dict[str, str], geometry: dict | None, epoch: int) -> dict:
+    """The ``store-manifest-<epoch>-<token>.json`` document; commit it
+    with ``commit_epoch(store_path, MANIFEST_PREFIX, doc, epoch - 1)``
+    — the fence aborts an ingest-vs-compact interleave that would
+    otherwise publish a snapshot missing the other writer's rows."""
+    return {
         "version": _MANIFEST_VERSION,
-        "epoch": new_epoch,
+        "epoch": epoch,
         "dirs": dict(dirs),
         "geometry": dict(geometry) if geometry else None,
     }
-    token = uuid.uuid4().hex[:12]
-    fs, base = _fs_base(store_path)
-    fs.create_dir(base, recursive=True)
-    staging = f"{base}/.tmp-{token}"
-    with fs.open_output_stream(staging) as out:
-        out.write(json.dumps(doc).encode())
-    fs.move(staging, f"{base}/{MANIFEST_PREFIX}{new_epoch:012d}-{token}.json")
-    return new_epoch
 
 
 def _check_geometry(manifest: dict | None, geometry: dict, store_path: str) -> None:
@@ -419,7 +355,9 @@ def make_fuzzy_ingest_writer(
                 )
             matches.unpersist()
             survivors.unpersist()
-            _commit_store_manifest(store_path, dirs, geometry, expect_epoch=epoch)
+            commit_epoch(
+                store_path, MANIFEST_PREFIX, _manifest_doc(dirs, geometry, epoch + 1), epoch
+            )
             _write_marker(store_path, stream_name, batch_id)
         finally:
             batch_df.unpersist()
@@ -490,6 +428,45 @@ def _subtree_committed(store_path: str, subtree: str) -> bool:
     return True  # ad-hoc batch-unaware naming: nothing to replay
 
 
+def _fold_committed(
+    spark: SparkSession,
+    store_path: str,
+    src_dir: str,
+    dest: str,
+    key: str,
+    max_age_s: float | None = None,
+) -> bool:
+    """Fold the COMMITTED ``ingest=`` subtrees of ``<store_path>/<src_dir>``
+    (only those younger than ``max_age_s``, when set) into one write at
+    ``dest``, ``ingest`` dropped and rows repartitioned on ``key`` so
+    each key folds into one file. The one fold compaction and resign
+    share; False (nothing written) when no subtree qualifies."""
+    fs, base = _pafs_base(store_path)
+    now = time.time()
+    keep = [
+        i.base_name
+        for i in _subtree_infos(fs, base, src_dir)
+        if _subtree_committed(store_path, i.base_name)
+        and not (
+            max_age_s is not None
+            and i.mtime is not None
+            and now - i.mtime.timestamp() > max_age_s
+        )
+    ]
+    if not keep:
+        return False
+    src = f"{store_path}/{src_dir}"
+    (
+        spark.read.option("basePath", src)
+        .parquet(*[f"{src}/{d}" for d in keep])
+        .drop("ingest")
+        .repartition(F.col(key))
+        .write.mode("overwrite")
+        .parquet(dest)
+    )
+    return True
+
+
 def compact_fuzzy_store(
     spark: SparkSession,
     store_path: str,
@@ -497,9 +474,10 @@ def compact_fuzzy_store(
 ) -> dict:
     """Fold every ``ingest=`` subtree of all three kinds into fresh
     single-subtree snapshot dirs and pointer-swap the manifest — the
-    OPTIMIZE step a continuously-ingesting store needs (mirror of
-    ``compact_ivfpq_index``: after N batches a probe's scan opens ~3N
-    subtrees whose per-file overhead dwarfs the row bytes). Pure IO —
+    OPTIMIZE step a continuously-ingesting store needs (after N
+    batches a probe's scan opens ~3N subtrees whose per-file overhead
+    dwarfs the row bytes). Each kind goes through ``_fold_committed``
+    and the swap commits through ``object_swap.commit_epoch``. Pure IO —
     no re-sign, no decision change; band rows repartition on
     ``band_id`` so each band folds into one file (the probe join's own
     key), docs/decisions fold by their id. The commit is epoch-fenced:
@@ -529,43 +507,25 @@ def compact_fuzzy_store(
     manifest = load_store_manifest(store_path)
     dirs = _store_dirs(manifest)
     epoch = _store_epoch(manifest)
-    token = uuid.uuid4().hex[:12]
-    fs, base = _fs_base(store_path)
+    token = new_token()
     new_dirs = {k: f"{k}-snap-{token}" for k in _KINDS}
     fold_key = {"store": "band_id", "docs": "doc_id", "decisions": "doc_id"}
-    now = time.time()
-
     for kind in _KINDS:
-        src = f"{store_path}/{dirs[kind]}"
-        infos = _subtree_infos(fs, base, dirs[kind])
-        keep = [
-            i.base_name
-            for i in infos
-            if _subtree_committed(store_path, i.base_name)
-            and not (
-                kind == "decisions"
-                and decisions_keep_seconds is not None
-                and i.mtime is not None
-                and now - i.mtime.timestamp() > decisions_keep_seconds
-            )
-        ]
-        if not keep:
-            continue  # nothing to carry — readers get the empty frame
-        df = (
-            spark.read.option("basePath", src)
-            .parquet(*[f"{src}/{d}" for d in keep])
-            .drop("ingest")
+        # a kind with nothing to carry writes nothing: readers get the
+        # empty frame
+        _fold_committed(
+            spark,
+            store_path,
+            dirs[kind],
+            f"{store_path}/{new_dirs[kind]}/ingest=base-{token}",
+            fold_key[kind],
+            max_age_s=decisions_keep_seconds if kind == "decisions" else None,
         )
-        df.repartition(F.col(fold_key[kind])).write.mode("overwrite").parquet(
-            f"{store_path}/{new_dirs[kind]}/ingest=base-{token}"
-        )
-    new_epoch = _commit_store_manifest(
-        store_path,
-        new_dirs,
-        (manifest or {}).get("geometry"),
-        expect_epoch=epoch,
-    )
-    return {"epoch": new_epoch, "dirs": new_dirs}
+    doc = _manifest_doc(new_dirs, (manifest or {}).get("geometry"), epoch + 1)
+    return {
+        "epoch": commit_epoch(store_path, MANIFEST_PREFIX, doc, epoch),
+        "dirs": new_dirs,
+    }
 
 
 def resign_store(
@@ -607,34 +567,17 @@ def resign_store(
         "bands": bands,
         "shingle_n": shingle_n,
     }
-    token = uuid.uuid4().hex[:12]
+    token = new_token()
     new_dirs = {k: f"{k}-resign-{token}" for k in _KINDS}
-    fs, base = _fs_base(store_path)
 
     n_docs = 0
     for kind in ("docs", "decisions"):
-        src = f"{store_path}/{dirs[kind]}"
-        keep = [
-            i.base_name
-            for i in _subtree_infos(fs, base, dirs[kind])
-            if _subtree_committed(store_path, i.base_name)
-        ]
-        if not keep:
-            continue
-        df = (
-            spark.read.option("basePath", src)
-            .parquet(*[f"{src}/{d}" for d in keep])
-            .drop("ingest")
-        )
-        df.repartition(F.col("doc_id")).write.mode("overwrite").parquet(
-            f"{store_path}/{new_dirs[kind]}/ingest=base-{token}"
-        )
-        if kind == "docs":
+        dest = f"{store_path}/{new_dirs[kind]}/ingest=base-{token}"
+        folded_any = _fold_committed(spark, store_path, dirs[kind], dest, "doc_id")
+        if kind == "docs" and folded_any:
             # sign the folded snapshot itself — the store kind is
             # derived from exactly what the new manifest will serve
-            folded = spark.read.parquet(
-                f"{store_path}/{new_dirs[kind]}/ingest=base-{token}"
-            )
+            folded = spark.read.parquet(dest)
             n_docs = folded.count()
             minhash.signature_store(
                 folded,
@@ -646,11 +589,9 @@ def resign_store(
             ).repartition(F.col("band_id")).write.mode("overwrite").parquet(
                 f"{store_path}/{new_dirs['store']}/ingest=base-{token}"
             )
-    new_epoch = _commit_store_manifest(
-        store_path, new_dirs, new_geometry, expect_epoch=epoch
-    )
+    doc = _manifest_doc(new_dirs, new_geometry, epoch + 1)
     return {
-        "epoch": new_epoch,
+        "epoch": commit_epoch(store_path, MANIFEST_PREFIX, doc, epoch),
         "dirs": new_dirs,
         "geometry": new_geometry,
         "docs": n_docs,
@@ -660,7 +601,8 @@ def resign_store(
 def expire_fuzzy_store(
     spark: SparkSession, store_path: str, min_age_seconds: float = 0.0
 ) -> list[str]:
-    """Retention sweep (mirror of ``expire_ivfpq_snapshots``): delete
+    """Retention sweep (``object_swap.sweep_superseded``, the skeleton
+    ``expire_ivfpq_snapshots`` runs too): delete
     every snapshot dir the CURRENT manifest does not name — superseded
     ``<kind>-snap-<token>`` dirs, plus the legacy fixed
     ``store``/``docs``/``decisions`` dirs once a compaction has moved
@@ -677,41 +619,29 @@ def expire_fuzzy_store(
     if manifest is None:
         return []  # legacy store: fixed dirs are live, nothing superseded
     live = set(_store_dirs(manifest).values())
-    fs, base = _fs_base(store_path)
-    current_manifest = {n for _, n in _list_store_manifests(fs, base)[-1:]}
-    now = time.time()
-    infos = fs.get_file_info(pafs.FileSelector(base, recursive=False))
-    doomed_dirs, doomed_files = [], []
-    for i in infos:
+    fs, base = _pafs_base(store_path)
+    current_manifest = {n for _, n in list_epochs(fs, base, MANIFEST_PREFIX)[-1:]}
+
+    def superseded(i) -> bool:
         n = i.base_name
         if i.type == pafs.FileType.Directory:
             is_snapshot = n in set(_LEGACY_DIRS.values()) or any(
                 n.startswith(f"{k}-snap-") for k in _KINDS
             )
-            superseded = is_snapshot and n not in live
-            bucket = doomed_dirs
-        else:
-            superseded = (
-                n.startswith(MANIFEST_PREFIX) and n not in current_manifest
-            ) or n.startswith(".tmp-")
-            bucket = doomed_files
-        if not superseded:
-            continue
-        if i.mtime is not None and now - i.mtime.timestamp() < min_age_seconds:
-            continue
-        bucket.append(n)
-    for d in doomed_dirs:
-        fs.delete_dir(f"{base}/{d}")
-    for f in doomed_files:
-        fs.delete_file(f"{base}/{f}")
-    return sorted(doomed_dirs + doomed_files)
+            return is_snapshot and n not in live
+        return (
+            n.startswith(MANIFEST_PREFIX) and n not in current_manifest
+        ) or n.startswith(".tmp-")
+
+    return sweep_superseded(fs, base, superseded, min_age_seconds)
 
 
 def recover_store_removal(store_path: str, manifest: dict | None = ...) -> dict:
     """Crash recovery for ``remove_docs``' subtree swap, run
-    automatically at ``remove_docs`` entry and by ``maintain_store``
-    (mirror of ``ann_index.recover_index_delete`` / the bucketed SCD-2
-    sink's ``_recover_scd2_buckets``). The swap per affected subtree is
+    automatically at ``remove_docs`` entry and by ``maintain_store``;
+    the sweep is ``object_swap.recover_swap_dirs``, the one
+    ``ann_index.recover_index_delete`` runs too. The swap per affected
+    subtree is
     (1) move live ``ingest=<sub>`` → ``.rm-old-<token>-<sub>`` trash,
     (2) move staged survivors in, (3) drop the trash — so a hard crash
     leaves trash WITH a live subtree (swap completed: drop the trash)
@@ -728,59 +658,23 @@ def recover_store_removal(store_path: str, manifest: dict | None = ...) -> dict:
     snapshots is deleted with them by ``expire_fuzzy_store``. Returns
     ``{"restored", "dropped", "staging_swept"}``, each a sorted list
     of ``<kind-dir>/<name>``."""
-    import pyarrow.fs as pafs
-
     if manifest is ...:
         manifest = load_store_manifest(store_path)
     dirs = _store_dirs(manifest)
-    fs, base = _fs_base(store_path)
-    restored, dropped, swept = [], [], []
+    fs, base = _pafs_base(store_path)
+    out = {"restored": [], "dropped": [], "staging_swept": []}
     for kind in ("store", "docs"):
-        kb = f"{base}/{dirs[kind]}"
-        try:
-            infos = fs.get_file_info(pafs.FileSelector(kb, recursive=False))
-        except (FileNotFoundError, OSError):
-            continue
-        for i in infos:
-            if i.type != pafs.FileType.Directory:
-                continue
-            n = i.base_name
-            if n.startswith(".rm-old-"):
-                # .rm-old-<12-hex-token>-<subtree id>. Token validated
-                # BEFORE parsing (ADVICE r15 #4): a foreign dot-dir
-                # sharing the prefix used to abort the whole recovery
-                # on IndexError — skip it loudly; it is not ours.
-                tok, _, sub = n[len(".rm-old-") :].partition("-")
-                if not (_TOKEN_RE.fullmatch(tok) and sub):
-                    _log.warning(
-                        "recover_store_removal: skipping %r — not a "
-                        "removal-swap artifact (token is not 12-hex)", n
-                    )
-                    continue
-                live = f"{kb}/ingest={sub}"
-                if fs.get_file_info(live).type == pafs.FileType.NotFound:
-                    fs.move(f"{kb}/{n}", live)
-                    restored.append(f"{dirs[kind]}/ingest={sub}")
-                else:
-                    fs.delete_dir(f"{kb}/{n}")
-                    dropped.append(f"{dirs[kind]}/ingest={sub}")
-            elif n.startswith(".rm-"):
-                # staging dirs are .rm-<12-hex>-<subtree id>; anything
-                # else under the prefix is foreign — never destroy it
-                tok, _, sub = n[len(".rm-") :].partition("-")
-                if not (_TOKEN_RE.fullmatch(tok) and sub):
-                    _log.warning(
-                        "recover_store_removal: skipping %r — not a "
-                        "removal staging dir (token is not 12-hex)", n
-                    )
-                    continue
-                fs.delete_dir(f"{kb}/{n}")
-                swept.append(f"{dirs[kind]}/{n}")
-    return {
-        "restored": sorted(restored),
-        "dropped": sorted(dropped),
-        "staging_swept": sorted(swept),
-    }
+        found = recover_swap_dirs(
+            fs,
+            f"{base}/{dirs[kind]}",
+            ".rm-old-",
+            ".rm-",
+            lambda sub: f"ingest={sub}",
+            stage_named=True,
+        )
+        for names, found_names in zip(out.values(), found):
+            names.extend(f"{dirs[kind]}/{n}" for n in found_names)
+    return {k: sorted(v) for k, v in out.items()}
 
 
 def remove_docs(spark: SparkSession, store_path: str, doc_ids) -> dict:
@@ -832,15 +726,8 @@ def remove_docs(spark: SparkSession, store_path: str, doc_ids) -> dict:
     recover_store_removal(store_path, manifest)  # heal any crashed swap
     dirs = _store_dirs(manifest)
     epoch = _store_epoch(manifest)
-    fs, base = _fs_base(store_path)
-    token = uuid.uuid4().hex[:12]
-
-    tomb_name = f"{TOMBSTONE_PREFIX}{token}.json"
-    fs.create_dir(base, recursive=True)
-    staging = f"{base}/.tmp-{token}"
-    with fs.open_output_stream(staging) as out:
-        out.write(json.dumps({"ids": ids}).encode())
-    fs.move(staging, f"{base}/{tomb_name}")
+    token = new_token()
+    tomb_name = write_tombstone(*_pafs_base(store_path), ids, token)
 
     spark.createDataFrame(
         [(i, None, None) for i in ids], _SCHEMAS["decisions"]
@@ -864,27 +751,27 @@ def remove_docs(spark: SparkSession, store_path: str, doc_ids) -> dict:
         )
         removed[kind] = sum(int(r["n"]) for r in hit)
         kind_path = f"{store_path}/{dirs[kind]}"
-        kind_fs, kind_base = _fs_base(kind_path)
+        kind_fs, kind_base = _pafs_base(kind_path)
         for r in hit:
             sub = str(r["ingest"])
-            real_path = f"{kind_path}/ingest={sub}"
-            keep = _without_ids(spark.read.parquet(real_path), "doc_id", ids)
+            keep = _without_ids(
+                spark.read.parquet(f"{kind_path}/ingest={sub}"), "doc_id", ids
+            )
             if keep.isEmpty():
                 kind_fs.delete_dir(f"{kind_base}/ingest={sub}")
             else:
                 keep.write.mode("overwrite").parquet(
                     f"{kind_path}/.rm-{token}-{sub}"
                 )
-                trash = f"{kind_base}/.rm-old-{token}-{sub}"
-                kind_fs.move(f"{kind_base}/ingest={sub}", trash)
-                kind_fs.move(
-                    f"{kind_base}/.rm-{token}-{sub}", f"{kind_base}/ingest={sub}"
+                swap_dir(
+                    kind_fs,
+                    f"{kind_base}/ingest={sub}",
+                    f"{kind_base}/.rm-{token}-{sub}",
+                    f"{kind_base}/.rm-old-{token}-{sub}",
                 )
-                kind_fs.delete_dir(trash)
             subtrees_rewritten += 1
-    new_epoch = _commit_store_manifest(
-        store_path, dirs, (manifest or {}).get("geometry"), expect_epoch=epoch
-    )
+    doc = _manifest_doc(dirs, (manifest or {}).get("geometry"), epoch + 1)
+    new_epoch = commit_epoch(store_path, MANIFEST_PREFIX, doc, epoch)
     return {
         "requested": len(ids),
         "removed_docs": removed.get("docs", 0),
@@ -899,24 +786,8 @@ def _subtree_counts(store_path: str, dirs: dict[str, str]) -> dict[str, int]:
     """Committed+orphan ``ingest=`` subtree count per kind — the
     fragmentation measure ``maintain_store`` thresholds on. Pure
     listing, no Spark job."""
-    import pyarrow.fs as pafs
-
-    fs, base = _fs_base(store_path)
-    out = {}
-    for kind in _KINDS:
-        try:
-            infos = fs.get_file_info(
-                pafs.FileSelector(f"{base}/{dirs[kind]}", recursive=False)
-            )
-        except (FileNotFoundError, OSError):
-            infos = []
-        out[kind] = sum(
-            1
-            for i in infos
-            if i.type == pafs.FileType.Directory
-            and i.base_name.startswith("ingest=")
-        )
-    return out
+    fs, base = _pafs_base(store_path)
+    return {kind: len(_subtree_infos(fs, base, dirs[kind])) for kind in _KINDS}
 
 
 def store_stats(spark: SparkSession, store_path: str) -> dict:
@@ -955,7 +826,7 @@ def maintain_store(
     decisions_keep_seconds: float | None = None,
     min_age_seconds: float = 86400.0,
 ) -> dict:
-    """The store's composed cron body (mirror of
+    """The store's composed cron body (the counterpart of
     ``ann_index.maintain_index``; VERDICT r12 Next #5 — the primitives
     existed but every cron caller re-derived when to invoke them):
     measure ``store_stats``, fold via ``compact_fuzzy_store`` ONLY

@@ -27,7 +27,7 @@ Exactly-once under replay, by construction rather than bookkeeping:
   marker stops it from re-landing rows that compaction already folded
   — the one replay shape the overwrite alone cannot make idempotent.
 
-Single-writer contract (fenced, see ``ann_index._commit_manifest``):
+Single-writer contract (fenced, see ``pipeline.object_swap.commit_epoch``):
 the stream IS the index's writer while it runs — schedule compactions
 and rebuilds in its maintenance windows, or accept the loud epoch
 abort and retry. Scale shape: each batch costs one map-side
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..operators import ann_index
+from ..pipeline.writers import _pafs_base
 from ._drain import drain_available_now
 
 APPLIED_DIR = "applied"
@@ -58,13 +59,13 @@ def _marker_path(base: str, stream_name: str, batch_id: int) -> str:
 def _marker_exists(path: str, stream_name: str, batch_id: int) -> bool:
     import pyarrow.fs as pafs
 
-    fs, base = ann_index._fs_base(path)
+    fs, base = _pafs_base(path)
     info = fs.get_file_info(_marker_path(base, stream_name, batch_id))
     return info.type == pafs.FileType.File
 
 
 def _write_marker(path: str, stream_name: str, batch_id: int) -> None:
-    fs, base = ann_index._fs_base(path)
+    fs, base = _pafs_base(path)
     fs.create_dir(f"{base}/{APPLIED_DIR}/{stream_name}", recursive=True)
     with fs.open_output_stream(_marker_path(base, stream_name, batch_id)):
         pass  # empty file; its existence is the record
@@ -83,7 +84,7 @@ def prune_applied_markers(
     the compaction cadence. Returns the deleted marker names."""
     import pyarrow.fs as pafs
 
-    fs, base = ann_index._fs_base(path)
+    fs, base = _pafs_base(path)
     sel = pafs.FileSelector(f"{base}/{APPLIED_DIR}/{stream_name}", recursive=False)
     try:
         infos = fs.get_file_info(sel)

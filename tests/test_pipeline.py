@@ -4591,3 +4591,95 @@ def test_nested_compaction_and_drop_against_moto_s3(spark, tmp_path, moto_s3):
     assert out2["dropped"] == ["2025-09-01"]
     assert not etags("date=2025-09-01/")
     assert len(etags("date=2025-09-02/")) > 0
+
+
+def test_manifest_seam_fence_listing_and_swap_recovery(tmp_path):
+    """The lifecycle seam the ANN index and the fuzzy dedup store share
+    (``pipeline/object_swap.py``), pinned on a local pyarrow filesystem
+    with no Spark session: (1) a stale ``expect_epoch`` raises "moved
+    from epoch" and writes no file; (2) ``.tmp-`` stagings, manifest-
+    named directories and non-integer epochs are never listed; (3) for
+    both trash-name encodings (the index's ``.del-old-<tok>-<a~b>`` with
+    ``.del-<tok>`` staging roots, the store's ``.rm-old-<tok>-<sub>``
+    with ``.rm-<tok>-<sub>`` staging dirs) trash beside a live dir is
+    dropped, trash without one is restored (creating the nested
+    parent), minted staging is swept, and foreign dot-dirs sharing a
+    prefix survive untouched."""
+    import os
+
+    import pyarrow.fs as pafs
+
+    from streampro_assignment_etl_spark.operators import ann_index
+    from streampro_assignment_etl_spark.pipeline.object_swap import (
+        commit_epoch,
+        list_epochs,
+        read_latest,
+        swap_dir,
+    )
+    from streampro_assignment_etl_spark.streaming import fuzzy_store_ingest as fsi
+
+    fs = pafs.LocalFileSystem()
+    log = tmp_path / "log"
+    for prefix in (ann_index.MODEL_PREFIX, fsi.MANIFEST_PREFIX):
+        assert commit_epoch(str(log), prefix, {"version": 1, "epoch": 1}, 0) == 1
+        before = sorted(os.listdir(log))
+        with pytest.raises(RuntimeError, match="moved from epoch"):
+            commit_epoch(str(log), prefix, {"version": 1, "epoch": 1}, 0)
+        assert sorted(os.listdir(log)) == before
+        (log / ".tmp-0123456789ab").write_text("{}")
+        (log / f"{prefix}latest-0123456789ab.json").write_text("{}")
+        (log / f"{prefix}000000000009-0123456789ab.json").mkdir()
+        assert [e for e, _ in list_epochs(fs, str(log), prefix)] == [1]
+        assert commit_epoch(str(log), prefix, {"version": 1, "epoch": 2}, 1) == 2
+        assert read_latest(fs, str(log), prefix) == {"version": 1, "epoch": 2}
+
+    # the forward swap: staged replaces live; nothing staged → live gone
+    (tmp_path / "sw" / "live" / "old").mkdir(parents=True)
+    (tmp_path / "sw" / "staged" / "new").mkdir(parents=True)
+    sw = str(tmp_path / "sw")
+    swap_dir(fs, f"{sw}/live", f"{sw}/staged", f"{sw}/.trash")
+    assert os.listdir(tmp_path / "sw") == ["live"]
+    assert os.listdir(tmp_path / "sw" / "live") == ["new"]
+    swap_dir(fs, f"{sw}/live", f"{sw}/staged", f"{sw}/.trash")
+    assert os.listdir(tmp_path / "sw") == []
+
+    tok = "0123456789ab"
+    # index encoding — no manifest yet, so the legacy `encoded` snapshot
+    idx = tmp_path / "idx"
+    snap = idx / "encoded"
+    (snap / "ingest=base" / "cell=1").mkdir(parents=True)
+    (snap / f".del-old-{tok}-ingest=base~cell=1").mkdir()
+    (snap / f".del-old-{tok}-ingest=u7~cell=2" / "part").mkdir(parents=True)
+    (snap / f".del-{tok}" / "ingest=u7").mkdir(parents=True)
+    for d in (".del-old-x", ".del-notatoken"):
+        (snap / d).mkdir()
+    assert ann_index.recover_index_delete(str(idx)) == {
+        "restored": ["ingest=u7/cell=2"],
+        "dropped": ["ingest=base/cell=1"],
+        "staging_swept": [f".del-{tok}"],
+    }
+    assert (snap / "ingest=u7" / "cell=2" / "part").is_dir()
+    assert sorted(os.listdir(snap)) == [
+        ".del-notatoken", ".del-old-x", "ingest=base", "ingest=u7",
+    ]
+
+    # store encoding — no manifest yet, so the legacy fixed kind dirs
+    st = tmp_path / "fstore"
+    done, stranded = "s-b000000000000", "s-b000000000001"
+    for kind in ("store", "docs"):
+        kd = st / kind
+        (kd / f"ingest={done}").mkdir(parents=True)
+        (kd / f".rm-old-{tok}-{done}").mkdir()
+        (kd / f".rm-old-{tok}-{stranded}").mkdir()
+        (kd / f".rm-{tok}-{stranded}").mkdir()
+        for d in (".rm-old-x", ".rm-junk"):
+            (kd / d).mkdir()
+    assert fsi.recover_store_removal(str(st)) == {
+        "restored": [f"{k}/ingest={stranded}" for k in ("docs", "store")],
+        "dropped": [f"{k}/ingest={done}" for k in ("docs", "store")],
+        "staging_swept": [f"{k}/.rm-{tok}-{stranded}" for k in ("docs", "store")],
+    }
+    for kind in ("store", "docs"):
+        assert sorted(os.listdir(st / kind)) == [
+            ".rm-junk", ".rm-old-x", f"ingest={done}", f"ingest={stranded}",
+        ]

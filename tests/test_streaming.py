@@ -2544,7 +2544,9 @@ def test_index_append_stream_bit_equal_and_replay_idempotent(spark, tmp_path):
     # (c) Marker lost in the crash window: the replayed batch must
     # OVERWRITE its own ingest subtree, not append to it. Replay batch
     # 1 with the exact rows it originally carried.
-    fs, base = ann_index._fs_base(streamed)
+    from streampro_assignment_etl_spark.pipeline.writers import _pafs_base
+
+    fs, base = _pafs_base(streamed)
     marker = index_ingest._marker_path(base, "ingest", 1)
     os.remove(marker)
     m = ann_index.load_ivfpq_model(spark, streamed)
@@ -2847,7 +2849,7 @@ def test_fuzzy_store_ingest_stream_dedupes_and_replays_idempotent(spark, tmp_pat
         _marker_exists,
         _marker_path,
     )
-    from streampro_assignment_etl_spark.operators.ann_index import _fs_base
+    from streampro_assignment_etl_spark.pipeline.writers import _pafs_base
 
     t1, t2, t3, t13, t22 = _w("a"), _w("b"), _w("c"), _w("d"), _w("e")
     near = lambda t: t.rsplit(" ", 1)[0] + " zz"  # noqa: E731  last word swap, J≈0.71
@@ -2897,7 +2899,7 @@ def test_fuzzy_store_ingest_stream_dedupes_and_replays_idempotent(spark, tmp_pat
 
     # marker LOST (crash window): replay must converge bit-equal —
     # self-exclusion keeps doc 22 from matching its own store rows
-    fs, base = _fs_base(store)
+    fs, base = _pafs_base(store)
     os.remove(_marker_path(base, "ingest", 2))
     writer(f3, 2)
     assert sorted(tuple(r) for r in fsi.read_store_docs(spark, store).collect()) == state
@@ -2923,7 +2925,7 @@ def test_fuzzy_store_remove_docs_takedown(spark, tmp_path):
     import hashlib
     import os
 
-    from streampro_assignment_etl_spark.operators.ann_index import _fs_base
+    from streampro_assignment_etl_spark.pipeline.writers import _pafs_base
     from streampro_assignment_etl_spark.streaming import fuzzy_store_ingest as fsi
     from streampro_assignment_etl_spark.streaming.index_ingest import (
         _marker_path,
@@ -2971,7 +2973,7 @@ def test_fuzzy_store_remove_docs_takedown(spark, tmp_path):
     state = sorted(
         tuple(r) for r in fsi.read_store_docs(spark, store).collect()
     )
-    fs, base = _fs_base(store)
+    fs, base = _pafs_base(store)
     os.remove(_marker_path(base, "ingest", 1))
     writer = fsi.make_fuzzy_ingest_writer(store, threshold=0.7)
     writer(
@@ -3122,7 +3124,7 @@ def test_fuzzy_store_remove_docs_fence_race(spark, tmp_path, monkeypatch):
         spark, f"{landing}/*", store, ckpt, threshold=0.7
     )
     # stale view for remove_docs' OWN manifest load only — the fence
-    # inside _commit_store_manifest re-reads the real manifest
+    # inside object_swap.commit_epoch re-lists the real manifest log
     real_load = fsi.load_store_manifest
     calls = {"n": 0}
 
@@ -3202,7 +3204,7 @@ def test_fuzzy_store_compaction_and_replay_safety(spark, tmp_path):
         _marker_exists,
         _marker_path,
     )
-    from streampro_assignment_etl_spark.operators.ann_index import _fs_base
+    from streampro_assignment_etl_spark.pipeline.writers import _pafs_base
 
     t1, t2, t3, t13, t22 = _w("a"), _w("b"), _w("c"), _w("d"), _w("e")
     near = lambda t: t.rsplit(" ", 1)[0] + " zz"  # noqa: E731
@@ -3254,7 +3256,7 @@ def test_fuzzy_store_compaction_and_replay_safety(spark, tmp_path):
     # self-exclusion intact and converges bit-equal.
     drain([(21, near(t13)), (22, t22), (23, t22)], "f3")
     before = _fuzzy_state(spark, fsi, store)
-    fs, base = _fs_base(store)
+    fs, base = _pafs_base(store)
     os.remove(_marker_path(base, "ingest", 2))
     out2 = fsi.compact_fuzzy_store(spark, store)
     docs_after = {r["doc_id"] for r in fsi.read_store_docs(spark, store).collect()}
@@ -3583,12 +3585,12 @@ def test_takedown_runbook_live_stream(spark, tmp_path):
 
     # wave 1's marker lost (crash window), fresh checkpoint: the
     # re-drain sees every landing file as one batch 0 and replays it
-    from streampro_assignment_etl_spark.operators.ann_index import _fs_base
+    from streampro_assignment_etl_spark.pipeline.writers import _pafs_base
     from streampro_assignment_etl_spark.streaming.index_ingest import (
         _marker_path,
     )
 
-    _, base = _fs_base(store)
+    _, base = _pafs_base(store)
     os.remove(_marker_path(base, "ingest", 0))
     drain([(99, t4)], "w3", ck=str(tmp_path / "ckpt2"))
     docs = {r["doc_id"] for r in fsi.read_store_docs(spark, store).collect()}
