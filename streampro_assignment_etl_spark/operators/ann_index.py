@@ -490,18 +490,22 @@ def tombstoned_ids(path: str) -> list[int]:
     return sorted(out)
 
 
-def _without_ids(df: DataFrame, col: str, ids: list[int]) -> DataFrame:
-    """Exclude ``ids`` from ``df[col]``: literal NOT IN under the
-    threshold (stays inside whole-stage codegen), broadcast anti-join
-    above it (a giant literal array bloats plan analysis)."""
-    if not ids:
-        return df
+def _match_ids(df: DataFrame, col: str, ids: list[int], how: str) -> DataFrame:
+    """Keep (``how="left_semi"``) or drop (``"left_anti"``) the rows of
+    ``df`` whose ``col`` is in ``ids``: a literal IN under the threshold
+    (stays inside whole-stage codegen), a broadcast join above it (a
+    giant literal array bloats plan analysis)."""
+    ids = [int(i) for i in ids]
     if len(ids) <= _ID_LITERAL_MAX:
-        return df.filter(~F.col(col).isin([int(i) for i in ids]))
-    doomed = df.sparkSession.createDataFrame(
-        [(int(i),) for i in ids], f"{col} long"
-    )
-    return df.join(F.broadcast(doomed), col, "left_anti")
+        hit = F.col(col).isin(ids)
+        return df.filter(hit if how == "left_semi" else ~hit)
+    listed = df.sparkSession.createDataFrame([(i,) for i in ids], f"{col} long")
+    return df.join(F.broadcast(listed), col, how)
+
+
+def _without_ids(df: DataFrame, col: str, ids: list[int]) -> DataFrame:
+    """Exclude ``ids`` from ``df[col]`` (``_match_ids``' anti case)."""
+    return _match_ids(df, col, ids, "left_anti") if ids else df
 
 
 def recover_index_delete(path: str) -> dict:
@@ -613,15 +617,7 @@ def delete_from_ivfpq_index(
     legacy = "ingest" not in enc.columns
     keys = ["cell"] if legacy else ["ingest", "cell"]
     # rows to delete, grouped by partition — one pruned-projection scan
-    doomed = enc.filter(F.col("neighbor_id").isin(ids)) if len(
-        ids
-    ) <= _ID_LITERAL_MAX else enc.join(
-        F.broadcast(
-            spark.createDataFrame([(i,) for i in ids], "neighbor_id long")
-        ),
-        "neighbor_id",
-        "left_semi",
-    )
+    doomed = _match_ids(enc, "neighbor_id", ids, "left_semi")
     affected = (
         doomed.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).collect()
     )

@@ -12,6 +12,7 @@ sort-merge join) fails CI instead of shipping a 100x slowdown.
 
 from .inspect import (
     broadcast_join_count,
+    codegen_compiles,
     parquet_scan_count,
     plan_string,
     pushed_filters,
@@ -22,6 +23,7 @@ from .inspect import (
 
 __all__ = [
     "broadcast_join_count",
+    "codegen_compiles",
     "parquet_scan_count",
     "plan_string",
     "pushed_filters",

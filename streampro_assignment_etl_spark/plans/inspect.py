@@ -4,7 +4,8 @@ Parses ``explain``-style output of a DataFrame's executed plan. String
 parsing is the stable public surface Spark offers for this (the plan
 tree itself is JVM-private); the regexes target the formatted-explain
 labels that have been stable across Spark 3.x/4.x. ``py4j_calls``
-counts the driver-to-JVM round trips a plan build costs.
+counts the driver-to-JVM round trips a plan build costs, and
+``codegen_compiles`` the generated classes Janino compiles.
 """
 
 from __future__ import annotations
@@ -87,3 +88,20 @@ def py4j_calls(spark: SparkSession) -> Iterator[dict[str, int]]:
         yield counts
     finally:
         client.send_command = send
+
+
+@contextmanager
+def codegen_compiles(spark: SparkSession) -> Iterator[dict[str, int]]:
+    """Count the whole-stage/expression classes Janino compiles inside
+    the block: the generated-code cache misses. A query re-run in a warm
+    session should compile nothing; a count near its first run means
+    the cache evicted its classes. The counter is JVM-wide, so work on
+    other threads counts too. Yields ``{"compiles": n}``, final once the
+    block exits."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    counts = {"compiles": 0}
+    start = timer.getCount()
+    try:
+        yield counts
+    finally:
+        counts["compiles"] = timer.getCount() - start

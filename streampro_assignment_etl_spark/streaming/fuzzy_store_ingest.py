@@ -604,7 +604,8 @@ def expire_fuzzy_store(
     """Retention sweep (``object_swap.sweep_superseded``, the skeleton
     ``expire_ivfpq_snapshots`` runs too): delete
     every snapshot dir the CURRENT manifest does not name — superseded
-    ``<kind>-snap-<token>`` dirs, plus the legacy fixed
+    ``<kind>-snap-<token>`` (compaction) and ``<kind>-resign-<token>``
+    (``resign_store``) dirs, plus the legacy fixed
     ``store``/``docs``/``decisions`` dirs once a compaction has moved
     the data out of them — every superseded manifest file, and crashed
     ``.tmp-`` stagings. ``min_age_seconds`` is the ENFORCED grace
@@ -626,7 +627,7 @@ def expire_fuzzy_store(
         n = i.base_name
         if i.type == pafs.FileType.Directory:
             is_snapshot = n in set(_LEGACY_DIRS.values()) or any(
-                n.startswith(f"{k}-snap-") for k in _KINDS
+                n.startswith((f"{k}-snap-", f"{k}-resign-")) for k in _KINDS
             )
             return is_snapshot and n not in live
         return (

@@ -16,11 +16,23 @@ _SLOW_DESELECTED = pytest.StashKey[int]()
 
 
 def pytest_deselected(items):
-    if items:
-        stash = items[0].config.stash
-        stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + sum(
-            1 for item in items if item.get_closest_marker("slow")
-        )
+    """Count the ``slow`` tests the ``-m`` expression excluded. ``-k``
+    deselects through this hook too, so each item is checked against
+    the marker expression: ``-m ""`` counts nothing."""
+    if not items:
+        return
+    config = items[0].config
+    if not config.option.markexpr:
+        return
+    from _pytest.mark.expression import Expression
+
+    expr = Expression.compile(config.option.markexpr)
+    n = 0
+    for item in items:
+        names = {m.name for m in item.iter_markers()}
+        if "slow" in names and not expr.evaluate(lambda name, **_: name in names):
+            n += 1
+    config.stash[_SLOW_DESELECTED] = config.stash.get(_SLOW_DESELECTED, 0) + n
 
 
 def pytest_terminal_summary(terminalreporter, exitstatus, config):

@@ -4683,3 +4683,60 @@ def test_manifest_seam_fence_listing_and_swap_recovery(tmp_path):
         assert sorted(os.listdir(st / kind)) == [
             ".rm-junk", ".rm-old-x", f"ingest={done}", f"ingest={stranded}",
         ]
+
+
+def test_expire_fuzzy_store_sweeps_superseded_resign_dirs(tmp_path):
+    """``expire_fuzzy_store`` treats ``resign_store``'s
+    ``<kind>-resign-<token>`` dirs like compaction snapshots: once a
+    later manifest supersedes them and they are past the grace horizon
+    they are deleted with their manifest file; dirs the live manifest
+    names stay, whether ``-resign-`` or ``-snap-``. No Spark session."""
+    import os
+    import time
+
+    from streampro_assignment_etl_spark.pipeline.object_swap import commit_epoch
+    from streampro_assignment_etl_spark.streaming import fuzzy_store_ingest as fsi
+
+    st = tmp_path / "fstore"
+    st.mkdir()
+    kinds = ("store", "docs", "decisions")
+
+    def commit(epoch, dirs):
+        for d in dirs.values():
+            (st / d).mkdir()
+        doc = fsi._manifest_doc(dirs, None, epoch)
+        commit_epoch(str(st), fsi.MANIFEST_PREFIX, doc, epoch - 1)
+
+    def age_all():
+        old = time.time() - 7200
+        for n in os.listdir(st):
+            os.utime(st / n, (old, old))
+
+    resign1 = {k: f"{k}-resign-0123456789ab" for k in kinds}
+    snap2 = {k: f"{k}-snap-0123456789ac" for k in kinds}
+    commit(1, resign1)
+    commit(2, snap2)
+    # inside the grace horizon nothing goes
+    assert fsi.expire_fuzzy_store(None, str(st), min_age_seconds=3600) == []
+    age_all()
+    deleted = fsi.expire_fuzzy_store(None, str(st), min_age_seconds=3600)
+    assert sorted(d for d in deleted if not d.startswith(fsi.MANIFEST_PREFIX)) == sorted(
+        resign1.values()
+    )
+    assert sum(d.startswith(fsi.MANIFEST_PREFIX) for d in deleted) == 1
+    assert {n for n in os.listdir(st) if not n.startswith(fsi.MANIFEST_PREFIX)} == set(
+        snap2.values()
+    )
+
+    # a live resign snapshot stays; the superseded compaction one goes
+    resign3 = {k: f"{k}-resign-0123456789ad" for k in kinds}
+    commit(3, resign3)
+    age_all()
+    deleted = fsi.expire_fuzzy_store(None, str(st), min_age_seconds=3600)
+    assert sorted(d for d in deleted if not d.startswith(fsi.MANIFEST_PREFIX)) == sorted(
+        snap2.values()
+    )
+    assert {n for n in os.listdir(st) if not n.startswith(fsi.MANIFEST_PREFIX)} == set(
+        resign3.values()
+    )
+    assert fsi.load_store_manifest(str(st))["dirs"] == resign3

@@ -174,6 +174,41 @@ def test_lsh_build_py4j_calls_bounded(spark):
     assert n["calls"] < 1500, n
 
 
+# perfbench's notebook_analytics round (perfbench/workloads.py NOTEBOOK).
+_NOTEBOOK = (
+    "sp_q1_first_session_conversion", "sp_q2_dominant_genre_retention",
+    "sp_q3_dropoff_outliers", "sp_drilldown_worst_combo", "sp_session_overview",
+    "sp_daily_patterns", "pricing_summary", "join_dims_rollup", "theta_range_join",
+)
+
+
+def test_notebook_round_reuses_generated_code(spark):
+    """An interleaved notebook round compiles (almost) nothing once
+    warm: the session's codegen cache holds the nine queries' whole
+    working set (~215 generated classes at sf0.001), so a query's
+    classes are still cached when it comes round again. With Spark's
+    default 100-entry cache the LRU evicts them and the reversed round
+    compiled 137 classes again. The 8 that remain come from q3 and the
+    drill-down, whose ``Expand`` projection order differs build to
+    build (~4 classes each)."""
+    from streampro_assignment_etl_spark.plans import codegen_compiles
+    from streampro_assignment_etl_spark.queries import release_persisted
+    from streampro_assignment_etl_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+    def run(name):
+        _q(spark, name).write.format("noop").mode("overwrite").save()
+        release_persisted()
+
+    for name in _NOTEBOOK:
+        run(name)
+    with codegen_compiles(spark) as c:
+        for name in reversed(_NOTEBOOK):
+            run(name)
+    assert c["compiles"] < 20, c
+
+
 def test_dedup_clusters_bounded_iterations(spark):
     """Star-contraction must converge well under the max_iter bound on
     a worst-case path graph (O(log n) rounds, not O(n))."""
