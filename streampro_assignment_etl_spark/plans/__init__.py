@@ -19,6 +19,7 @@ from .inspect import (
     py4j_calls,
     read_schema_columns,
     shuffle_count,
+    spark_jobs,
 )
 
 __all__ = [
@@ -30,4 +31,5 @@ __all__ = [
     "py4j_calls",
     "read_schema_columns",
     "shuffle_count",
+    "spark_jobs",
 ]

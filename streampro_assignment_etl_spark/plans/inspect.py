@@ -4,13 +4,15 @@ Parses ``explain``-style output of a DataFrame's executed plan. String
 parsing is the stable public surface Spark offers for this (the plan
 tree itself is JVM-private); the regexes target the formatted-explain
 labels that have been stable across Spark 3.x/4.x. ``py4j_calls``
-counts the driver-to-JVM round trips a plan build costs, and
-``codegen_compiles`` the generated classes Janino compiles.
+counts the driver-to-JVM round trips a plan build costs,
+``codegen_compiles`` the generated classes Janino compiles, and
+``spark_jobs`` the Spark jobs a block starts.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -105,3 +107,26 @@ def codegen_compiles(spark: SparkSession) -> Iterator[dict[str, int]]:
         yield counts
     finally:
         counts["compiles"] = timer.getCount() - start
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession) -> Iterator[dict[str, int]]:
+    """Count the Spark jobs the calling thread starts inside the block,
+    such as a parquet schema-inference job at plan-build time, which no
+    SQL-execution counter sees. The block runs under a job group of its
+    own, and the caller's group is restored after. Yields
+    ``{"jobs": n}``, final once the block exits."""
+    sc = spark.sparkContext
+    key = "spark.jobGroup.id"
+    caller_group = sc.getLocalProperty(key)
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    counts = {"jobs": 0}
+    sc.setLocalProperty(key, group)
+    try:
+        yield counts
+    finally:
+        sc.setLocalProperty(key, caller_group)
+        # The status store learns of jobs from the listener bus, which
+        # runs behind the job itself.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counts["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))

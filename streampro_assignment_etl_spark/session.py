@@ -22,8 +22,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # timezone-naive; UTC makes Spark's TIMESTAMP match DuckDB's naive
     # TIMESTAMP bit-for-bit.
     "spark.sql.session.timeZone": "UTC",
-    # testdata events.parquet stores TIMESTAMP(NANOS) which Spark 4
-    # refuses by default; read as long and convert (ts div 1000).
+    # testdata events.parquet stores TIMESTAMP(MICROS) at every scale,
+    # but a TIMESTAMP(NANOS) events.ts, which Spark 4 refuses by
+    # default, still loads: read as long and convert (ts div 1000).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # AQE: runtime partition coalescing + skew-join splitting. This is
     # the main lever that makes one logical plan work at sf0.001 and at

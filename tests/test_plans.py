@@ -209,6 +209,75 @@ def test_notebook_round_reuses_generated_code(spark):
     assert c["compiles"] < 20, c
 
 
+def _inferred_load(spark, sf_dir, name):
+    """``load_table`` as it was with Spark's own schema inference: one
+    schema-inference job per call."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
+        )
+    return df
+
+
+def test_load_table_schema_matches_inference(spark, tmp_path):
+    """``load_table`` reads each table's schema from its parquet footer,
+    and it is exactly the schema Spark's inference job returns: for the
+    ten pyarrow-written testdata tables, for a pyarrow ``events`` whose
+    ``ts`` is TIMESTAMP(NANOS), and for a Spark-written multi-part
+    directory whose timestamps are INT96."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streampro_assignment_etl_spark.sources.testdata import TESTDATA_TABLES, load_table
+
+    for name in TESTDATA_TABLES:
+        assert load_table(spark, SF, name).schema == _inferred_load(spark, SF, name).schema, name
+
+    events = pq.read_table(f"{SF}/events.parquet")
+    events = events.set_column(
+        events.schema.get_field_index("ts"), "ts", events["ts"].cast(pa.timestamp("ns"))
+    )
+    pq.write_table(events, tmp_path / "events.parquet")
+    spark.range(0, 40, numPartitions=4).selectExpr(
+        "id AS doc_id", "CAST(id AS STRING) AS text", "timestamp_seconds(id) AS ts"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    for name in ("events", "documents"):
+        got, want = load_table(spark, str(tmp_path), name), _inferred_load(spark, str(tmp_path), name)
+        assert got.schema == want.schema, name
+        assert sorted(got.collect()) == sorted(want.collect()), name
+
+
+def test_load_tables_start_no_spark_job(spark):
+    """Loading and registering all ten tables runs no Spark job: with
+    Spark's schema inference each ``load_table`` ran one (20 here)."""
+    from streampro_assignment_etl_spark.plans import spark_jobs
+    from streampro_assignment_etl_spark.sources.testdata import load_tables, register_views
+
+    with spark_jobs(spark) as j:
+        load_tables(spark, SF)
+        register_views(spark, SF)
+    assert j["jobs"] == 0, j
+
+
+def test_notebook_builds_start_no_spark_job(spark):
+    """Building a notebook query is plan construction only. The
+    drill-down is left out: its ``first()`` on the worst combination is
+    a deliberate eager step."""
+    from streampro_assignment_etl_spark.plans import spark_jobs
+    from streampro_assignment_etl_spark.queries import release_persisted
+
+    for name in _NOTEBOOK:
+        if name == "sp_drilldown_worst_combo":
+            continue
+        with spark_jobs(spark) as j:
+            _q(spark, name)
+        release_persisted()
+        assert j["jobs"] == 0, (name, j)
+
+
 def test_dedup_clusters_bounded_iterations(spark):
     """Star-contraction must converge well under the max_iter bound on
     a worst-case path graph (O(log n) rounds, not O(n))."""

@@ -7,8 +7,10 @@ No network, no Spark: pyarrow reads each table once, adds a per-copy
 offset to every key column (so joins stay key-correct and families
 don't collide across copies), concatenates, and writes one parquet per
 table. Physical types are preserved exactly — ``events.ts`` stays
-TIMESTAMP(NANOS), ``embeddings.embedding`` stays ``list<float>`` — so
-the loaders exercise the same code paths as the driver-generated data.
+TIMESTAMP(MICROS, isAdjustedToUTC=false) as in every testdata scale (a
+TIMESTAMP(NANOS) source would stay nanos, which the loader still
+converts), ``embeddings.embedding`` stays ``list<float>`` — so the
+loaders exercise the same code paths as the driver-generated data.
 
 Deliberate non-remaps, which make the result a HIGH-DUPLICATION corpus
 rather than a naturally grown one (noted in the soak appendix):

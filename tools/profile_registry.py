@@ -9,7 +9,8 @@ jobs (guide §1.5). Prints one JSON line per query plus a sorted summary
 so the expensive tail is visible. Each line splits the median into
 ``build_s`` (the builder call: plan construction plus any eager
 collects) and ``exec_s`` (the noop write), and counts the builder's
-driver-to-JVM round trips as ``py4j_calls``. ``codegen_compiles``
+driver-to-JVM round trips as ``py4j_calls`` and the Spark jobs it
+starts (schema inference, eager collects) as ``build_jobs``. ``codegen_compiles``
 counts the classes Janino compiled in the reps after the first: it
 should read 0, since those reps reuse the first rep's generated code
 (``null`` with ``--reps 1``). Reps run back to back, so this sweep
@@ -17,7 +18,7 @@ cannot show what an interleaved session evicts from the codegen cache;
 perfbench's ``notebook_analytics`` workload does. This is the profiling
 harness, not bench.py, whose methodology is unchanged.
 
-Usage: python tools/profile_registry.py [--only name1,name2] [--skip-streaming]
+Usage: python tools/profile_registry.py [--only name1,name2] [--skip name1,name2] [--reps N]
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from streampro_assignment_etl_spark.plans import codegen_compiles, py4j_calls  # noqa: E402
+from streampro_assignment_etl_spark.plans import codegen_compiles, py4j_calls, spark_jobs  # noqa: E402
 from streampro_assignment_etl_spark.queries import REGISTRY, release_persisted  # noqa: E402
 from streampro_assignment_etl_spark.session import get_spark  # noqa: E402
 
@@ -63,16 +64,18 @@ def main() -> None:
     errors: dict[str, str] = {}
     for name in names:
         spec = REGISTRY[name]
-        samples, builds, calls, compiles = [], [], [], []
+        samples, builds, calls, jobs, compiles = [], [], [], [], []
         try:
             for _ in range(args.reps):
                 spark.sparkContext.setJobDescription(f"profile: {name}")
                 t0 = time.perf_counter()
                 with codegen_compiles(spark) as c:
-                    with py4j_calls(spark) as n:
-                        df = spec.builder(spark, sf_dir)
-                    builds.append(time.perf_counter() - t0)
+                    with spark_jobs(spark) as j:
+                        with py4j_calls(spark) as n:
+                            df = spec.builder(spark, sf_dir)
+                        builds.append(time.perf_counter() - t0)
                     calls.append(n["calls"])
+                    jobs.append(j["jobs"])
                     df.write.format("noop").mode("overwrite").save()
                 samples.append(time.perf_counter() - t0)
                 compiles.append(c["compiles"])
@@ -87,6 +90,7 @@ def main() -> None:
                 "build_s": round(statistics.median(builds), 3),
                 "exec_s": round(statistics.median(execs), 3),
                 "py4j_calls": int(statistics.median(calls)),
+                "build_jobs": int(statistics.median(jobs)),
                 "codegen_compiles": sum(compiles[1:]) if len(compiles) > 1 else None,
             }), flush=True)
         except Exception as e:  # noqa: BLE001 — record and keep sweeping
