@@ -574,15 +574,19 @@ def main(argv: list[str] | None = None, lake_factory=None) -> int:
                     file=sys.stderr,
                 )
                 return 2
+            from ..streaming._drain import read_landing
             from ..streaming.takedown_stream import (
                 run_takedown_request_stream,
             )
 
             spark = get_spark("streampro-takedown-stream")
             run_takedown_request_stream(
-                spark.readStream.schema(
-                    f"request_id long, doc_id {args.id_type}"
-                ).parquet(args.requests_dir),
+                read_landing(
+                    spark,
+                    f"request_id long, doc_id {args.id_type}",
+                    args.requests_dir,
+                    "parquet",
+                ),
                 args.audit_dir,
                 args.checkpoint_dir,
                 index_path=args.index,
@@ -904,7 +908,7 @@ def main(argv: list[str] | None = None, lake_factory=None) -> int:
 
         from ..queries.reshape import scd2_apply_changes, scd2_from_log
         from ..session import get_spark
-        from .writers import _staged_swap, require_local_path
+        from .writers import _staged_bootstrap, _staged_swap, require_local_path
 
         spark = get_spark("streampro-scd2")
         root = require_local_path(args.target, "scd2")
@@ -957,12 +961,9 @@ def main(argv: list[str] | None = None, lake_factory=None) -> int:
             if root.exists():
                 print(f"target exists: {root} (use apply)", file=sys.stderr)
                 return 2
-            staging = root.parent / f".{root.name}.boot-{uuid.uuid4().hex[:8]}"
-            _from_canonical(
-                scd2_from_log(_read_changes(), "change_id")
-            ).write.mode("overwrite").parquet(str(staging))
-            root.parent.mkdir(parents=True, exist_ok=True)
-            staging.rename(root)
+            _staged_bootstrap(
+                root, _from_canonical(scd2_from_log(_read_changes(), "change_id"))
+            )
         else:  # apply
             if not root.exists():
                 print(f"target missing: {root} (use init)", file=sys.stderr)

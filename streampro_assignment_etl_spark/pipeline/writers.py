@@ -86,6 +86,27 @@ def _staged_swap(root: Path, staging: Path) -> None:
     shutil.rmtree(backup)
 
 
+def _staged_bootstrap(
+    root: Path, df: DataFrame, partition_by: str | None = None
+) -> None:
+    """Create the parquet table at ``root`` from ``df`` (its first batch)
+    through a staged write + rename: a crash mid-write leaves only the
+    hidden ``.<name>.boot-<8 hex>`` staging dir, never a partial table.
+    A crashed earlier bootstrap's ``.boot-*`` dir is reclaimed first (a
+    replayed batch rewrites the same rows, so dropping stale staging is
+    always safe); the name is ``recover_staged_swap``'s ``boot`` kind."""
+    if root.parent.exists():
+        for stale in root.parent.glob(f".{root.name}.boot-*"):
+            shutil.rmtree(stale, ignore_errors=True)
+    staging = root.parent / f".{root.name}.boot-{uuid.uuid4().hex[:8]}"
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(str(staging))
+    root.parent.mkdir(parents=True, exist_ok=True)
+    staging.rename(root)
+
+
 def recover_staged_swap(path: str, grace_s: float = 900.0) -> bool:
     """Restore a table lost to a hard crash inside ``_staged_swap``'s
     rename window: if ``path`` is missing but a ``.<name>.old-*`` backup
@@ -134,7 +155,7 @@ def recover_staged_swap(path: str, grace_s: float = 900.0) -> bool:
         backups[-1].rename(root)
         restored = True
     # every _staged_swap caller's namespace: backups plus the staging
-    # kinds (writers: compact/merge/roll; events_stream: boot/scd2/
+    # kinds (writers: compact/merge/roll/boot; events_stream: scd2/
     # stage-full; cli scd2: scd2) — all stamped with an 8-hex uuid
     token = re.compile(
         rf"^\.{re.escape(root.name)}"

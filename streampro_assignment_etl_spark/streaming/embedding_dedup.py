@@ -298,23 +298,15 @@ def run_embedding_dedup_stream(
     makes pair output exactly-once; the batch_id-keyed overwrite keeps
     checkpoint retries idempotent. With ``ttl_seconds`` (wall horizon)
     or ``ttl_event_seconds`` (event horizon over a ``ts`` field in the
-    JSONL) the query drains until idle instead of awaiting termination
-    (same machinery as ``stateful_dedup.run_dedup_stream``)."""
-    from ._drain import drain_available_now, make_pair_sink_writer
+    JSONL) the plan holds a timeout, so ``_drain.drain_stream`` drains
+    until idle instead of awaiting termination."""
+    from ._drain import batch_id_writer, drain_stream, read_landing
 
-    fields = [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-    ]
+    schema = "vec_id long, embedding array<float>"
     if ttl_event_seconds is not None:
-        fields.append(T.StructField("ts", T.TimestampType()))
-    src_schema = T.StructType(fields)
-    reader = spark.readStream.schema(src_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(landing_dir)
+        schema += ", ts timestamp"
     pairs = embedding_dedup_stream(
-        stream,
+        read_landing(spark, schema, landing_dir, "json", max_files_per_trigger),
         threshold=threshold,
         n_planes=n_planes,
         dim=dim,
@@ -323,15 +315,10 @@ def run_embedding_dedup_stream(
         ttl_event_seconds=ttl_event_seconds,
         quantize_state=quantize_state,
     )
-
-    any_ttl = ttl_seconds is not None or ttl_event_seconds is not None
-    q = (
-        pairs.writeStream.outputMode("update")
-        .foreachBatch(
-            make_pair_sink_writer(out_dir, ["vec_a", "vec_b"], skip_empty=any_ttl)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_stream(
+        pairs,
+        checkpoint_dir,
+        batch_id_writer(out_dir, ["vec_a", "vec_b"]),
+        mode="update",
+        timeout_s=timeout_s,
     )
-    drain_available_now(q, timeout_s, ttl=any_ttl)

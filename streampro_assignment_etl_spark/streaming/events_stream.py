@@ -24,12 +24,14 @@ real cluster:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dec
 from ..pipeline.schemas import TESTDATA_TABLES
-from ._drain import drain_available_now, drain_confs
+from ._drain import batch_id_writer, drain_stream, read_landing, skip_empty
 
 EVENTS_SCHEMA = TESTDATA_TABLES["trusted_events"].struct  # ts arrives as string
 
@@ -37,10 +39,8 @@ EVENTS_SCHEMA = TESTDATA_TABLES["trusted_events"].struct  # ts arrives as string
 def read_events_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     """Typed streaming read of events JSONL files in a landing dir,
     with an event-time column parsed for watermarking."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .json(landing_dir)
-        .withColumn("ts_event", F.to_timestamp("ts"))
+    return read_landing(spark, EVENTS_SCHEMA, landing_dir).withColumn(
+        "ts_event", F.to_timestamp("ts")
     )
 
 
@@ -96,7 +96,7 @@ def sessionized_stream(
 
 def write_stream_to_trusted(
     df: DataFrame, trusted_dir: str, checkpoint_dir: str
-):
+) -> None:
     """foreachBatch partitioned-parquet sink, idempotent per micro-batch:
     batch N owns the ``batch_id=N`` subtree and OVERWRITES it, so a
     micro-batch that partially writes and is checkpoint-retried replaces
@@ -104,7 +104,11 @@ def write_stream_to_trusted(
     idempotent writes = end-to-end exactly-once (a bare
     ``mode('append')`` here would silently be at-least-once). Readers
     of ``trusted_dir`` see batch_id as one more Hive partition column.
-    The streaming twin of RawToTrustedProcessor._load."""
+    The streaming twin of RawToTrustedProcessor._load.
+
+    Blocks until the stream drains (``_drain.drain_stream``) and returns
+    None; raises ``TimeoutError`` when the drain does not finish within
+    300 s — the query is stopped first and the sink is partial."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -116,12 +120,7 @@ def write_stream_to_trusted(
             .parquet(f"{trusted_dir}/batch_id={batch_id}")
         )
 
-    return (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain_stream(df, checkpoint_dir, write_batch)
 
 
 def run_stream_to_parquet(
@@ -142,16 +141,11 @@ def run_stream_to_parquet(
     finalizes them — re-run against the same checkpoint to flush (the
     restart resumes the checkpointed watermark over an empty batch).
 
-    One micro-batch per update-mode drain: unless the plan holds a
-    user-defined stateful operator (``FlatMapGroupsWithState``,
-    ``transformWithState`` and their pandas forms), an update-mode drain
-    runs without Spark's no-data batch. That batch only evicts expired
-    state and emits nothing in update mode; eviction is deferred to the
-    next drain's data batch, under the same watermark, so state holds
-    at most one drain's expired windows longer. Plans with such an
-    operator keep the no-data batches because their timeouts and timers
-    fire in them; append and complete mode keep them because their rows
-    are emitted on eviction. See ``_drain.needs_no_data_batches``.
+    One micro-batch per update-mode drain (``_drain.drain_stream``): no
+    no-data batch unless the plan holds a user-defined stateful operator
+    (``_drain.needs_no_data_batches``). Eviction is deferred to the next
+    drain's data batch, under the same watermark, so state holds at most
+    one drain's expired windows longer.
 
     Late rows: a drain's data batch filters late rows against the
     watermark of the batch before it (Spark ≥ 3.4), which is now the
@@ -161,9 +155,8 @@ def run_stream_to_parquet(
     than the watermark from two drains back is still dropped. This path
     never drops a row that a drain with no-data batches keeps.
 
-    Each micro-batch overwrites its own ``batch_id=N`` subtree, making
-    the sink idempotent under checkpoint retries (exactly-once, not
-    at-least-once); readers see batch_id as a partition column.
+    The sink is ``_drain.batch_id_writer``: exactly-once under
+    checkpoint retries; readers see batch_id as a partition column.
 
     ``shuffle_partitions`` sets this stream's STATE partition count
     (frozen at the first checkpoint — same contract and sizing rule as
@@ -180,24 +173,15 @@ def run_stream_to_parquet(
     Raises ``TimeoutError`` when the drain does not finish within
     ``timeout_s``; the query is stopped first.
     """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    with drain_confs(
+    drain_stream(
         result,
-        mode,
+        checkpoint_dir,
+        batch_id_writer(out_dir),
+        mode=mode,
+        timeout_s=timeout_s,
         shuffle_partitions=shuffle_partitions,
         checkpoint_file_checksum=checkpoint_file_checksum,
-    ):
-        q = (
-            result.writeStream.outputMode(mode)
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_available_now(q, timeout_s)
+    )
 
 
 def read_update_sink(spark: SparkSession, out_dir: str, key_cols: list[str]) -> DataFrame:
@@ -229,9 +213,15 @@ def read_update_sink(spark: SparkSession, out_dir: str, key_cols: list[str]) -> 
     that window re-emit with its exact cumulative count in the new
     batch, so this reader returns the batch recompute over every row the
     stream kept."""
+    return _latest_per_key(
+        spark.read.option("basePath", out_dir).parquet(out_dir), key_cols
+    )
+
+
+def _latest_per_key(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """The update-sink winnow: the row of each key's max batch_id."""
     from pyspark.sql.window import Window
 
-    df = spark.read.option("basePath", out_dir).parquet(out_dir)
     w = Window.partitionBy(*key_cols).orderBy(F.col("batch_id").desc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -299,15 +289,7 @@ def compact_update_sink(
                 "update-mode sink; compacting it would drop summary rows"
             )
 
-        # read_update_sink's winnow, inlined over the persisted frame.
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(*key_cols).orderBy(F.col("batch_id").desc())
-        latest = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        latest = _latest_per_key(df, key_cols)
         staging = root.parent / f".{root.name}.compact-{uuid.uuid4().hex[:8]}"
         (
             # Range-partition on (batch_id, keys): each task holds a
@@ -366,13 +348,12 @@ def run_stream_upsert(
     ``resolve_update_duplicates``), so batch 0 and batch N obey one
     contract.
 
-    Drains follow ``run_stream_to_parquet``'s rule: no no-data batch
-    unless the plan holds a user-defined stateful operator (this sink
-    skipped the empty batch anyway, but still paid for running it), and
+    Drains go through ``_drain.drain_stream``: no no-data batch unless
+    the plan holds a user-defined stateful operator (this sink skipped
+    the empty batch anyway, but still paid for running it), and
     ``TimeoutError`` once ``timeout_s`` passes."""
-    import uuid
-
     from ..pipeline.writers import (
+        _staged_bootstrap,
         merge_upsert,
         require_local_path,
         resolve_update_duplicates,
@@ -381,51 +362,26 @@ def run_stream_upsert(
     root = require_local_path(target_path, "run_stream_upsert")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: merge_upsert runs several actions over the batch
-        # frame, which would otherwise re-execute its plan each time.
-        batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            if not root.exists():
-                # Bootstrap through the same staged-write + rename dance
-                # as merge_upsert/compact_parquet: a crash mid-write
-                # leaves only the hidden staging dir, never a partial
-                # target. A crashed earlier bootstrap's .boot-* dir is
-                # reclaimed here (the replayed batch rewrites the same
-                # rows, so dropping stale staging is always safe).
-                import shutil
+        if not root.exists():
+            _staged_bootstrap(
+                root, resolve_update_duplicates(batch_df, tuple(keys), order_by)
+            )
+        else:
+            # str(root), not target_path: require_local_path
+            # normalized a file:// URI to a plain path — the raw
+            # URI would reach merge_upsert's pathlib bookkeeping as
+            # a relative 'file:/...' path and rename into nowhere.
+            merge_upsert(
+                batch_df.sparkSession, str(root), batch_df, tuple(keys),
+                order_by=order_by,
+            )
 
-                if root.parent.exists():
-                    for stale in root.parent.glob(f".{root.name}.boot-*"):
-                        shutil.rmtree(stale, ignore_errors=True)
-                staging = root.parent / f".{root.name}.boot-{uuid.uuid4().hex[:8]}"
-                resolve_update_duplicates(
-                    batch_df, tuple(keys), order_by
-                ).write.mode("overwrite").parquet(str(staging))
-                root.parent.mkdir(parents=True, exist_ok=True)
-                staging.rename(root)
-            else:
-                # str(root), not target_path: require_local_path
-                # normalized a file:// URI to a plain path — the raw
-                # URI would reach merge_upsert's pathlib bookkeeping as
-                # a relative 'file:/...' path and rename into nowhere.
-                merge_upsert(
-                    batch_df.sparkSession, str(root), batch_df, tuple(keys),
-                    order_by=order_by,
-                )
-        finally:
-            batch_df.unpersist()
-
-    with drain_confs(result, "update"):
-        q = (
-            result.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_available_now(q, timeout_s)
+    # skip_empty persists the batch: merge_upsert runs several actions
+    # over it, which would otherwise re-execute its plan each time.
+    drain_stream(
+        result, checkpoint_dir, skip_empty(write_batch), mode="update",
+        timeout_s=timeout_s,
+    )
 
 
 def enriched_events_stream(
@@ -546,14 +502,7 @@ def run_pit_enriched_stream(
             batch_df, dim, key=key, ts_col=ts_col, how=how, dim_cols=dim_cols
         ).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    q = (
-        facts.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q, timeout_s)
+    drain_stream(facts, checkpoint_dir, write_batch, timeout_s=timeout_s)
 
 
 # object-store swap namespace for the bucketed SCD-2 sink (see
@@ -792,10 +741,10 @@ def run_scd2_upsert_stream(
     this full swap; the bucketed form wins on bytes as soon as the
     dimension outgrows its per-bucket constants).
     """
-    import shutil
     import uuid
 
     from ..pipeline.writers import (
+        _staged_bootstrap,
         _staged_swap,
         recover_staged_swap,
         require_local_path,
@@ -820,15 +769,7 @@ def run_scd2_upsert_stream(
                 return
             spark = batch_df.sparkSession
             if not root.exists():
-                if root.parent.exists():
-                    for stale in root.parent.glob(f".{root.name}.boot-*"):
-                        shutil.rmtree(stale, ignore_errors=True)
-                staging = root.parent / f".{root.name}.boot-{uuid.uuid4().hex[:8]}"
-                scd2_from_log(batch_df, "change_id").write.mode(
-                    "overwrite"
-                ).parquet(str(staging))
-                root.parent.mkdir(parents=True, exist_ok=True)
-                staging.rename(root)
+                _staged_bootstrap(root, scd2_from_log(batch_df, "change_id"))
             else:
                 existing = spark.read.parquet(str(root))
                 merged = scd2_apply_changes(existing, batch_df)
@@ -838,14 +779,7 @@ def run_scd2_upsert_stream(
         finally:
             batch_df.unpersist()
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q, timeout_s)
+    drain_stream(changes, checkpoint_dir, write_batch, timeout_s=timeout_s)
 
 
 def _recover_scd2_buckets(root) -> None:
@@ -873,16 +807,55 @@ def _recover_scd2_buckets(root) -> None:
             shutil.rmtree(stale, ignore_errors=True)
 
 
+def _scd2_crossover(
+    mode: str,
+    n_buckets: int,
+    full_fraction: float,
+    full_rewrite_max_bytes: int,
+    plan_log: list | None,
+    batch_id: int,
+    touched: int,
+    dim_bytes,
+) -> str:
+    """The bucketed SCD-2 sink's rewrite choice for batch ``batch_id``,
+    ``"full"`` or ``"bucketed"``, appended to ``plan_log`` when given;
+    the sink binds the first five arguments, and each path (local,
+    object store) passes its own ``dim_bytes()`` measure, called only in
+    ``"auto"`` mode. ``"auto"`` applies the measured crossover rule from
+    SCALE.md (VERDICT r14 #5): a SCATTERED batch over a SMALL dimension
+    loses to one full staged swap (per-bucket read/write constants
+    dominate — the birthday effect saturates touched buckets fast: 100
+    uniform keys over 64 buckets touch ~41); a focused batch, or ANY
+    batch once the dimension is large, wins with the bucket-pruned
+    rewrite. ``touched`` is exact (a distinct over the batch, no
+    birthday ESTIMATE)."""
+    decide, size = mode, None
+    if mode == "auto":
+        size = dim_bytes()
+        decide = (
+            "full"
+            if touched >= full_fraction * n_buckets and size <= full_rewrite_max_bytes
+            else "bucketed"
+        )
+    if plan_log is not None:
+        plan_log.append(
+            {
+                "batch_id": int(batch_id),
+                "mode": decide,
+                "touched_buckets": touched,
+                "n_buckets": int(n_buckets),
+                "dim_bytes": size,
+            }
+        )
+    return decide
+
+
 def _scd2_remote_write_batch(
     batch_df: DataFrame,
     target_path: str,
     filesystem,
-    n_buckets: int,
     bucket_expr,
-    mode: str,
-    full_fraction: float,
-    full_rewrite_max_bytes: int,
-    plan_log: list | None,
+    choose,
     batch_id: int,
 ) -> None:
     """One micro-batch of the bucketed SCD-2 sink against an
@@ -904,7 +877,7 @@ def _scd2_remote_write_batch(
     injected ``filesystem=`` bridges Spark through a driver-local
     mirror of ONLY the affected buckets' files (the hermetic-test and
     connector-less configuration; O(affected buckets) driver I/O, not
-    O(dimension))."""
+    O(dimension)). ``choose`` is the sink's bound ``_scd2_crossover``."""
     import shutil
     import tempfile
     import uuid
@@ -1019,28 +992,9 @@ def _scd2_remote_write_batch(
             .distinct()
             .collect()
         )
-        decide = mode
-        dim_bytes = None
-        if mode == "auto":
-            dim_bytes = sum(sizes.get(r, 0) for r in visible)
-            decide = (
-                "full"
-                if (
-                    len(buckets) >= full_fraction * n_buckets
-                    and dim_bytes <= full_rewrite_max_bytes
-                )
-                else "bucketed"
-            )
-        if plan_log is not None:
-            plan_log.append(
-                {
-                    "batch_id": int(batch_id),
-                    "mode": decide,
-                    "touched_buckets": len(buckets),
-                    "n_buckets": int(n_buckets),
-                    "dim_bytes": dim_bytes,
-                }
-            )
+        decide = choose(
+            batch_id, len(buckets), lambda: sum(sizes.get(r, 0) for r in visible)
+        )
         if decide == "full":
             existing = read_rels(visible).drop("bucket")
             by_bucket = stage_merged(scd2_apply_changes(existing, batch_df))
@@ -1125,6 +1079,7 @@ def run_scd2_upsert_stream_bucketed(
     import uuid
 
     from ..pipeline.writers import (
+        _staged_bootstrap,
         _staged_swap,
         recover_staged_swap,
         require_local_path,
@@ -1142,22 +1097,16 @@ def run_scd2_upsert_stream_bucketed(
         else None
     )
     bucket_expr = F.pmod(F.hash(F.col("user_id")), F.lit(int(n_buckets)))
+    choose = partial(
+        _scd2_crossover, mode, n_buckets, full_fraction, full_rewrite_max_bytes, plan_log
+    )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not is_local:
             # object-store dimension (VERDICT r15 #1): same algebra,
             # manifest-driven per-file swap — see _scd2_remote_write_batch
             _scd2_remote_write_batch(
-                batch_df,
-                target_path,
-                filesystem,
-                n_buckets,
-                bucket_expr,
-                mode,
-                full_fraction,
-                full_rewrite_max_bytes,
-                plan_log,
-                batch_id,
+                batch_df, target_path, filesystem, bucket_expr, choose, batch_id
             )
             return
         # a hard crash inside a previous batch's FULL swap leaves the
@@ -1174,22 +1123,18 @@ def run_scd2_upsert_stream_bucketed(
                 return
             spark = batch_df.sparkSession
             if not root.exists():
-                if root.parent.exists():
-                    for stale in root.parent.glob(f".{root.name}.boot-*"):
-                        shutil.rmtree(stale, ignore_errors=True)
-                staging = root.parent / f".{root.name}.boot-{uuid.uuid4().hex[:8]}"
                 # repartition on the bucket column: one task owns each
                 # bucket, so a bucket dir is ONE file per rewrite — a
                 # plain partitionBy would leave up to
                 # spark.sql.shuffle.partitions shards per bucket (the
                 # small-files tax compact_parquet exists to undo)
-                scd2_from_log(batch_df, "change_id").withColumn(
-                    "bucket", bucket_expr
-                ).repartition(F.col("bucket")).write.mode(
-                    "overwrite"
-                ).partitionBy("bucket").parquet(str(staging))
-                root.parent.mkdir(parents=True, exist_ok=True)
-                staging.rename(root)
+                _staged_bootstrap(
+                    root,
+                    scd2_from_log(batch_df, "change_id")
+                    .withColumn("bucket", bucket_expr)
+                    .repartition(F.col("bucket")),
+                    partition_by="bucket",
+                )
                 return
             _recover_scd2_buckets(root)
             buckets = sorted(
@@ -1198,57 +1143,18 @@ def run_scd2_upsert_stream_bucketed(
                 .distinct()
                 .collect()
             )
-            # Sink auto-select (VERDICT r14 #5): the measured crossover
-            # rule from SCALE.md, previously prose an operator had to
-            # apply by hand. A SCATTERED batch over a SMALL dimension
-            # loses to one full staged swap (per-bucket read/write
-            # constants dominate — the birthday effect saturates
-            # touched-buckets fast: 100 uniform keys over 64 buckets
-            # touch ~41); a focused batch, or ANY batch once the
-            # dimension is large, wins with the bucket-pruned rewrite.
-            # The touched count is exact (distinct over the batch,
-            # already collected above — no birthday ESTIMATE needed at
-            # decision time); dimension bytes are one local stat walk.
-            decide = mode
-            dim_bytes = None
-            if mode == "auto":
-                dim_bytes = sum(
-                    p.stat().st_size
-                    for p in root.rglob("*.parquet")
-                    if p.is_file()
-                )
-                decide = (
-                    "full"
-                    if (
-                        len(buckets) >= full_fraction * n_buckets
-                        and dim_bytes <= full_rewrite_max_bytes
-                    )
-                    else "bucketed"
-                )
-            if plan_log is not None:
-                plan_log.append(
-                    {
-                        "batch_id": int(batch_id),
-                        "mode": decide,
-                        "touched_buckets": len(buckets),
-                        "n_buckets": int(n_buckets),
-                        "dim_bytes": dim_bytes,
-                    }
-                )
+            # dimension bytes are one local stat walk
+            decide = choose(
+                batch_id,
+                len(buckets),
+                lambda: sum(
+                    p.stat().st_size for p in root.rglob("*.parquet") if p.is_file()
+                ),
+            )
+            live = [b for b in buckets if (root / f"bucket={b}").exists()]
             if decide == "full":
                 existing = spark.read.parquet(str(root)).drop("bucket")
-                merged = scd2_apply_changes(existing, batch_df)
-                token = uuid.uuid4().hex[:8]
-                staging = root.parent / f".{root.name}.stage-full-{token}"
-                merged.withColumn("bucket", bucket_expr).repartition(
-                    F.col("bucket")
-                ).write.mode("overwrite").partitionBy("bucket").parquet(
-                    str(staging)
-                )
-                _staged_swap(root, staging)
-                return
-            live = [b for b in buckets if (root / f"bucket={b}").exists()]
-            if live:
+            elif live:
                 existing = (
                     spark.read.option("basePath", str(root))
                     .parquet(*[str(root / f"bucket={b}") for b in live])
@@ -1260,13 +1166,17 @@ def run_scd2_upsert_stream_bucketed(
                 )
             merged = scd2_apply_changes(existing, batch_df)
             token = uuid.uuid4().hex[:8]
-            staging = root.parent / f".{root.name}.stage-{token}"
+            kind = "stage-full" if decide == "full" else "stage"
+            staging = root.parent / f".{root.name}.{kind}-{token}"
             # one file per rewritten bucket (see bootstrap note)
             merged.withColumn("bucket", bucket_expr).repartition(
                 F.col("bucket")
             ).write.mode("overwrite").partitionBy("bucket").parquet(
                 str(staging)
             )
+            if decide == "full":
+                _staged_swap(root, staging)
+                return
             for b in buckets:
                 rb = root / f"bucket={b}"
                 sb = staging / f"bucket={b}"
@@ -1281,11 +1191,4 @@ def run_scd2_upsert_stream_bucketed(
         finally:
             batch_df.unpersist()
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q, timeout_s)
+    drain_stream(changes, checkpoint_dir, write_batch, timeout_s=timeout_s)

@@ -229,24 +229,17 @@ def run_fuzzy_dedup_stream(
     buckets, always in the ONE batch where its second document arrives,
     so the batch-local dropDuplicates makes pair output exactly-once;
     the batch_id-keyed overwrite keeps checkpoint retries idempotent.
-    With either TTL lever (wall ``ttl_seconds`` / event
-    ``ttl_event_seconds`` over a ``ts`` field), drain-until-idle (see
-    ``_drain``)."""
-    from ._drain import drain_available_now, make_pair_sink_writer
+    Drains through ``_drain.drain_stream``: with either TTL lever (wall
+    ``ttl_seconds`` / event ``ttl_event_seconds`` over a ``ts`` field)
+    the plan holds a timeout, so the drain runs until idle and keeps
+    zero-row state-cleanup batches out of the sink."""
+    from ._drain import batch_id_writer, drain_stream, read_landing
 
-    fields = [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
+    schema = "doc_id long, text string"
     if ttl_event_seconds is not None:
-        fields.append(T.StructField("ts", T.TimestampType()))
-    src_schema = T.StructType(fields)
-    reader = spark.readStream.schema(src_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(landing_dir)
+        schema += ", ts timestamp"
     pairs = fuzzy_dedup_stream(
-        stream,
+        read_landing(spark, schema, landing_dir, "json", max_files_per_trigger),
         threshold=threshold,
         num_hashes=num_hashes,
         bands=bands,
@@ -254,15 +247,10 @@ def run_fuzzy_dedup_stream(
         ttl_seconds=ttl_seconds,
         ttl_event_seconds=ttl_event_seconds,
     )
-
-    any_ttl = ttl_seconds is not None or ttl_event_seconds is not None
-    q = (
-        pairs.writeStream.outputMode("update")
-        .foreachBatch(
-            make_pair_sink_writer(out_dir, ["doc_a", "doc_b"], skip_empty=any_ttl)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_stream(
+        pairs,
+        checkpoint_dir,
+        batch_id_writer(out_dir, ["doc_a", "doc_b"]),
+        mode="update",
+        timeout_s=timeout_s,
     )
-    drain_available_now(q, timeout_s, ttl=any_ttl)

@@ -87,7 +87,7 @@ from ..pipeline.object_swap import (
     write_tombstone,
 )
 from ..pipeline.writers import _pafs_base
-from ._drain import drain_available_now
+from ._drain import drain_stream, read_landing
 from .index_ingest import _marker_exists, _write_marker
 
 STORE_DIR = "store"
@@ -378,14 +378,12 @@ def run_fuzzy_store_ingest_stream(
     """Drain a document stream into the store at ``store_path``
     (availableNow; re-runs resume from the checkpoint). The store may
     start empty — the first batch seeds it."""
-    q = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(make_fuzzy_ingest_writer(store_path, **writer_kwargs))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_stream(
+        doc_stream,
+        checkpoint_dir,
+        make_fuzzy_ingest_writer(store_path, **writer_kwargs),
+        timeout_s=timeout_s,
     )
-    drain_available_now(q, timeout_s)
 
 
 def _subtree_infos(fs, base: str, dir_name: str):
@@ -879,17 +877,14 @@ def run_fuzzy_store_ingest_from_dir(
 ) -> None:
     """Convenience runner: parquet landing dir → store. Each dropped
     file is a micro-batch when ``max_files_per_trigger=1``."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     run_fuzzy_store_ingest_stream(
-        reader.parquet(landing_dir),
+        read_landing(
+            spark,
+            "doc_id long, text string",
+            landing_dir,
+            "parquet",
+            max_files_per_trigger,
+        ),
         store_path,
         checkpoint_dir,
         timeout_s=timeout_s,

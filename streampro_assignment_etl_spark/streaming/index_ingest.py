@@ -43,11 +43,10 @@ the batch_id-idempotent sink discipline of events_stream.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ..operators import ann_index
 from ..pipeline.writers import _pafs_base
-from ._drain import drain_available_now
+from ._drain import drain_stream, read_landing
 
 APPLIED_DIR = "applied"
 
@@ -148,14 +147,12 @@ def run_index_append_stream(
     so two distinct streams can feed one index (their batch-id spaces
     don't collide); the single-writer contract then applies across
     both — run them in one driver or accept epoch-abort retries."""
-    q = (
-        emb_stream.writeStream.outputMode("append")
-        .foreachBatch(make_index_append_writer(path, id_col, vec_col, stream_name))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_stream(
+        emb_stream,
+        checkpoint_dir,
+        make_index_append_writer(path, id_col, vec_col, stream_name),
+        timeout_s=timeout_s,
     )
-    drain_available_now(q, timeout_s)
 
 
 def run_index_append_stream_from_dir(
@@ -173,22 +170,10 @@ def run_index_append_stream_from_dir(
     """Convenience runner: parquet landing dir → index. Each dropped
     file is a micro-batch when ``max_files_per_trigger=1`` — the shape
     the tests use to force genuine multi-batch, restartable ingest."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(
-                vec_col,
-                T.ArrayType(
-                    T.DoubleType() if vec_element == "double" else T.FloatType()
-                ),
-            ),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    element = "double" if vec_element == "double" else "float"
+    schema = f"`{id_col}` long, `{vec_col}` array<{element}>"
     run_index_append_stream(
-        reader.parquet(landing_dir),
+        read_landing(spark, schema, landing_dir, "parquet", max_files_per_trigger),
         path,
         checkpoint_dir,
         id_col=id_col,

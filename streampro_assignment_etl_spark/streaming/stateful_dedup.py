@@ -107,6 +107,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.text import content_fingerprint
 from ._cohort import require_utc_session
+from ._drain import batch_id_writer, drain_stream, read_landing
 
 DOC_SCHEMA = T.StructType(
     [
@@ -655,49 +656,29 @@ def run_dedup_stream(
     Raises ``ValueError`` for an invalid variant before the query
     starts, and ``TimeoutError`` when the drain does not reach idle
     within ``timeout_s``; the query is stopped first."""
-    fields = [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
+    schema = "doc_id long, text string"
     if ttl_event_seconds is not None:
-        fields.append(T.StructField(_TS, T.TimestampType()))
-    reader = spark.readStream.schema(T.StructType(fields))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        schema += f", {_TS} timestamp"
     deduped = dedup_stream(
-        reader.json(landing_dir),
+        read_landing(spark, schema, landing_dir, "json", max_files_per_trigger),
         n_shards=n_shards,
         bloom=bloom,
         ttl_seconds=ttl_seconds,
         ttl_event_seconds=ttl_event_seconds,
     )
-
-    from ._drain import drain_available_now, drain_confs, make_pair_sink_writer
-
     # Rows are already unique per batch (one per never-before-seen
-    # fingerprint), so no dedup keys; skip-empty applies in both TTL
-    # modes (zero-row state-cleanup batches must not litter the sink).
-    any_ttl = ttl_seconds is not None or ttl_event_seconds is not None
-    write_batch = make_pair_sink_writer(out_dir, None, skip_empty=any_ttl)
-    with drain_confs(
+    # fingerprint), so no dedup keys. Both TTL modes drain until idle:
+    # EventTimeTimeout queries normally self-terminate, but the idle
+    # loop breaks the moment the query goes inactive.
+    drain_stream(
         deduped,
-        "update",
+        checkpoint_dir,
+        batch_id_writer(out_dir),
+        mode="update",
+        timeout_s=timeout_s,
         shuffle_partitions=shuffle_partitions,
         checkpoint_file_checksum=checkpoint_file_checksum,
-    ):
-        q = (
-            deduped.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # ProcessingTimeTimeout queries never self-terminate (they keep
-        # servicing state-cleanup batches); EventTimeTimeout ones
-        # normally do once the watermark stops advancing, but the
-        # drain-until-idle loop is safe for both (it breaks the moment
-        # the query goes inactive), so both TTL modes share it.
-        drain_available_now(q, timeout_s, ttl=any_ttl)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._drain import drain_available_now
+from ._drain import drain_stream
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -170,14 +170,7 @@ def run_takedown_request_stream(
             f"{audit_dir}/batch_id={batch_id}"
         )
 
-    q = (
-        requests.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q, timeout_s)
+    drain_stream(requests, checkpoint_dir, write_batch, timeout_s=timeout_s)
 
 
 def read_takedown_audit(spark, audit_dir: str) -> DataFrame:

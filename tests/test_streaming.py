@@ -133,8 +133,7 @@ def test_sessionized_stream_matches_batch(spark, landing, tmp_path):
 
 def test_stream_to_trusted_exactly_once(spark, landing, tmp_path):
     trusted, ckpt = str(tmp_path / "trusted"), str(tmp_path / "t_ckpt")
-    q = write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
-    q.awaitTermination(300)
+    write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
 
     df = spark.read.parquet(trusted)
     assert df.count() == len(EVENTS)
@@ -142,8 +141,7 @@ def test_stream_to_trusted_exactly_once(spark, landing, tmp_path):
     assert dates == {"2024-01-01", "2024-01-02"}
 
     # Re-run with the same checkpoint and no new files: no duplicates.
-    q2 = write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
-    q2.awaitTermination(300)
+    write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
     assert spark.read.parquet(trusted).count() == len(EVENTS)
 
     # New file arriving is picked up incrementally.
@@ -152,8 +150,7 @@ def test_stream_to_trusted_exactly_once(spark, landing, tmp_path):
     (pathlib.Path(landing) / "events_c.jsonl").write_text(
         json.dumps(_event(6, "2024-01-02 01:00:00", 4, "view", 3.0)) + "\n"
     )
-    q3 = write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
-    q3.awaitTermination(300)
+    write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
     assert spark.read.parquet(trusted).count() == len(EVENTS) + 1
 
     # Simulate a crash between sink write and checkpoint commit: drop
@@ -167,8 +164,7 @@ def test_stream_to_trusted_exactly_once(spark, landing, tmp_path):
     crc = commits[-1].with_name(f".{commits[-1].name}.crc")  # checksum-FS sidecar
     if crc.exists():
         crc.unlink()
-    q4 = write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
-    q4.awaitTermination(300)
+    write_stream_to_trusted(read_events_stream(spark, landing), trusted, ckpt)
     assert spark.read.parquet(trusted).count() == len(EVENTS) + 1
 
 
@@ -1177,6 +1173,7 @@ def test_dedup_stream_state_contract(spark, tmp_path):
     checkpoint unresumable. Pin all seven on the analyzed plan (no
     stream started), and pin that invalid option combinations fail
     before anything runs."""
+    from streampro_assignment_etl_spark.streaming._drain import drain_confs
     from streampro_assignment_etl_spark.streaming.stateful_dedup import dedup_stream
 
     active_before = {q.id for q in spark.streams.active}
@@ -1208,12 +1205,16 @@ def test_dedup_stream_state_contract(spark, tmp_path):
         ),
     }
     for options, (key, state_type, timeout) in expected.items():
-        node = dedup_stream(stream, **dict(options))._jdf.queryExecution().analyzed()
+        deduped = dedup_stream(stream, **dict(options))
+        node = deduped._jdf.queryExecution().analyzed()
         assert node.nodeName() == "FlatMapGroupsInPandasWithState", options
         keys = node.groupingAttributes()
         assert [keys.apply(i).name() for i in range(keys.size())] == [key], options
         assert node.stateType().simpleString() == state_type, options
         assert node.timeout().toString() == timeout, options
+        # the runner drains until idle exactly when a timeout is set
+        with drain_confs(deduped, "update") as until_idle:
+            assert until_idle == (timeout != "NoTimeout"), options
 
     for options in (
         {"ttl_seconds": 60, "n_shards": 8},
@@ -1428,16 +1429,62 @@ def test_drain_confs_restores_prior_values(spark, tmp_path):
         assert spark.conf.get(NO_DATA_BATCHES, None) is None
 
 
-def test_drain_timeout_raises_and_stops_query(spark, landing, tmp_path):
+def test_streams_read_and_start_only_in_drain_seam():
+    """Every stream the package runs is read, started and drained through
+    streaming/_drain.py, so no sink can skip drain_confs or the drain
+    timeout: no other module touches ``writeStream``, ``readStream`` or
+    ``.trigger`` (docstrings and comments don't count)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent / "streampro_assignment_etl_spark"
+    names = {"writeStream", "readStream", "trigger"}
+
+    def uses(path):
+        return [
+            (node.lineno, node.attr)
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Attribute) and node.attr in names
+        ]
+
+    seam = root / "streaming" / "_drain.py"
+    outside = {
+        str(p.relative_to(root)): hits
+        for p in sorted(root.rglob("*.py"))
+        if p != seam and (hits := uses(p))
+    }
+    assert outside == {}
+    assert {attr for _, attr in uses(seam)} == names
+
+
+@pytest.mark.parametrize("sink", ["update", "append"])
+def test_drain_timeout_raises_and_stops_query(
+    spark, landing, tmp_path, monkeypatch, sink
+):
     """A drain that cannot finish within timeout_s raises TimeoutError
     instead of returning with a partial sink; the query is stopped and
-    the session confs are restored before the error propagates."""
+    the session confs are restored before the error propagates. Cases:
+    run_stream_to_parquet in update mode, and the append-mode trusted
+    sink, whose fixed 300 s drain timeout is shortened here."""
+    from functools import partial
+
+    from streampro_assignment_etl_spark.streaming import _drain, events_stream
     from streampro_assignment_etl_spark.streaming._drain import NO_DATA_BATCHES
 
-    stream = windowed_event_counts(read_events_stream(spark, landing))
+    stream = read_events_stream(spark, landing)
     out, ckpt = str(tmp_path / "to_out"), str(tmp_path / "to_ckpt")
     with pytest.raises(TimeoutError):
-        run_stream_to_parquet(stream, out, ckpt, mode="update", timeout_s=0.001)
+        if sink == "update":
+            run_stream_to_parquet(
+                windowed_event_counts(stream), out, ckpt, mode="update", timeout_s=0.001
+            )
+        else:
+            monkeypatch.setattr(
+                events_stream,
+                "drain_stream",
+                partial(_drain.drain_stream, timeout_s=0.001),
+            )
+            write_stream_to_trusted(stream, out, ckpt)
     assert spark.streams.active == []
     assert spark.conf.get(NO_DATA_BATCHES, None) is None
 
