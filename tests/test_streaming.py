@@ -1457,34 +1457,38 @@ def test_streams_read_and_start_only_in_drain_seam():
     assert {attr for _, attr in uses(seam)} == names
 
 
-@pytest.mark.parametrize("sink", ["update", "append"])
-def test_drain_timeout_raises_and_stops_query(
-    spark, landing, tmp_path, monkeypatch, sink
-):
+def test_drain_timeout_raises_and_stops_query(spark, landing, tmp_path):
     """A drain that cannot finish within timeout_s raises TimeoutError
     instead of returning with a partial sink; the query is stopped and
-    the session confs are restored before the error propagates. Cases:
-    run_stream_to_parquet in update mode, and the append-mode trusted
-    sink, whose fixed 300 s drain timeout is shortened here."""
+    the session confs are restored before the error propagates."""
+    from streampro_assignment_etl_spark.streaming._drain import NO_DATA_BATCHES
+
+    stream = windowed_event_counts(read_events_stream(spark, landing))
+    out, ckpt = str(tmp_path / "to_out"), str(tmp_path / "to_ckpt")
+    with pytest.raises(TimeoutError):
+        run_stream_to_parquet(stream, out, ckpt, mode="update", timeout_s=0.001)
+    assert spark.streams.active == []
+    assert spark.conf.get(NO_DATA_BATCHES, None) is None
+
+
+def test_trusted_sink_drain_timeout_raises_and_stops_query(
+    spark, landing, tmp_path, monkeypatch
+):
+    """The append-mode trusted sink drains through the same runner: with
+    its fixed 300 s drain timeout shortened, write_stream_to_trusted
+    raises TimeoutError, stops the query and restores the session confs."""
     from functools import partial
 
     from streampro_assignment_etl_spark.streaming import _drain, events_stream
     from streampro_assignment_etl_spark.streaming._drain import NO_DATA_BATCHES
 
+    monkeypatch.setattr(
+        events_stream, "drain_stream", partial(_drain.drain_stream, timeout_s=0.001)
+    )
     stream = read_events_stream(spark, landing)
     out, ckpt = str(tmp_path / "to_out"), str(tmp_path / "to_ckpt")
     with pytest.raises(TimeoutError):
-        if sink == "update":
-            run_stream_to_parquet(
-                windowed_event_counts(stream), out, ckpt, mode="update", timeout_s=0.001
-            )
-        else:
-            monkeypatch.setattr(
-                events_stream,
-                "drain_stream",
-                partial(_drain.drain_stream, timeout_s=0.001),
-            )
-            write_stream_to_trusted(stream, out, ckpt)
+        write_stream_to_trusted(stream, out, ckpt)
     assert spark.streams.active == []
     assert spark.conf.get(NO_DATA_BATCHES, None) is None
 
